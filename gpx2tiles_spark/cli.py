@@ -6,7 +6,8 @@ arguments against this engine.
 Same optstring (``0z:Z:C:j:vT:Id:L:Hht:S:p:P:c:``), same semantics:
 
   -C <dir>    tile output directory (default .)
-  -I          delete zoom directories under -C before rendering (:770-801)
+  -I          delete zoom directories under -C before rendering (:770-801);
+              without it new tracks draw over the tiles already there
   -z/-Z       zoom range (defaults 1..18; -Z > 19 rejected like :983-987)
   -L/-P       no-lines / no-waypoints zoom gates
   -H          heatmap mode (z_no_lines = INT_MAX, :976)
@@ -144,6 +145,20 @@ def parse_args(argv: list[str]) -> tuple[EngineConfig, dict, list[str]]:
     return EngineConfig(**cfg_kw), run, list(files)
 
 
+def existing_tiles(spark, out_dir: str, cfg: EngineConfig):
+    """The tiles already under ``{out_dir}/{z}`` for the zooms being
+    rendered, as the render's store — the reference draws new tracks over
+    the PNG it finds (open_tile, gpx2tiles.c:277-310).  None, without a
+    Spark job, when no such zoom directory exists (after -I, or into an
+    empty directory)."""
+    zooms = [z for z in cfg.zooms()
+             if os.path.isdir(os.path.join(out_dir, str(z)))]
+    if not zooms:
+        return None
+    from .sources.tilestore import read_tile_pyramid
+    return read_tile_pyramid(spark, out_dir, zooms)
+
+
 def usage_exit() -> int:
     usage("gpx2tiles_spark")
     return 1
@@ -182,16 +197,20 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                          max(cfg.zoom_max, cfg.zoom_min))
         docs = read_gpx_file_list(spark, files)
         from .plans.pipeline import render_pyramid
-        res = render_pyramid(docs, cfg, out_dir=run["out_dir"])
-        if run["verbose"]:
-            from pyspark.sql import functions as F
-            stats = (res.tiles.groupBy("z")
-                     .agg(F.count("*").alias("tiles"),
-                          F.sum("point_cnt").alias("points"))
-                     .orderBy("z").collect())
-            for r in stats:  # the reference's per-zoom progress lines
-                sys.stderr.write(
-                    f"zoom {r.z} tiles {r.tiles} points {r.points}\n")
+        res = render_pyramid(docs, cfg, out_dir=run["out_dir"],
+                             store=existing_tiles(spark, run["out_dir"], cfg))
+        try:
+            if run["verbose"]:
+                from pyspark.sql import functions as F
+                stats = (res.tiles.groupBy("z")
+                         .agg(F.count("*").alias("tiles"),
+                              F.sum("point_cnt").alias("points"))
+                         .orderBy("z").collect())
+                for r in stats:  # the reference's per-zoom progress lines
+                    sys.stderr.write(
+                        f"zoom {r.z} tiles {r.tiles} points {r.points}\n")
+        finally:
+            res.release()
         return 0
     finally:
         if own_session:

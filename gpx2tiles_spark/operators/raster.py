@@ -1,14 +1,16 @@
 """Per-tile rasterization: sorted event fold → 256×256 RGBA → PNG bytes.
 
 A4, the "render aggregate" (SURVEY.md §2.4): an order-sensitive fold of
-draw events into a canvas, executed as a grouped-map pandas UDF over
-``groupBy(z, tx, ty)`` — one shuffle keyed by tile, then each tile is
+draw events into a canvas after one shuffle keyed by tile — each tile is
 rendered exactly once (the reference's open/evict/reload dance,
-gpx2tiles.c:277-381, disappears).
+gpx2tiles.c:277-381, disappears).  The fold slices contiguous tile runs
+out of each sorted Arrow batch (:func:`partition_folder`), so there is
+no pandas call per tile.
 
-Incremental mode (S5/J3) uses ``cogroup``: the new events of a tile meet
-the tile's existing PNG from the store without duplicating the blob onto
-every event row.
+Incremental mode (S5/J3) sends the store's rows through the SAME tile
+shuffle as the new events: within a tile the base rows sort first
+(newest snapshot first) and the fold draws the events over the newest
+base — a tile the batch does not touch is never decoded or re-emitted.
 
 Heatmap mode is a faithful sequential fold (intensify reads canvas
 state — gpx2tiles.c:627-636); speed mode batches consecutive stamp runs
@@ -30,6 +32,11 @@ from ..colors import intensify
 from ..config import HEATMAP_BASE_COLOR, PDOP_ALPHA, EngineConfig
 from ..pngcodec import blank_tile, decode_png, encode_png
 from .events import ET_CIRCLE, ET_LINE, ET_PDOP, ET_STAMP, ET_TEXT
+
+_TILE_KEY = ["z", "tx", "ty"]
+# the store column that orders a tile's rows from several snapshots:
+# the highest id is the tile's current base
+SNAPSHOT_COL = "snapshot_id"
 
 TILES_SCHEMA = T.StructType([
     T.StructField("z", T.IntegerType(), False),
@@ -257,78 +264,83 @@ def _canvas_read_z(cfg: EngineConfig) -> int:
 
 def rasterize(events: DataFrame, cfg: EngineConfig,
               store: DataFrame | None = None) -> DataFrame:
-    """events (+ optional existing tile store (z,tx,ty,png)) → tiles.
+    """events (+ optional existing tile store) → tiles.
 
-    Both fresh and incremental renders split at :func:`_canvas_read_z`:
+    ``store`` holds (z, tx, ty, png) and optionally ``point_cnt`` (added
+    to the new stamps) and :data:`SNAPSHOT_COL` (several rows of a tile
+    → the highest snapshot id is the base; without it the store is one
+    snapshot).  With a store only the tiles the events touch come out.
 
-    - below it (where urban-corridor skew lives — low zoom = few huge
-      tiles) draws never read the canvas, so the render is the skew-safe
-      partition-sliced fold (salted two-phase for hot tiles when
-      ``cfg.salt_buckets > 0``) in speed mode, or the relational
-      per-pixel hit-count aggregate in heatmap mode; with a store, the
-      batch result then overlay-merges onto the base tile (one join row
-      per touched tile — byte-exact because every op is an opaque
-      write, and no single task ever folds a whole hot tile);
-    - at or above it (tiles are geometrically small) the sequential
-      canvas-reading fold runs per tile, over the store base when given.
+    Routes, by config:
+
+    - default (speed mode, ``salt_buckets == 0``), and every ``-d1``
+      shadow / heatmap ``-d4`` text render: one shuffle keyed by tile and
+      the partition-sliced fold (:func:`_rasterize_partitions`) — with a
+      store, its rows ride the same shuffle and the fold draws over the
+      newest base;
+    - heatmap mode splits at :func:`_canvas_read_z`: below it the
+      relational per-pixel hit-count aggregate (fresh:
+      :func:`_rasterize_heatmap_counts`; over a store:
+      :func:`_heatmap_counts_incremental`), at or above it the fold;
+    - ``salt_buckets > 0`` (speed mode): below the split the salted
+      two-phase render for hot tiles (:func:`rasterize_salted`), laid over
+      the store by :func:`_overlay_on_store`; at or above it the fold.
     """
     # -d1 shadows alpha-blend an ellipse on EVERY point (reads canvas at
     # every zoom) and -d4 text breaks the heatmap pure-stamp premise —
-    # diagnostics force the sequential fold paths (the reference itself
-    # is single-threaded; diagnostics are not the 100 TB path)
+    # diagnostics force the sequential fold (the reference itself is
+    # single-threaded; diagnostics are not the 100 TB path)
     diag_sequential = cfg.diag_shadows or (cfg.heatmap and cfg.diag_speed_text)
-    if store is None:
-        if diag_sequential:
-            return _rasterize_partitions(events, cfg)
-        if cfg.heatmap:
-            pure_z = _canvas_read_z(cfg)
-            low = events.filter(F.col("z") < F.lit(pure_z))
-            high = events.filter(F.col("z") >= F.lit(pure_z))
-            return _rasterize_heatmap_counts(low, cfg).unionByName(
-                _rasterize_partitions(high, cfg))
-        if cfg.salt_buckets > 0:
-            return rasterize_salted(events, cfg)
-        return _rasterize_partitions(events, cfg)
-
-    if diag_sequential:
-        return _rasterize_cogroup(events, cfg, store)
     split = _canvas_read_z(cfg)
     zooms = cfg.zooms()
+    # the low-zoom routes exist only for heatmap and salted renders; and
     # static branch pruning: don't put an (empty-by-construction) branch
     # into the plan when the configured zoom range sits entirely on one
     # side of the canvas-reading split
-    if max(zooms) < split:
-        return _incremental_low(events, cfg, store)
-    if min(zooms) >= split:
-        return _rasterize_cogroup(events, cfg, store)
+    if (diag_sequential or min(zooms) >= split
+            or not (cfg.heatmap or cfg.salt_buckets > 0)):
+        return _rasterize_partitions(events, cfg, store)
     zcol = F.col("z")
-    high = _rasterize_cogroup(events.filter(zcol >= F.lit(split)), cfg,
-                              store.filter(zcol >= F.lit(split)))
-    low = _incremental_low(events.filter(zcol < F.lit(split)), cfg,
-                           store.filter(zcol < F.lit(split)))
-    return low.unionByName(high)
-
-
-def _incremental_low(events: DataFrame, cfg: EngineConfig,
-                     store: DataFrame) -> DataFrame:
-    """Skew-safe incremental render for the opaque-draw zoom zone."""
-    if cfg.heatmap:
-        return _heatmap_counts_incremental(events, cfg, store)
-    if cfg.salt_buckets > 0:
-        fresh = rasterize_salted(events, cfg)
+    low_ev, high_ev = events, None
+    low_store = high_store = store
+    if max(zooms) >= split:
+        low_ev = events.filter(zcol < F.lit(split))
+        high_ev = events.filter(zcol >= F.lit(split))
+        if store is not None:
+            low_store = store.filter(zcol < F.lit(split))
+            high_store = store.filter(zcol >= F.lit(split))
+    if store is None:
+        low = (_rasterize_heatmap_counts(low_ev, cfg) if cfg.heatmap
+               else rasterize_salted(low_ev, cfg))
     else:
-        fresh = _rasterize_partitions(events, cfg)
-    return _overlay_on_store(fresh, store)
+        base = latest_tiles(low_store)
+        low = (_heatmap_counts_incremental(low_ev, cfg, base) if cfg.heatmap
+               else _overlay_on_store(rasterize_salted(low_ev, cfg), base))
+    if high_ev is None:
+        return low
+    return low.unionByName(_rasterize_partitions(high_ev, cfg, high_store))
+
+
+def latest_tiles(store: DataFrame) -> DataFrame:
+    """Per tile, the row of the newest snapshot (:data:`SNAPSHOT_COL`) —
+    the merge-on-read aggregate (one hash aggregate keyed (z,tx,ty) with
+    ``max_by`` on the snapshot id).  A store without the column is one
+    snapshot and passes through."""
+    if SNAPSHOT_COL not in store.columns:
+        return store
+    vals = [c for c in store.columns if c not in _TILE_KEY + [SNAPSHOT_COL]]
+    merged = store.groupBy(*_TILE_KEY).agg(
+        F.max_by(F.struct(*vals), F.col(SNAPSHOT_COL)).alias("_t"))
+    return merged.select(*_TILE_KEY,
+                         *[F.col(f"_t.{c}").alias(c) for c in vals])
 
 
 def _rasterize_cogroup(events: DataFrame, cfg: EngineConfig,
                        store: DataFrame) -> DataFrame:
-    """Per-tile sequential fold over the store base (the only correct
-    shape once draws read canvas state).  Used for z >= _canvas_read_z,
-    where a tile covers a tiny geographic cell — per-tile event counts
-    are geometry-bounded, so the one-task-per-tile group is safe there.
-    (Kept callable on any zoom range as the reference implementation the
-    skew-safe paths are byte-compared against in tests.)"""
+    """Per-tile sequential fold over the store base as a pandas cogroup
+    (one pandas call per store tile).  No route of :func:`rasterize`
+    takes it: it is the plain reference the incremental routes are
+    byte-compared against in tests, on any zoom range."""
 
     def fold_cogroup(ev: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
         if not len(ev):
@@ -352,6 +364,10 @@ def _rasterize_cogroup(events: DataFrame, cfg: EngineConfig,
     )
 
 
+# Only the salted hot-tile route (salt_buckets > 0) still lays a fresh
+# render over the store: its partial canvases are merged per tile before
+# the base is known.  Every other store render folds over the base in
+# the tile shuffle (_rasterize_partitions).
 def _overlay_on_store(fresh: DataFrame, store: DataFrame) -> DataFrame:
     """Overlay freshly-rendered batch tiles onto their store base: one
     equi-join row per TOUCHED tile (store-only tiles stay in the store's
@@ -587,45 +603,93 @@ def _fold_partitions(df: DataFrame, cfg: EngineConfig | None = None) -> int:
     return conf_n
 
 
-def prepared_events(events: DataFrame,
-                    cfg: EngineConfig | None = None) -> DataFrame:
+_FOLD_COLS = ("z", "tx", "ty", "etype", "x1", "y1", "x2", "y2", "color",
+              "doc_key")
+# extra columns when the store rides the shuffle: _src 0 = base row,
+# 1 = event; base_pc / png are the base row's (0 / null on event rows)
+_BASE_COLS = ("_src", "base_pc", "png")
+_EVENT_ORDER = ["doc_id", "seg_order", "pt_idx", "etype"]
+
+
+def _with_base_rows(events: DataFrame, store: DataFrame) -> DataFrame:
+    """events ∪ store rows in one relation.  The event-only columns of a
+    base row are 0 (not null) so the Arrow→numpy columns stay integer."""
+    pc = (F.coalesce(F.col("point_cnt"), F.lit(0))
+          if "point_cnt" in store.columns else F.lit(0))
+    snap = F.col(SNAPSHOT_COL) if SNAPSHOT_COL in store.columns else F.lit(0)
+    zero = F.lit(0)
+    base = store.select(
+        "z", "tx", "ty", F.lit(0).alias("_src"),
+        snap.cast("long").alias("_snap"),
+        F.lit(None).cast("string").alias("doc_id"),
+        *[zero.alias(c) for c in ("seg_order", "pt_idx", "etype", "x1",
+                                  "y1", "x2", "y2", "color")],
+        pc.cast("long").alias("base_pc"), "png")
+    ev = events.select(
+        "z", "tx", "ty", F.lit(1).alias("_src"),
+        F.lit(0).cast("long").alias("_snap"), "doc_id", "seg_order",
+        "pt_idx", "etype", "x1", "y1", "x2", "y2", "color",
+        F.lit(0).cast("long").alias("base_pc"),
+        F.lit(None).cast("binary").alias("png"))
+    return ev.unionByName(base)
+
+
+def prepared_events(events: DataFrame, cfg: EngineConfig | None = None,
+                    store: DataFrame | None = None) -> DataFrame:
     """The rasterizer's physical input: one shuffle keyed (z,tx,ty) +
     in-partition painter sort + string-free projection.
 
     The JVM sort fixes the painter order; python only needs numeric
     columns — the doc_id string is replaced by a hash AFTER the sort
     (projection preserves row order) so the Arrow→pandas payload is
-    string-free (5-10× cheaper conversion at millions of events)."""
+    string-free (5-10× cheaper conversion at millions of events).
+
+    With a ``store`` its rows join the same shuffle: within a tile the
+    base rows come first, newest snapshot first, then the events in
+    painter order."""
+    order: list = ["z", "tx", "ty"]
+    cols = [c for c in _FOLD_COLS if c != "doc_key"]
+    rel = events
+    if store is not None:
+        rel = _with_base_rows(events, store)
+        order += ["_src", F.col("_snap").desc()]
+        cols += _BASE_COLS
     return (
-        events.repartition(_fold_partitions(events, cfg), "z", "tx", "ty")
-        .sortWithinPartitions("z", "tx", "ty", "doc_id", "seg_order",
-                              "pt_idx", "etype")
-        .select("z", "tx", "ty", "etype", "x1", "y1", "x2", "y2", "color",
-                F.xxhash64("doc_id").alias("doc_key"))
+        rel.repartition(_fold_partitions(events, cfg), "z", "tx", "ty")
+        .sortWithinPartitions(*order, *_EVENT_ORDER)
+        .select(*cols, F.xxhash64("doc_id").alias("doc_key"))
     )
 
 
-def partition_folder(cfg: EngineConfig):
+def partition_folder(cfg: EngineConfig, with_base: bool = False):
     """mapInPandas generator over :func:`prepared_events` output: slices
     contiguous tile groups out of each Arrow batch (one tile = one numpy
     slice, not one pandas DataFrame + one UDF invocation), carrying the
-    trailing partial group into the next batch."""
-    _COLS = ("z", "tx", "ty", "etype", "x1", "y1", "x2", "y2", "color",
-             "doc_key")
+    trailing partial group into the next batch.
+
+    ``with_base``: the input carries store rows (``prepared_events(...,
+    store=...)``).  A tile with no events is skipped without a decode
+    (it stays in the store); otherwise the events fold over the tile's
+    first — newest — base and its ``point_cnt`` adds on."""
+    _COLS = _FOLD_COLS + (_BASE_COLS if with_base else ())
+
+    def finish(cols: dict, s: int, e: int) -> dict:
+        base, base_pc = None, 0
+        if with_base and cols["_src"][s] == 0:
+            base = decode_png(bytes(cols["png"][s]))
+            base_pc = int(cols["base_pc"][s])
+            s += int(np.searchsorted(cols["_src"][s:e], 1))
+        canvas, point_cnt = _fold_arrays(cols, s, e, cfg, base)
+        return {
+            "z": int(cols["z"][s]), "tx": int(cols["tx"][s]),
+            "ty": int(cols["ty"][s]), "point_cnt": base_pc + point_cnt,
+            "n_events": e - s,
+            "n_docs": len(np.unique(cols["doc_key"][s:e])),
+            "png": encode_png(canvas),
+        }
 
     def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: dict | None = None
-
-        def finish(cols: dict, s: int, e: int) -> dict:
-            canvas, point_cnt = _fold_arrays(cols, s, e, cfg, None)
-            return {
-                "z": int(cols["z"][s]), "tx": int(cols["tx"][s]),
-                "ty": int(cols["ty"][s]), "point_cnt": point_cnt,
-                "n_events": e - s,
-                "n_docs": len(np.unique(cols["doc_key"][s:e])),
-                "png": encode_png(canvas),
-            }
-
         for pdf in batches:
             cols = {c: pdf[c].to_numpy() for c in _COLS}
             if carry is not None:
@@ -641,23 +705,31 @@ def partition_folder(cfg: EngineConfig):
             change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
             starts = np.concatenate(([0], change))
             ends = np.concatenate((change, [m]))
-            out = [finish(cols, s, e)
-                   for s, e in zip(starts[:-1], ends[:-1])]
-            carry = {c: cols[c][starts[-1]:ends[-1]].copy() for c in _COLS}
+            carry = {c: cols[c][starts[-1]:].copy() for c in _COLS}
+            starts, ends = starts[:-1], ends[:-1]
+            if with_base:
+                # base rows sort first: a run whose last row is a base
+                # row has no events
+                keep = cols["_src"][ends - 1] != 0
+                starts, ends = starts[keep], ends[keep]
+            out = [finish(cols, s, e) for s, e in zip(starts, ends)]
             if out:
                 yield pd.DataFrame(out)
-        if carry is not None and len(carry["z"]):
+        if carry is not None and len(carry["z"]) and (
+                not with_base or carry["_src"][-1] != 0):
             yield pd.DataFrame([finish(carry, 0, len(carry["z"]))])
 
     return fold_partition
 
 
-def _rasterize_partitions(events: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Fast path: shuffle + painter sort (prepared_events) → partition-
-    sliced fold (partition_folder).  Same result as
-    groupBy().applyInPandas without the per-group pandas overhead."""
-    return prepared_events(events, cfg).mapInPandas(partition_folder(cfg),
-                                                    TILES_SCHEMA)
+def _rasterize_partitions(events: DataFrame, cfg: EngineConfig,
+                          store: DataFrame | None = None) -> DataFrame:
+    """Shuffle + painter sort (prepared_events) → partition-sliced fold
+    (partition_folder), over the store's newest base per tile when one
+    is given.  Same result as a per-tile groupBy().applyInPandas /
+    cogroup without the per-group pandas overhead."""
+    return prepared_events(events, cfg, store).mapInPandas(
+        partition_folder(cfg, with_base=store is not None), TILES_SCHEMA)
 
 
 PIXELS_SCHEMA = T.StructType([

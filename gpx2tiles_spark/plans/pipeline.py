@@ -31,11 +31,17 @@ class RenderResult:
     tiles: DataFrame  # (z, tx, ty, point_cnt, n_events, n_docs, png)
     points: DataFrame | None = None  # persisted parse output; unpersist()
     # via release() once tiles are materialized (tiles reads it lazily)
+    tiles_cached: bool = False  # tiles persisted by render_pyramid(out_dir=…)
 
     def release(self) -> None:
+        """Drop the caches the render made — call once the caller is done
+        reading ``tiles``."""
         if self.points is not None:
             self.points.unpersist()
             self.points = None
+        if self.tiles_cached:
+            self.tiles.unpersist()
+            self.tiles_cached = False
 
 
 def render_pyramid(documents: DataFrame, cfg: EngineConfig | None = None,
@@ -43,23 +49,23 @@ def render_pyramid(documents: DataFrame, cfg: EngineConfig | None = None,
                    store: DataFrame | None = None) -> RenderResult:
     cfg = cfg or EngineConfig()
     # ALWAYS persist the pre-explode points: the event relation is a
-    # 7-branch union (stamps / lines ×2 / circles / PDOP ×2 / wpt stamps)
-    # and Catalyst prunes the shared Window out of the branches that
-    # don't read lag columns — without a cache each branch re-runs the
-    # expensive parse from the scan (observed 7× parse in the physical
-    # plan, docs/PLANS.md).  points is the natural multi-consumer
-    # materialization point at any scale.
+    # union of branches (the fused stamp/line/PDOP explode, cross-tile
+    # lines, waypoint stamps/circles/PDOP, -d4 text) and Catalyst prunes
+    # the shared Window out of the branches that don't read lag columns
+    # — without a cache each branch re-runs the expensive parse from the
+    # scan (observed 7× parse in the physical plan, docs/PLANS.md).
+    # points is the natural multi-consumer materialization point at any
+    # scale.
     points = parse_documents(documents).persist()
     events = build_events(points, cfg)
-    # rasterize() self-routes: salted two-phase for hot tiles (fresh OR
-    # incremental low zones), relational heatmap counts, per-tile
-    # cogroup only at canvas-reading zooms
+    # rasterize() self-routes (see its docstring): the partition-sliced
+    # fold, over the store's newest base per tile when a store is given
     tiles = rasterize(events, cfg, store=store)
     if out_dir is not None:
         tiles.persist()
         write_tile_pyramid(tiles, out_dir)  # materializes tiles …
         points.unpersist()  # … so the parse cache can be dropped now
-        return RenderResult(tiles=tiles)
+        return RenderResult(tiles=tiles, tiles_cached=True)
     return RenderResult(tiles=tiles, points=points)
 
 

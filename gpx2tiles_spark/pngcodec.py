@@ -66,34 +66,10 @@ def decode_png(data: bytes) -> np.ndarray:
     stride = w * nch
     raw = raw.reshape(h, 1 + stride)
     filters = raw[:, 0]
-    out = np.zeros((h, stride), dtype=np.uint8)
-    bpp = nch
-    for y in range(h):
-        line = raw[y, 1:].astype(np.int32)
-        ft = filters[y]
-        prev = out[y - 1].astype(np.int32) if y > 0 else np.zeros(stride, np.int32)
-        if ft == 0:
-            rec = line
-        elif ft == 2:  # Up
-            rec = (line + prev) & 0xFF
-        elif ft in (1, 3, 4):  # Sub / Average / Paeth need a sequential pass
-            rec = np.zeros(stride, np.int32)
-            for x in range(stride):
-                a = rec[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                cc = prev[x - bpp] if x >= bpp else 0
-                if ft == 1:
-                    rec[x] = (line[x] + a) & 0xFF
-                elif ft == 3:
-                    rec[x] = (line[x] + ((a + b) >> 1)) & 0xFF
-                else:
-                    p = a + b - cc
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                    rec[x] = (line[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"bad filter {ft}")
-        out[y] = rec.astype(np.uint8)
+    if not filters.any():  # all rows unfiltered: the engine's own output
+        out = raw[:, 1:].copy()
+    else:
+        out = _unfilter(raw[:, 1:], filters, w, nch)
     px = out.reshape(h, w, nch)
     if nch == 4:
         return px
@@ -108,6 +84,44 @@ def decode_png(data: bytes) -> np.ndarray:
         rgba[..., 0] = rgba[..., 1] = rgba[..., 2] = px[..., 0]
         rgba[..., 3] = 255
     return rgba
+
+
+def _unfilter(lines: np.ndarray, filters: np.ndarray, w: int,
+              bpp: int) -> np.ndarray:
+    """Undo the per-row scanline filters (PNG spec §9).  None, Sub and Up
+    rows are whole-row numpy ops — Sub is a running sum over each byte's
+    pixel predecessors mod 256; Average and Paeth read the row's own
+    reconstructed bytes, so they keep a sequential pass."""
+    h, stride = lines.shape
+    out = np.zeros((h, stride), dtype=np.uint8)
+    zero = np.zeros(stride, np.int32)
+    for y in range(h):
+        line = lines[y].astype(np.int32)
+        ft = filters[y]
+        prev = out[y - 1].astype(np.int32) if y > 0 else zero
+        if ft == 0:
+            rec = line
+        elif ft == 1:  # Sub
+            rec = np.cumsum(line.reshape(w, bpp), axis=0).reshape(-1)
+        elif ft == 2:  # Up
+            rec = line + prev
+        elif ft in (3, 4):  # Average / Paeth need a sequential pass
+            rec = np.zeros(stride, np.int32)
+            for x in range(stride):
+                a = rec[x - bpp] if x >= bpp else 0
+                b = prev[x]
+                cc = prev[x - bpp] if x >= bpp else 0
+                if ft == 3:
+                    rec[x] = (line[x] + ((a + b) >> 1)) & 0xFF
+                else:
+                    p = a + b - cc
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
+                    rec[x] = (line[x] + pred) & 0xFF
+        else:
+            raise ValueError(f"bad filter {ft}")
+        out[y] = rec & 0xFF
+    return out
 
 
 def blank_tile(h: int = 256, w: int = 256) -> np.ndarray:

@@ -15,7 +15,10 @@ def get_spark(app: str = "gpx2tiles_spark", master: str | None = None,
     - shuffle partitions ~ cores (not the 200 default),
     - Arrow enabled for all pandas-UDF exchange,
     - session timezone pinned UTC (reference K6 quirk documented in
-      SURVEY.md §2.8; oracle comparisons need UTC).
+      SURVEY.md §2.8; oracle comparisons need UTC),
+    - no Python call-site capture per Column function, and generated
+      classes reused across plans (plan building and codegen of a small
+      store batch otherwise cost more than running it).
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cores = os.cpu_count() or 8
@@ -36,6 +39,14 @@ def get_spark(app: str = "gpx2tiles_spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # PySpark otherwise records the Python call site of every Column
+        # function in the JVM (about five py4j round trips per call, for
+        # error messages): building the event plan took ~12k round trips
+        # and several CPU-seconds per store batch, more than running it
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # generated classes named without the codegen stage id: the same
+        # operator subtree compiles once, wherever it sits in a plan
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # OPT-IN shuffle spill on tmpfs (SPARK_GRAFT_TMPFS=1): the sandbox's
     # single virtual disk serializes concurrent shuffle writers (a real

@@ -18,13 +18,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_tile_pyramid(spark: SparkSession, root: str) -> DataFrame:
-    """Load an existing ``{root}/{z}/{x}/{y}.png`` tree as a DataFrame."""
+def read_tile_pyramid(spark: SparkSession, root: str,
+                      zooms: list[int] | None = None) -> DataFrame:
+    """Load an existing ``{root}/{z}/{x}/{y}.png`` tree as a DataFrame;
+    with ``zooms``, only those ``{root}/{z}`` subtrees (each must exist)."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .option("recursiveFileLookup", "true")
-        .load(root)
+        .load(root if zooms is None
+              else [os.path.join(root, str(z)) for z in zooms])
     )
     path = F.col("path")
     return df.select(

@@ -8,12 +8,24 @@ merge-on-read **TileStore**:
 - each batch writes a DELTA snapshot containing ONLY the tiles it
   touched (per-batch write volume ∝ touched tiles, never O(store) — the
   round-1 copy-on-write full-store rewrite is gone);
-- ``current()`` is the manifest-ordered latest-wins union of the live
-  snapshots (one hash aggregate keyed (z,tx,ty) with ``max_by`` on the
-  snapshot id — the Iceberg MERGE read shape);
+- the write path does not merge: ``apply_batch`` hands the live
+  snapshots' rows, each tagged with its snapshot id, to ``rasterize``,
+  whose one tile shuffle puts a tile's base rows (newest first) ahead of
+  its new events; the fold draws over the newest base and skips the
+  tiles the batch does not touch;
+- readers merge: ``current()`` / ``as_of()`` / ``diff()`` see the
+  manifest-ordered latest-wins union of the live snapshots (one hash
+  aggregate keyed (z,tx,ty) with ``max_by`` on the snapshot id — the
+  Iceberg MERGE read shape);
 - ``compact()`` folds the live snapshots into one and marks it in the
   manifest, bounding read amplification; ``apply_batch`` auto-compacts
   every ``compact_every`` deltas.
+
+Snapshots are read with the known tile schema, so a read starts no
+footer-inference job, as one scan whatever their number (the snapshot
+id comes from the file's directory), so every batch runs the same plan
+and reuses its generated code; a commit takes its per-zoom manifest stats
+from an ``Observation`` on the snapshot write — no re-read.
 
 Resume = skip batch keys already in the manifest — re-running a killed
 job is idempotent.  No Iceberg jar is guaranteed in this environment, so
@@ -32,15 +44,18 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import EngineConfig
+from ..config import ZOOM_MAX_HARD, EngineConfig
 from ..operators.events import build_events
 from ..operators.parse import parse_documents
-from ..operators.raster import TILES_SCHEMA, rasterize
+from ..operators.raster import (SNAPSHOT_COL, TILES_SCHEMA, latest_tiles,
+                                rasterize)
 
-_TILE_KEY = ["z", "tx", "ty"]
+# a snapshot's directory under the store root; its number is the id
+_SNAPSHOT_DIR = "snapshot-{:05d}"
+_SNAPSHOT_DIR_RE = r"/snapshot-(\d+)/[^/]*$"
 
 
 @dataclass
@@ -116,50 +131,58 @@ class TileStore:
                 .filter(F.col("delta") != 0)
                 .select(*cols, "delta"))
 
+    def _snapshots(self, live: list[dict]) -> DataFrame:
+        """The rows of the given snapshots (none: an empty scan), each
+        tagged with its id in :data:`SNAPSHOT_COL`.  Read with the known
+        tile schema (schema inference would run one footer job per
+        snapshot) as ONE scan, the id parsed from the file's snapshot
+        directory: the plan, and so the code Spark generates for it, is
+        the same however many snapshots are live (a union of scans
+        tagged with literal ids compiles new code for every snapshot)."""
+        df = self.spark.read.schema(TILES_SCHEMA).parquet(
+            *[os.path.join(self.root, s["path"]) for s in live])
+        sid = F.regexp_extract(F.col("_metadata.file_path"),
+                               _SNAPSHOT_DIR_RE, 1).cast("long")
+        return df.withColumn(SNAPSHOT_COL, sid)
+
     def _merge(self, live: list[dict]) -> DataFrame | None:
         if not live:
             return None
-        dfs = [
-            self.spark.read.parquet(os.path.join(self.root, s["path"]))
-            .withColumn("_sid", F.lit(s["id"]))
-            for s in live
-        ]
-        df = dfs[0]
-        for d in dfs[1:]:
-            df = df.unionByName(d)
-        if len(dfs) == 1:
-            return df.drop("_sid")
-        vals = [c for c in df.columns if c not in _TILE_KEY + ["_sid"]]
-        merged = df.groupBy(*_TILE_KEY).agg(
-            F.max_by(F.struct(*vals), F.col("_sid")).alias("_t"))
-        return merged.select(*_TILE_KEY,
-                             *[F.col(f"_t.{c}").alias(c) for c in vals])
+        df = self._snapshots(live)
+        if len(live) == 1:
+            return df.drop(SNAPSHOT_COL)
+        return latest_tiles(df)
 
     def _commit(self, batch_key: str, tiles: DataFrame,
                 kind: str = "delta") -> dict:
         m = self.manifest()
         sid = len(m["snapshots"])
-        rel = f"snapshot-{sid:05d}"
+        rel = _SNAPSHOT_DIR.format(sid)
         path = os.path.join(self.root, rel)
-        tiles.write.mode("overwrite").parquet(path)
-        written = self.spark.read.parquet(path)
         # per-partition (zoom) lineage + metrics — the north rule's
         # per-partition accounting, derived from the rasterizer's
-        # n_events/n_docs columns.  n_tiles = the sum of the per-zoom
-        # rows of the SAME aggregation pass — the separate count() job
-        # this used to run re-read every snapshot file for a number the
-        # stats already contain.
-        stats = [r.asDict() for r in (
-            written.groupBy("z").agg(
-                F.count("*").alias("tiles"),
-                F.sum("point_cnt").alias("points"),
-                F.sum("n_events").alias("events"),
-                F.max("n_docs").alias("max_docs_per_tile"),
-            ).orderBy("z").collect())]
+        # n_events/n_docs columns — observed on the write itself: no
+        # re-read of the snapshot, no extra job
+        aggs = []
+        for z in range(ZOOM_MAX_HARD + 1):
+            at = F.col("z") == z
+            aggs += [
+                F.count(F.when(at, 1)).alias(f"tiles_{z}"),
+                F.sum(F.when(at, F.col("point_cnt"))).alias(f"points_{z}"),
+                F.sum(F.when(at, F.col("n_events"))).alias(f"events_{z}"),
+                F.max(F.when(at, F.col("n_docs"))).alias(f"docs_{z}"),
+            ]
+        obs = Observation()
+        tiles.observe(obs, *aggs).write.mode("overwrite").parquet(path)
+        got = obs.get
+        stats = [{"z": z, "tiles": got[f"tiles_{z}"],
+                  "points": got[f"points_{z}"], "events": got[f"events_{z}"],
+                  "max_docs_per_tile": got[f"docs_{z}"]}
+                 for z in range(ZOOM_MAX_HARD + 1) if got[f"tiles_{z}"]]
         entry = {
             "id": sid, "batch_key": batch_key, "path": rel, "kind": kind,
             "committed_at": time.time(),
-            "n_tiles": sum(int(s["tiles"]) for s in stats),
+            "n_tiles": sum(s["tiles"] for s in stats),
             "partitions": stats,
         }
         m["snapshots"].append(entry)
@@ -207,14 +230,12 @@ class TileStore:
                 cfg = dataclasses.replace(cfg, fold_partitions=max(
                     1, min(conf_parts, math.ceil(est_events / 20_000))))
             events = build_events(points, cfg)
-            store = self.current()
-            if store is None:
-                updated = rasterize(events, cfg)
-            else:
-                updated = rasterize(
-                    events, cfg,
-                    store=store.select("z", "tx", "ty", "point_cnt", "png"))
-            entry = self._commit(batch_key, updated)
+            # the live snapshots go in unmerged: rasterize takes each
+            # touched tile's newest base inside its tile shuffle (the
+            # first batch draws over an empty scan: one route, one plan)
+            live = self._snapshots(self._live()).select(
+                "z", "tx", "ty", "point_cnt", "png", SNAPSHOT_COL)
+            entry = self._commit(batch_key, rasterize(events, cfg, store=live))
         finally:
             points.unpersist()
         if len(self._live()) > self.compact_every:

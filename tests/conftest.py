@@ -11,6 +11,11 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 REFERENCE_GPX = "/root/reference/test-with-network-gps-source.gpx"
+# the reference repository's own test track; tests that read it skip
+# where that checkout is absent
+needs_reference_gpx = pytest.mark.skipif(
+    not os.path.exists(REFERENCE_GPX),
+    reason=f"reference fixture {REFERENCE_GPX} is not present")
 
 
 @pytest.fixture(scope="session")

@@ -10,7 +10,7 @@ import pytest
 
 from gpx2tiles_spark.cli import main, parse_args, parse_thickness
 
-from conftest import REFERENCE_GPX
+from conftest import REFERENCE_GPX, needs_reference_gpx
 
 
 def test_thickness_parse_extends():
@@ -84,6 +84,7 @@ def test_gpx_file_source_duplicate_path_draws_twice(spark, tmp_path):
     assert ids[0].endswith("dup.gpx") and ids[1].endswith("dup.gpx")
 
 
+@needs_reference_gpx
 def test_gpx_file_source_matches_spans_table(spark):
     """Reading the reference's own test .gpx through the FILE source
     parses identically to wrapping the same text in the spans table."""
@@ -107,6 +108,7 @@ def test_gpx_file_source_matches_spans_table(spark):
     assert via_file == via_spans
 
 
+@needs_reference_gpx
 def test_cli_end_to_end(spark, tmp_path):
     out = str(tmp_path)
     rc = main(["-z", "4", "-Z", "7", "-C", out, REFERENCE_GPX], spark=spark)
@@ -181,3 +183,52 @@ def test_gpx_directory_glob_source(spark, tmp_path):
     rows = read_gpx_documents(spark, str(tmp_path)).collect()
     names = sorted(r.doc_id.rsplit("/", 1)[-1] for r in rows)
     assert names == ["one.gpx", "two.gpx"]
+
+
+def _one_point_gpx(path, lat: float, lon: float) -> str:
+    path.write_text(f'<gpx><trk><trkseg><trkpt lat="{lat}" lon="{lon}">'
+                    "<time>2016-06-25T10:00:01Z</time></trkpt></trkseg>"
+                    "</trk></gpx>")
+    return str(path)
+
+
+def _painted(out) -> int:
+    from gpx2tiles_spark.pngcodec import decode_png
+
+    return sum(int((decode_png(open(p, "rb").read())[..., 3] != 0).sum())
+               for p in glob.glob(os.path.join(str(out), "*", "*", "*.png")))
+
+
+def test_cli_draws_over_existing_tiles(spark, tmp_path):
+    """Without -I a second run draws over the tiles already under -C, as
+    the reference does: two one-point files in one z3 tile, rendered by
+    two runs into one directory, paint what one run with both paints."""
+    from gpx2tiles_spark.cli import existing_tiles
+
+    a = _one_point_gpx(tmp_path / "a.gpx", 48.0, 8.0)
+    b = _one_point_gpx(tmp_path / "b.gpx", 48.0, 9.0)
+    two, one = tmp_path / "two_runs", tmp_path / "one_run"
+    two.mkdir()
+    one.mkdir()
+    cfg = parse_args(["-z", "3", "-Z", "3", "-C", str(two), a])[0]
+    assert existing_tiles(spark, str(two), cfg) is None  # no job, no store
+    assert main(["-z", "3", "-Z", "3", "-C", str(two), a], spark=spark) == 0
+    assert main(["-z", "3", "-Z", "3", "-C", str(two), b], spark=spark) == 0
+    assert main(["-z", "3", "-Z", "3", "-C", str(one), a, b],
+                spark=spark) == 0
+    assert len(glob.glob(str(two / "3" / "*" / "*.png"))) == 1
+    assert _painted(two) == _painted(one) == 2
+
+
+def test_cli_leaves_no_cache(spark, tmp_path):
+    """A CLI render inside a caller's session releases what it cached."""
+    a = _one_point_gpx(tmp_path / "a.gpx", 48.0, 8.0)
+    out = tmp_path / "tiles"
+    out.mkdir()
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert main(["-z", "3", "-Z", "6", "-v", "-C", str(out), a],
+                spark=spark) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(jsc.getPersistentRDDs().keys()) == before

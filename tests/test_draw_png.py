@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
+import pytest
 
 from gpx2tiles_spark import draw
 from gpx2tiles_spark.colors import intensify, speed_kph_to_clridx
@@ -19,6 +23,92 @@ def test_png_deterministic():
     img = blank_tile()
     draw.draw_line(img, 0, 0, 255, 255, 0xA46100)
     assert encode_png(img) == encode_png(img.copy())
+
+
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+
+
+def _predict(ft: int, a: int, b: int, c: int) -> int:
+    return [0, a, b, (a + b) // 2, _paeth(a, b, c)][ft]
+
+
+def _filtered_png(img: np.ndarray, filters: list[int]) -> bytes:
+    """RGBA PNG whose row y is written with filter type filters[y]
+    (PNG spec §9: predictor from left a, up b, up-left c)."""
+    h, w, _ = img.shape
+    rows = img.reshape(h, w * 4).astype(int)
+    raw = bytearray()
+    for y in range(h):
+        raw.append(filters[y])
+        for x in range(w * 4):
+            a = int(rows[y, x - 4]) if x >= 4 else 0
+            b = int(rows[y - 1, x]) if y else 0
+            c = int(rows[y - 1, x - 4]) if y and x >= 4 else 0
+            raw.append((int(rows[y, x]) - _predict(filters[y], a, b, c)) & 0xFF)
+
+    def chunk(tag: bytes, data: bytes) -> bytes:
+        return (struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+
+    return (b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + chunk(b"IEND", b""))
+
+
+def _reference_decode(data: bytes) -> np.ndarray:
+    """Plain per-byte unfilter of an RGBA PNG, one pixel at a time."""
+    w, h = struct.unpack(">II", data[16:24])
+    pos, idat = 8, b""
+    while pos < len(data):
+        (n,) = struct.unpack(">I", data[pos:pos + 4])
+        if data[pos + 4:pos + 8] == b"IDAT":
+            idat += data[pos + 8:pos + 8 + n]
+        pos += 12 + n
+    raw = zlib.decompress(idat)
+    stride = w * 4
+    out = [[0] * stride for _ in range(h)]
+    for y in range(h):
+        ft = raw[y * (stride + 1)]
+        for x in range(stride):
+            a = out[y][x - 4] if x >= 4 else 0
+            b = out[y - 1][x] if y else 0
+            c = out[y - 1][x - 4] if y and x >= 4 else 0
+            out[y][x] = (raw[y * (stride + 1) + 1 + x]
+                         + _predict(ft, a, b, c)) & 0xFF
+    return np.array(out, np.uint8).reshape(h, w, 4)
+
+
+def _images() -> dict[str, np.ndarray]:
+    rng = np.random.default_rng(11)
+    sparse = np.zeros((24, 20, 4), np.uint8)
+    ys, xs = rng.integers(0, 24, 30), rng.integers(0, 20, 30)
+    sparse[ys, xs] = rng.integers(0, 256, (30, 4), dtype=np.uint8)
+    sparse[ys, xs, 3] = 255
+    return {"random": rng.integers(0, 256, (24, 20, 4), dtype=np.uint8),
+            "sparse": sparse}
+
+
+@pytest.mark.parametrize("kind", ["random", "sparse"])
+@pytest.mark.parametrize("ft", [0, 1, 2, 3, 4])
+def test_decode_each_filter_type(ft, kind):
+    img = _images()[kind]
+    data = _filtered_png(img, [ft] * img.shape[0])
+    want = _reference_decode(data)
+    assert (want == img).all()
+    assert (decode_png(data) == want).all()
+
+
+@pytest.mark.parametrize("kind", ["random", "sparse"])
+def test_decode_mixed_filter_rows(kind):
+    img = _images()[kind]
+    filters = [int(f) for f in
+               np.random.default_rng(5).integers(0, 5, img.shape[0])]
+    data = _filtered_png(img, filters)
+    assert (decode_png(data) == _reference_decode(data)).all()
 
 
 def test_speed_color_table():

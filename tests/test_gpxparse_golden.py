@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from gpx2tiles_spark import gpxparse as G
-from tests.conftest import REFERENCE_GPX
+from tests.conftest import REFERENCE_GPX, needs_reference_gpx
 
 
 @pytest.fixture(scope="module")
@@ -16,6 +16,7 @@ def parsed():
         return G.parse_gpx_document([f.read()])
 
 
+@needs_reference_gpx
 def test_counts_and_order(parsed):
     file_time, segments, wpts, cnt = parsed
     assert cnt == 25
@@ -26,6 +27,7 @@ def test_counts_and_order(parsed):
     assert len(wpts) == 1
 
 
+@needs_reference_gpx
 def test_network_speed_synthesis(parsed):
     _, segments, _, _ = parsed
     net = segments[1].points
@@ -42,6 +44,7 @@ def test_network_speed_synthesis(parsed):
     assert net[1].speed == pytest.approx(0.0, abs=1e-12)
 
 
+@needs_reference_gpx
 def test_gps_segment_parsed_fields(parsed):
     _, segments, _, _ = parsed
     gps = segments[0].points
@@ -57,6 +60,7 @@ def test_gps_segment_parsed_fields(parsed):
     assert p1.ele == pytest.approx(311.0)
 
 
+@needs_reference_gpx
 def test_waypoint(parsed):
     _, _, wpts, _ = parsed
     w = wpts[0]

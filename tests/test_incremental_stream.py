@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from gpx2tiles_spark.config import EngineConfig
 from gpx2tiles_spark.corpus import generate_documents
+from gpx2tiles_spark.operators.raster import SNAPSHOT_COL
 from gpx2tiles_spark.pngcodec import decode_png
 from gpx2tiles_spark.plans.pipeline import render_pyramid
 from gpx2tiles_spark.streaming.incremental import (TileStore, process_batches,
@@ -98,3 +99,44 @@ def test_as_of_time_travel(spark, tmp_path):
     last = store.manifest()["snapshots"][-1]["id"]
     assert _tiles_map(store.as_of(last).select(
         "z", "tx", "ty", "point_cnt", "png")) == final
+
+
+def test_apply_batch_jobs_flat_as_deltas_grow(spark, tmp_path):
+    """A batch's Spark job count must not grow with the live deltas it
+    draws over (no schema-inference job per snapshot read, no merge
+    aggregate on the write path), the live snapshots are read as one
+    scan, and the manifest's per-zoom stats —
+    observed on the snapshot write — equal a re-read of the snapshot."""
+    docs = generate_documents(spark, 10, partitions=2).cache()
+    store = TileStore(spark, str(tmp_path / "store4"), compact_every=100)
+    sc = spark.sparkContext
+    jobs = []
+    for b in range(5):
+        gid = f"store-batch-{b}"
+        batch = docs.filter((F.col("doc_id") >= f"doc{2 * b:08d}")
+                            & (F.col("doc_id") < f"doc{2 * b + 2:08d}"))
+        sc.setJobGroup(gid, gid)
+        try:
+            entry = store.apply_batch(f"b{b}", batch, CFG)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(gid)))
+    assert len(store.manifest()["snapshots"]) == 5  # never compacted
+    # batch 0 draws over an empty scan: all five batches share one plan
+    assert len(set(jobs)) == 1, jobs
+    # the batches draw over ONE scan of the live snapshots whatever their
+    # number, each row tagged with its snapshot's manifest id
+    live = store._snapshots(store._live())
+    plan = live._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [") == 1, plan
+    assert ({r[0] for r in live.select(SNAPSHOT_COL).distinct().collect()}
+            == {s["id"] for s in store.manifest()["snapshots"]})
+
+    snap = spark.read.parquet(str(tmp_path / "store4" / entry["path"]))
+    want = [r.asDict() for r in snap.groupBy("z").agg(
+        F.count("*").alias("tiles"), F.sum("point_cnt").alias("points"),
+        F.sum("n_events").alias("events"),
+        F.max("n_docs").alias("max_docs_per_tile")).orderBy("z").collect()]
+    assert entry["partitions"] == want
+    assert entry["n_tiles"] == snap.count()

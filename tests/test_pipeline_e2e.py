@@ -14,7 +14,7 @@ from gpx2tiles_spark.operators.parse import parse_documents
 from gpx2tiles_spark.operators.raster import rasterize
 from gpx2tiles_spark.pngcodec import decode_png
 from gpx2tiles_spark.plans.pipeline import render_pyramid
-from tests.conftest import REFERENCE_GPX
+from tests.conftest import REFERENCE_GPX, needs_reference_gpx
 
 GOLDEN_TILES = {14: (8579, 5632), 15: (17158, 11264), 16: (34316, 22529),
                 17: (68632, 45059), 18: (137264, 90119)}
@@ -35,6 +35,7 @@ def fixture_tiles(fixture_doc):
     return {(r.z, r.tx, r.ty): r for r in res.tiles.collect()}
 
 
+@needs_reference_gpx
 def test_fixture_tile_pyramid_exact(fixture_tiles):
     # the 22 m cluster lands in exactly one tile per zoom → 18 tiles
     assert len(fixture_tiles) == 18
@@ -46,6 +47,7 @@ def test_fixture_tile_pyramid_exact(fixture_tiles):
         assert by_z[z].point_cnt == (25 if z > 16 else 24), z
 
 
+@needs_reference_gpx
 def test_fixture_stamped_pixels(fixture_tiles):
     # golden per-point pixels (FIXTURES.md §4.2) must be non-transparent
     r = fixture_tiles[(18, 137264, 90119)]
@@ -57,6 +59,7 @@ def test_fixture_stamped_pixels(fixture_tiles):
     assert tuple(img[142 + 1, 79 + 1, :3]) == (0x06, 0x1A, 0x5B)
 
 
+@needs_reference_gpx
 def test_fixture_line_colors(fixture_tiles):
     # z16: the 13 kph point draws a brown line; network lines suppressed
     r = fixture_tiles[(16, 34316, 22529)]
@@ -97,6 +100,7 @@ def test_corpus_render_and_incremental(spark, tmp_path):
             decode_png(bytes(full.loc[key].png)).tobytes(), key
 
 
+@needs_reference_gpx
 def test_pyramid_sink(spark, fixture_doc, tmp_path):
     out = str(tmp_path / "tiles")
     render_pyramid(fixture_doc, EngineConfig(zoom_min=14, zoom_max=16),

@@ -15,7 +15,7 @@ from gpx2tiles_spark.operators.parse import parse_documents
 from gpx2tiles_spark.operators.raster import tiles_to_pixels
 from gpx2tiles_spark.plans.pipeline import render_pyramid
 from gpx2tiles_spark.sources.tilestore import read_tile_pyramid, remove_tiles
-from tests.conftest import REFERENCE_GPX
+from tests.conftest import REFERENCE_GPX, needs_reference_gpx
 
 CFG = EngineConfig(zoom_min=14, zoom_max=16)
 
@@ -29,6 +29,7 @@ def fixture_doc(spark):
         SPANS_SCHEMA)
 
 
+@needs_reference_gpx
 def test_raster_vector_roundtrip(spark, fixture_doc):
     """Every source point's stamped pixel must be recoverable from the
     rendered raster, and its inverse-projected center must land within
@@ -59,6 +60,7 @@ def test_raster_vector_roundtrip(spark, fixture_doc):
         assert abs(sample.lat - lat[0]) <= lat_px
 
 
+@needs_reference_gpx
 def test_fs_tilestore_source_and_truncate(spark, fixture_doc, tmp_path):
     out = str(tmp_path / "pyr")
     render_pyramid(fixture_doc, CFG, out_dir=out)

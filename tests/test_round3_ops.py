@@ -295,7 +295,7 @@ def _batches(spark, n_docs, cfg):
 
     docs = generate_documents(spark, n_docs)
     pts = parse_documents(docs).persist()
-    half = f"doc-{n_docs // 2:06x}"
+    half = f"doc{n_docs // 2:08d}"
     ev1 = build_events(pts.filter(F.col("doc_id") < half), cfg)
     ev2 = build_events(pts.filter(F.col("doc_id") >= half), cfg)
     return ev1, ev2
@@ -350,30 +350,22 @@ def test_incremental_hot_tile_is_salted(spark):
 
 
 def test_incremental_low_zoom_plan_has_no_cogroup(spark):
-    """Physical-plan shape of the skew-safe incremental path: below the
-    canvas-reading zooms the store≠None render must contain NO
-    FlatMapCoGroupsInPandas (one pandas group per tile = the hot-tile
-    serialization the round-3 redesign removes); with z >= 17 in range
-    the cogroup fold must appear (it is the correct shape there)."""
+    """Physical-plan shape of the store render: at any zoom range the
+    store≠None render must contain NO FlatMapCoGroupsInPandas (one pandas
+    call per store tile) — the store rows and the events meet in one
+    tile shuffle and the partition-sliced fold draws over the base."""
     from gpx2tiles_spark.config import EngineConfig
     from gpx2tiles_spark.operators.raster import rasterize
 
-    cfg_low = EngineConfig(zoom_min=1, zoom_max=12)
-    ev1, ev2 = _batches(spark, 6, cfg_low)
-    store = rasterize(ev1, cfg_low).select("z", "tx", "ty", "point_cnt",
+    for cfg in (EngineConfig(zoom_min=1, zoom_max=12),
+                EngineConfig(zoom_min=16, zoom_max=18)):
+        ev1, ev2 = _batches(spark, 6, cfg)
+        store = rasterize(ev1, cfg).select("z", "tx", "ty", "point_cnt",
                                            "png")
-    low_plan = rasterize(ev2, cfg_low, store=store) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in low_plan
-    assert "MapInPandas" in low_plan  # partition-sliced fold + overlay
-
-    cfg_hi = EngineConfig(zoom_min=16, zoom_max=18)
-    ev1h, ev2h = _batches(spark, 6, cfg_hi)
-    storeh = rasterize(ev1h, cfg_hi).select("z", "tx", "ty", "point_cnt",
-                                            "png")
-    hi_plan = rasterize(ev2h, cfg_hi, store=storeh) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in hi_plan
+        plan = rasterize(ev2, cfg, store=store) \
+            ._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" not in plan
+        assert "MapInPandas" in plan  # the partition-sliced fold
 
 
 def test_incremental_pdop_zone_uses_base_canvas(spark):

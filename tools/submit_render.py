@@ -57,6 +57,7 @@ def main() -> int:
              .agg(F.count("*").alias("tiles"),
                   F.sum("point_cnt").alias("points"))
              .orderBy("z").collect())
+    res.release()
     print(json.dumps({
         "zooms": {int(r.z): {"tiles": int(r.tiles), "points": int(r.points)}
                   for r in stats},
