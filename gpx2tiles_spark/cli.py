@@ -199,18 +199,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from .plans.pipeline import render_pyramid
         res = render_pyramid(docs, cfg, out_dir=run["out_dir"],
                              store=existing_tiles(spark, run["out_dir"], cfg))
-        try:
-            if run["verbose"]:
-                from pyspark.sql import functions as F
-                stats = (res.tiles.groupBy("z")
-                         .agg(F.count("*").alias("tiles"),
-                              F.sum("point_cnt").alias("points"))
-                         .orderBy("z").collect())
-                for r in stats:  # the reference's per-zoom progress lines
-                    sys.stderr.write(
-                        f"zoom {r.z} tiles {r.tiles} points {r.points}\n")
-        finally:
-            res.release()
+        if run["verbose"]:
+            for r in res.zoom_stats:  # the reference's per-zoom progress lines
+                sys.stderr.write(
+                    f"zoom {r.z} tiles {r.tiles} points {r.points}\n")
         return 0
     finally:
         if own_session:

@@ -174,7 +174,3 @@ def generate_documents(spark: SparkSession, n_docs: int,
         n_docs // 2048)
     rng = spark.range(start, start + n_docs, numPartitions=n_parts)
     return rng.mapInPandas(gen, SPANS_SCHEMA)
-
-
-def write_corpus(spark: SparkSession, n_docs: int, path: str) -> None:
-    generate_documents(spark, n_docs).write.mode("overwrite").parquet(path)

@@ -445,17 +445,25 @@ def gd_alpha_blend(dst_rgb: np.ndarray, src_rgb: int, src_alpha: int) -> np.ndar
 def blend_ellipse_outline(canvas: np.ndarray, cx: int, cy: int, d: int,
                           color: int, alpha: int) -> None:
     """Draw gdImageEllipse(cx, cy, d, d, (alpha<<24)|color) with gd's
-    alpha blending — sequential, because the outline re-visits pixels and
-    each visit blends against the previous result."""
+    alpha blending.  The outline re-visits pixels and each visit blends
+    against the previous result; every visit applies the same blend, so
+    a pixel visited k times is blended k times, whatever the order."""
     h, w = canvas.shape[:2]
     xs, ys = ellipse_outline_pixels(cx, cy, d, d)
-    for x, y in zip(xs, ys):
-        if not (0 <= x < w and 0 <= y < h):
-            continue
-        px = canvas[y, x]
-        dst = (int(px[0]) << 16) | (int(px[1]) << 8) | int(px[2])
-        c = int(gd_alpha_blend(np.asarray(dst), color, alpha))
-        canvas[y, x] = ((c >> 16) & 0xFF, (c >> 8) & 0xFF, c & 0xFF, 255)
+    m = (xs >= 0) & (xs < w) & (ys >= 0) & (ys < h)
+    if not m.any():
+        return
+    flat, visits = np.unique(ys[m] * w + xs[m], return_counts=True)
+    py, px = np.divmod(flat, w)
+    rgb = canvas[py, px, :3].astype(np.int64)
+    dst = (rgb[:, 0] << 16) | (rgb[:, 1] << 8) | rgb[:, 2]
+    for k in range(1, int(visits.max()) + 1):
+        again = visits >= k
+        dst[again] = gd_alpha_blend(dst[again], color, alpha)
+    canvas[py, px, 0] = (dst >> 16) & 0xFF
+    canvas[py, px, 1] = (dst >> 8) & 0xFF
+    canvas[py, px, 2] = dst & 0xFF
+    canvas[py, px, 3] = 255
 
 
 def stamp_pixels(canvas: np.ndarray, xs: np.ndarray, ys: np.ndarray,

@@ -82,15 +82,6 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     return planes
 
 
-def _signature(vec: Column, planes: list[list[float]]) -> Column:
-    sig = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(v) for v in plane])
-        d = _dot(vec, arr)
-        sig = sig + F.when(d > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return sig
-
-
 def _bucketed_pandas(df: DataFrame, vec_col: str, id_col: str,
                      tables: list[list[list[float]]]):
     """(id, vec) → (id, vec, tbl, bkt) rows for every hash table, via ONE

@@ -19,7 +19,8 @@ vectorized (last-writer-wins preserved by numpy assignment order).
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -938,20 +939,59 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     return merged_hot.unionByName(_rasterize_partitions(cold, cfg))
 
 
-def write_tile_pyramid(tiles: DataFrame, out_dir: str) -> None:
-    """Filesystem sink: ``{out_dir}/{z}/{tx}/{ty}.png`` with tmp+rename
-    (atomic per tile, like flush_tile gpx2tiles.c:312-348), executed on
-    the executors via foreachPartition — no driver collect."""
+class ZoomStats(NamedTuple):
+    z: int
+    tiles: int
+    points: int
 
-    def write_partition(rows) -> None:
-        import os
 
-        for r in rows:
-            d = os.path.join(out_dir, str(r.z), str(r.tx))
-            os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, f"{r.ty}.png.tmp")
+def _write_tiles(out_dir: str, batches):
+    """mapInArrow body of :func:`write_tile_pyramid`.  Module-level, so
+    the worker that unpickles it imports this package (and with it the
+    worker zip cache, see ``gpx2tiles_spark/_zipcache.py``)."""
+    import os
+
+    import pyarrow as pa
+
+    made: set[str] = set()
+    stats: dict[int, list[int]] = {}
+    for b in batches:
+        cols = (b.column(c).to_pylist()
+                for c in ("z", "tx", "ty", "point_cnt", "png"))
+        for z, tx, ty, pc, png in zip(*cols):
+            d = os.path.join(out_dir, str(z), str(tx))
+            if d not in made:
+                os.makedirs(d, exist_ok=True)
+                made.add(d)
+            tmp = os.path.join(d, f"{ty}.png.tmp")
             with open(tmp, "wb") as f:
-                f.write(bytes(r.png))
-            os.replace(tmp, os.path.join(d, f"{r.ty}.png"))
+                f.write(png)
+            os.replace(tmp, os.path.join(d, f"{ty}.png"))
+            s = stats.setdefault(z, [0, 0])
+            s[0] += 1
+            s[1] += pc
+    if stats:
+        zs = sorted(stats)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(zs, pa.int32()),
+             pa.array([stats[z][0] for z in zs], pa.int64()),
+             pa.array([stats[z][1] for z in zs], pa.int64())],
+            ["z", "tiles", "points"])
 
-    tiles.select("z", "tx", "ty", "png").foreachPartition(write_partition)
+
+def write_tile_pyramid(tiles: DataFrame, out_dir: str) -> list[ZoomStats]:
+    """Filesystem sink: ``{out_dir}/{z}/{tx}/{ty}.png`` with tmp+rename
+    (atomic per tile, like flush_tile gpx2tiles.c:312-348), written by
+    the task that folds the tiles (a ``mapInArrow`` over the tile rows,
+    one job, no driver collect of tiles).  Each task creates a directory
+    once and returns its per-zoom tile and point counts, summed here
+    into one row per zoom."""
+    totals: dict[int, list[int]] = {}
+    for r in (tiles.select("z", "tx", "ty", "point_cnt", "png")
+              .mapInArrow(partial(_write_tiles, out_dir),
+                          "z int, tiles long, points long")
+              .collect()):
+        s = totals.setdefault(r.z, [0, 0])
+        s[0] += r.tiles
+        s[1] += r.points
+    return [ZoomStats(z, *totals[z]) for z in sorted(totals)]

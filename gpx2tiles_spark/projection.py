@@ -51,12 +51,6 @@ def tilex_to_lon(tx: np.ndarray, z: int | np.ndarray) -> np.ndarray:
     return np.asarray(tx, np.float64) / np.power(2.0, z) * 360.0 - 180.0
 
 
-def tiley_to_lat(ty: np.ndarray, z: int | np.ndarray) -> np.ndarray:
-    """North edge latitude of tile row ty. slippy-map.h:28-32 (atan∘sinh)."""
-    n = math.pi - 2.0 * math.pi * np.asarray(ty, np.float64) / np.power(2.0, z)
-    return np.degrees(np.arctan(0.5 * (np.exp(n) - np.exp(-n))))
-
-
 def tile_bbox(tx: np.ndarray, ty: np.ndarray, z: int | np.ndarray):
     """Geographic bbox (s, w, n, e) of a tile.
 

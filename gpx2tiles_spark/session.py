@@ -47,6 +47,12 @@ def get_spark(app: str = "gpx2tiles_spark", master: str | None = None,
         # generated classes named without the codegen stage id: the same
         # operator subtree compiles once, wherever it sits in a plan
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # list up to 1024 paths (an explicit GPX file list, a -C tree's
+        # zoom or column directories) on the driver: past Spark's default
+        # of 32 every read starts a listing job, one task per path
+        # (measured on a 100-file read: 2.88 → 0.94 CPU-s, 2 → 1 jobs)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
     )
     # OPT-IN shuffle spill on tmpfs (SPARK_GRAFT_TMPFS=1): the sandbox's
     # single virtual disk serializes concurrent shuffle writers (a real

@@ -273,3 +273,35 @@ def test_blend_ellipse_outline_sequential():
             got = canvas[y, x]
             assert (int(got[0]), int(got[1]), int(got[2])) == \
                 ((c >> 16) & 0xFF, (c >> 8) & 0xFF, c & 0xFF)
+
+
+def _blend_ellipse_outline_loop(canvas, cx, cy, d, color, alpha):
+    """The sequential reference: one gd blend per emitted outline pixel,
+    in emission order, each against the previous result."""
+    h, w = canvas.shape[:2]
+    xs, ys = draw.ellipse_outline_pixels(cx, cy, d, d)
+    for x, y in zip(xs, ys):
+        if not (0 <= x < w and 0 <= y < h):
+            continue
+        px = canvas[y, x]
+        dst = (int(px[0]) << 16) | (int(px[1]) << 8) | int(px[2])
+        c = int(draw.gd_alpha_blend(np.asarray(dst), color, alpha))
+        canvas[y, x] = ((c >> 16) & 0xFF, (c >> 8) & 0xFF, c & 0xFF, 255)
+
+
+def test_blend_ellipse_outline_matches_sequential_loop():
+    # random canvases, diameters, colors and alphas, with centers off
+    # every edge so outlines clip; repeated visits blend k times
+    rng = np.random.default_rng(11)
+    for i in range(600):
+        canvas = rng.integers(0, 256, (48, 48, 4), dtype=np.uint8)
+        if i % 3 == 0:
+            canvas[...] = 0  # untouched tile: alpha 0, black
+        cx, cy = (int(v) for v in rng.integers(-24, 72, 2))
+        d = int(rng.integers(0, 60))
+        color = int(rng.integers(0, 1 << 24))
+        alpha = int(rng.integers(0, 128))
+        want = canvas.copy()
+        _blend_ellipse_outline_loop(want, cx, cy, d, color, alpha)
+        draw.blend_ellipse_outline(canvas, cx, cy, d, color, alpha)
+        assert np.array_equal(canvas, want), (cx, cy, d, color, alpha)

@@ -27,7 +27,6 @@ import sys
 
 def main() -> int:
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     import os
 
@@ -53,14 +52,9 @@ def main() -> int:
         docs = spark.read.parquet(src)
     cfg = EngineConfig(zoom_min=zmin, zoom_max=zmax)
     res = render_pyramid(docs, cfg, out_dir=out_dir)
-    stats = (res.tiles.groupBy("z")
-             .agg(F.count("*").alias("tiles"),
-                  F.sum("point_cnt").alias("points"))
-             .orderBy("z").collect())
-    res.release()
     print(json.dumps({
-        "zooms": {int(r.z): {"tiles": int(r.tiles), "points": int(r.points)}
-                  for r in stats},
+        "zooms": {r.z: {"tiles": r.tiles, "points": r.points}
+                  for r in res.zoom_stats},
         "executors": spark.sparkContext.getConf().get("spark.master"),
     }))
     spark.stop()
