@@ -9,7 +9,7 @@ A from-scratch re-expression of the capabilities of raalkml/gpx2tiles
   with native Column expressions (JVM whole-stage codegen),
 - expand track segments across tile boundaries with an integer CCW
   intersection clip, rasterize speed-colored polylines into 256x256 RGBA
-  PNG tiles via grouped-map pandas UDFs,
+  PNG tiles via partition-level Arrow folds,
 - plus kNN lookup, point-in-polygon joins, dedup (exact/MinHash/SimHash),
   ANN cosine search, and text-quality operators for large corpus curation.
 

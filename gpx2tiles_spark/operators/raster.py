@@ -3,14 +3,17 @@
 A4, the "render aggregate" (SURVEY.md §2.4): an order-sensitive fold of
 draw events into a canvas after one shuffle keyed by tile — each tile is
 rendered exactly once (the reference's open/evict/reload dance,
-gpx2tiles.c:277-381, disappears).  The fold slices contiguous tile runs
-out of each sorted Arrow batch (:func:`partition_folder`), so there is
-no pandas call per tile.
+gpx2tiles.c:277-381, disappears).  Every fold here — the speed fold
+(:func:`partition_folder`), the heatmap hit-count fold, the salted
+route's per-salt fold and merge, and ``simplify.simplify_tracks`` — is
+a ``mapInArrow`` over key-sorted record batches that takes its runs of
+equal key from one helper, :func:`key_runs` (numpy views of the Arrow
+columns, no pandas, no call per tile).
 
-Incremental mode (S5/J3) sends the store's rows through the SAME tile
-shuffle as the new events: within a tile the base rows sort first
-(newest snapshot first) and the fold draws the events over the newest
-base — a tile the batch does not touch is never decoded or re-emitted.
+Incremental mode (S5/J3) sends the store's rows through each route's
+own tile shuffle: within a tile the base rows sort first (newest
+snapshot first) and the fold draws over the newest base — a tile the
+batch does not touch is never decoded or re-emitted.
 
 Heatmap mode is a faithful sequential fold (intensify reads canvas
 state — gpx2tiles.c:627-636); speed mode batches consecutive stamp runs
@@ -20,13 +23,15 @@ vectorized (last-writer-wins preserved by numpy assignment order).
 from __future__ import annotations
 
 from functools import partial
-from typing import Iterator, NamedTuple
+from typing import Iterable, Iterator, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import draw
 from ..colors import intensify
@@ -50,6 +55,40 @@ TILES_SCHEMA = T.StructType([
 ])
 
 
+def key_runs(batches: Iterable[pa.RecordBatch], names: Sequence[str],
+             key: Sequence[str]
+             ) -> Iterator[tuple[dict, np.ndarray, np.ndarray]]:
+    """Complete runs of equal ``key`` out of key-sorted Arrow record
+    batches: the one run-and-carry loop of every partition-sliced fold.
+
+    Yields ``(cols, starts, ends)`` per batch: ``cols`` maps each of
+    ``names`` (which include ``key``) to a numpy view of its column, and
+    each ``[starts[i], ends[i])`` is one whole run.  A run ends wherever
+    any key column changes; the columns are compared themselves, never
+    packed into one integer, so no key value can alias another.  A
+    batch's trailing run may go on in the next batch, so it is carried
+    and joined to that batch; the last one comes out when the input
+    ends."""
+    carry = None
+    for b in batches:
+        cols = {c: b.column(c).to_numpy(zero_copy_only=False) for c in names}
+        if carry is not None:
+            cols = {c: np.concatenate([carry[c], cols[c]]) for c in names}
+        m = len(cols[key[0]])
+        if not m:
+            continue
+        change = np.zeros(m - 1, bool)
+        for k in key:
+            change |= cols[k][1:] != cols[k][:-1]
+        starts = np.concatenate(([0], np.flatnonzero(change) + 1))
+        ends = np.append(starts[1:], m)
+        carry = {c: v[starts[-1]:] for c, v in cols.items()}
+        if len(starts) > 1:
+            yield cols, starts[:-1], ends[:-1]
+    if carry is not None:
+        yield carry, np.array([0]), np.array([len(carry[key[0]])])
+
+
 def _base_canvas(cfg: EngineConfig) -> np.ndarray:
     """Canvas for a tile with no store base.  With -d1 (diag_shadows) a
     freshly CREATED tile gets the two SHADOW edge lines before any
@@ -63,15 +102,6 @@ def _base_canvas(cfg: EngineConfig) -> np.ndarray:
         draw.draw_line(canvas, TILE_W - 1, 0, TILE_W - 1, TILE_H - 1,
                        SHADOW_COLOR)
     return canvas
-
-
-def _fold_tile(pdf: pd.DataFrame, cfg: EngineConfig,
-               base: np.ndarray | None) -> tuple[np.ndarray, int]:
-    """Fold one tile's events (already sorted) into a canvas (pandas
-    adapter over :func:`_fold_arrays` — used by the cogroup/salted paths)."""
-    cols = {c: pdf[c].to_numpy() for c in ("z", "etype", "x1", "y1", "x2",
-                                           "y2", "color")}
-    return _fold_arrays(cols, 0, len(pdf), cfg, base)
 
 
 def _fold_opaque(canvas: np.ndarray, et, x1, y1, x2, y2, color,
@@ -169,7 +199,10 @@ def _fold_arrays(cols: dict, s: int, e: int, cfg: EngineConfig,
             # read→intensify→write chain per pixel is a function of the
             # hit count alone — count hits and colorize once (the
             # commutative reformulation; byte-exact vs the loop)
-            _heat_count_paint(canvas, x1, y1)
+            m = (x1 >= 0) & (x1 < w) & (y1 >= 0) & (y1 < h)
+            uniq, hits = np.unique(y1[m].astype(np.int64) * w + x1[m],
+                                   return_counts=True)
+            _heat_continue(canvas, uniq % w, uniq // w, hits)
         else:
             cur_color = HEATMAP_BASE_COLOR
             for i in range(n):
@@ -231,25 +264,40 @@ def _heat_chain() -> np.ndarray:
     return _HEAT_CHAIN
 
 
-def _heat_count_paint(canvas: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> None:
-    """Hit-count heatmap colorize: per-pixel hits → chain[min(hits-1, sat)].
-    Commutes across any event split, so salted/partitioned heatmap folds
-    merge by ADDING counts — the scale path for hot low-zoom tiles."""
+def _heat_continue(canvas: np.ndarray, xs: np.ndarray, ys: np.ndarray,
+                   hits: np.ndarray) -> None:
+    """Paint per-pixel hit counts by continuing each pixel's intensify
+    chain from the color it shows.  chain[i] is strictly brighter until
+    its fixed point, so a pixel's chain position is recoverable and
+    chain[min(pos + hits, sat)] == folding its stamps sequentially over
+    it — byte-exact, with per-tile work bounded by 65536 aggregated
+    pixels however many events hit the tile.  An untouched pixel (alpha
+    0, gd's never-set truecolor pixel) sits at position −1, so a blank
+    canvas gets chain[min(hits − 1, sat)].  Counts commute across any
+    event split, so the salted/partitioned heatmap folds merge by
+    ADDING them."""
+    chain = _heat_chain()
+    sat = len(chain) - 1
     h, w = canvas.shape[:2]
     m = (xs >= 0) & (xs < w) & (ys >= 0) & (ys < h)
-    if not m.any():
-        return
-    key = ys[m].astype(np.int64) * w + xs[m].astype(np.int64)
-    uniq, counts = np.unique(key, return_counts=True)
-    chain = _heat_chain()
-    colors = chain[np.minimum(counts - 1, len(chain) - 1)]
-    draw.stamp_pixels(canvas, uniq % w, uniq // w, colors)
-
-
-def _sort_events(pdf: pd.DataFrame) -> pd.DataFrame:
-    # the reference's draw order: file → segment → point → stamp/circle/line
-    return pdf.sort_values(["doc_id", "seg_order", "pt_idx", "etype"],
-                           kind="stable")
+    xs, ys, hits = xs[m], ys[m], hits[m].astype(np.int64)
+    prior = canvas[ys, xs]
+    packed = ((prior[:, 0].astype(np.int64) << 16)
+              | (prior[:, 1].astype(np.int64) << 8)
+              | prior[:, 2].astype(np.int64))
+    order = np.argsort(chain, kind="stable")
+    pos = np.clip(np.searchsorted(chain[order], packed), 0, sat)
+    known = chain[order][pos] == packed
+    idx = np.where(prior[:, 3] == 0, np.int64(-1), order[pos])
+    colors = chain[np.minimum(idx + hits, sat)]
+    # alpha != 0 pixels whose color is outside the chain (store tile
+    # from a different mode): step intensify from the stored color
+    for i in np.flatnonzero((prior[:, 3] != 0) & ~known):
+        c = int(packed[i])
+        for _ in range(int(hits[i])):
+            c = int(intensify(np.array([c]))[0])
+        colors[i] = c
+    draw.stamp_pixels(canvas, xs, ys, colors)
 
 
 def _canvas_read_z(cfg: EngineConfig) -> int:
@@ -270,22 +318,21 @@ def rasterize(events: DataFrame, cfg: EngineConfig,
     ``store`` holds (z, tx, ty, png) and optionally ``point_cnt`` (added
     to the new stamps) and :data:`SNAPSHOT_COL` (several rows of a tile
     → the highest snapshot id is the base; without it the store is one
-    snapshot).  With a store only the tiles the events touch come out.
+    snapshot).  With a store only the tiles the events touch come out:
+    on every route the store's rows ride that route's own tile shuffle
+    and its fold draws over each tile's newest base.
 
     Routes, by config:
 
     - default (speed mode, ``salt_buckets == 0``), and every ``-d1``
       shadow / heatmap ``-d4`` text render: one shuffle keyed by tile and
-      the partition-sliced fold (:func:`_rasterize_partitions`) — with a
-      store, its rows ride the same shuffle and the fold draws over the
-      newest base;
+      the partition-sliced fold (:func:`_rasterize_partitions`);
     - heatmap mode splits at :func:`_canvas_read_z`: below it the
-      relational per-pixel hit-count aggregate (fresh:
-      :func:`_rasterize_heatmap_counts`; over a store:
-      :func:`_heatmap_counts_incremental`), at or above it the fold;
+      relational per-pixel hit-count aggregate and its fold
+      (:func:`_rasterize_heatmap_counts`), at or above it the fold;
     - ``salt_buckets > 0`` (speed mode): below the split the salted
-      two-phase render for hot tiles (:func:`rasterize_salted`), laid over
-      the store by :func:`_overlay_on_store`; at or above it the fold.
+      two-phase render for hot tiles (:func:`rasterize_salted`), at or
+      above it the fold.
     """
     # -d1 shadows alpha-blend an ellipse on EVERY point (reads canvas at
     # every zoom) and -d4 text breaks the heatmap pure-stamp premise —
@@ -301,22 +348,15 @@ def rasterize(events: DataFrame, cfg: EngineConfig,
     if (diag_sequential or min(zooms) >= split
             or not (cfg.heatmap or cfg.salt_buckets > 0)):
         return _rasterize_partitions(events, cfg, store)
-    zcol = F.col("z")
     low_ev, high_ev = events, None
     low_store = high_store = store
     if max(zooms) >= split:
-        low_ev = events.filter(zcol < F.lit(split))
-        high_ev = events.filter(zcol >= F.lit(split))
+        below, above = F.col("z") < F.lit(split), F.col("z") >= F.lit(split)
+        low_ev, high_ev = events.filter(below), events.filter(above)
         if store is not None:
-            low_store = store.filter(zcol < F.lit(split))
-            high_store = store.filter(zcol >= F.lit(split))
-    if store is None:
-        low = (_rasterize_heatmap_counts(low_ev, cfg) if cfg.heatmap
-               else rasterize_salted(low_ev, cfg))
-    else:
-        base = latest_tiles(low_store)
-        low = (_heatmap_counts_incremental(low_ev, cfg, base) if cfg.heatmap
-               else _overlay_on_store(rasterize_salted(low_ev, cfg), base))
+            low_store, high_store = store.filter(below), store.filter(above)
+    low = (_rasterize_heatmap_counts(low_ev, cfg, low_store) if cfg.heatmap
+           else rasterize_salted(low_ev, cfg, low_store))
     if high_ev is None:
         return low
     return low.unionByName(_rasterize_partitions(high_ev, cfg, high_store))
@@ -346,9 +386,11 @@ def _rasterize_cogroup(events: DataFrame, cfg: EngineConfig,
     def fold_cogroup(ev: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
         if not len(ev):
             return pd.DataFrame(columns=[f.name for f in TILES_SCHEMA.fields])
-        ev = _sort_events(ev)
+        ev = ev.sort_values(_EVENT_ORDER, kind="stable")
         base = decode_png(bytes(old["png"].iloc[0])) if len(old) else None
-        canvas, point_cnt = _fold_tile(ev, cfg, base)
+        cols = {c: ev[c].to_numpy() for c in ("z", "etype", "x1", "y1", "x2",
+                                              "y2", "color")}
+        canvas, point_cnt = _fold_arrays(cols, 0, len(ev), cfg, base)
         if len(old) and "point_cnt" in old.columns:
             point_cnt += int(old["point_cnt"].iloc[0])
         return pd.DataFrame([{
@@ -365,122 +407,8 @@ def _rasterize_cogroup(events: DataFrame, cfg: EngineConfig,
     )
 
 
-# Only the salted hot-tile route (salt_buckets > 0) still lays a fresh
-# render over the store: its partial canvases are merged per tile before
-# the base is known.  Every other store render folds over the base in
-# the tile shuffle (_rasterize_partitions).
-def _overlay_on_store(fresh: DataFrame, store: DataFrame) -> DataFrame:
-    """Overlay freshly-rendered batch tiles onto their store base: one
-    equi-join row per TOUCHED tile (store-only tiles stay in the store's
-    older snapshots — delta semantics), then an Arrow-batched pixel
-    overlay.  Exact for opaque draws: base-then-draw == draw-then-
-    overlay-where-painted.  point_cnt accumulates; n_events/n_docs stay
-    batch-local (matching the cogroup fold's delta bookkeeping)."""
-    bcols = [F.col("z"), F.col("tx"), F.col("ty"),
-             F.col("png").alias("base_png")]
-    has_pc = "point_cnt" in store.columns
-    if has_pc:
-        bcols.append(F.col("point_cnt").alias("base_point_cnt"))
-    joined = fresh.join(store.select(*bcols), ["z", "tx", "ty"], "left")
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                pc = int(r.point_cnt)
-                if r.base_png is None:
-                    png = bytes(r.png)
-                else:
-                    canvas = decode_png(bytes(r.base_png))
-                    overlay = decode_png(bytes(r.png))
-                    mask = overlay[..., 3] != 0
-                    canvas[mask] = overlay[mask]
-                    png = encode_png(canvas)
-                    if has_pc and r.base_point_cnt is not None:
-                        pc += int(r.base_point_cnt)
-                out.append({
-                    "z": int(r.z), "tx": int(r.tx), "ty": int(r.ty),
-                    "point_cnt": pc, "n_events": int(r.n_events),
-                    "n_docs": int(r.n_docs), "png": png,
-                })
-            yield pd.DataFrame(
-                out, columns=[f.name for f in TILES_SCHEMA.fields])
-
-    return joined.mapInPandas(merge, TILES_SCHEMA)
-
-
-def _heatmap_counts_incremental(events: DataFrame, cfg: EngineConfig,
-                                store: DataFrame) -> DataFrame:
-    """Incremental heatmap for the pure-stamp zone: aggregate new events
-    to per-pixel hit counts FIRST (map-side combinable — the skew dies in
-    the aggregate), then continue each pixel's intensify chain from the
-    BASE tile's color.  chain[i] is strictly brighter until its fixed
-    point, so a base pixel's chain position is recoverable and
-    chain[min(pos + new_hits, sat)] == folding the new stamps
-    sequentially over the base — byte-exact, while per-tile work is
-    bounded by 65536 aggregated pixels however many events hit the tile."""
-    counts = events.groupBy("z", "tx", "ty", "x1", "y1").agg(
-        F.count("*").alias("hits"))
-    docs = events.groupBy("z", "tx", "ty").agg(
-        F.countDistinct("doc_id").alias("n_docs"))
-    part = counts.join(docs, ["z", "tx", "ty"])
-    has_pc = "point_cnt" in store.columns
-    scols = ["z", "tx", "ty", "png"] + (["point_cnt"] if has_pc else [])
-
-    def heat_merge(cnt: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
-        if not len(cnt):
-            return pd.DataFrame(columns=[f.name for f in TILES_SCHEMA.fields])
-        chain = _heat_chain()
-        sat = len(chain) - 1
-        base_pc = 0
-        if len(old):
-            canvas = decode_png(bytes(old["png"].iloc[0]))
-            if has_pc and old["point_cnt"].iloc[0] is not None:
-                base_pc = int(old["point_cnt"].iloc[0])
-        else:
-            canvas = blank_tile()
-        h, w = canvas.shape[:2]
-        xs = cnt["x1"].to_numpy()
-        ys = cnt["y1"].to_numpy()
-        hits = cnt["hits"].to_numpy().astype(np.int64)
-        m = (xs >= 0) & (xs < w) & (ys >= 0) & (ys < h)
-        xs, ys, mh = xs[m], ys[m], hits[m]
-        prior = canvas[ys, xs]
-        packed = ((prior[:, 0].astype(np.int64) << 16)
-                  | (prior[:, 1].astype(np.int64) << 8)
-                  | prior[:, 2].astype(np.int64))
-        order = np.argsort(chain, kind="stable")
-        pos = np.searchsorted(chain[order], packed)
-        pos = np.clip(pos, 0, sat)
-        known = chain[order][pos] == packed
-        idx = np.where(prior[:, 3] == 0, np.int64(-1), order[pos])
-        new_idx = np.minimum(idx + mh, sat)
-        colors = chain[new_idx]
-        # alpha != 0 pixels whose color is outside the chain (store tile
-        # from a different mode): step intensify from the stored color
-        odd = np.flatnonzero((prior[:, 3] != 0) & ~known)
-        for i in odd:
-            c = int(packed[i])
-            for _ in range(int(mh[i])):
-                c = int(intensify(np.array([c]))[0])
-            colors[i] = c
-        draw.stamp_pixels(canvas, xs, ys, colors)
-        total = int(hits.sum())
-        return pd.DataFrame([{
-            "z": int(cnt["z"].iloc[0]), "tx": int(cnt["tx"].iloc[0]),
-            "ty": int(cnt["ty"].iloc[0]), "point_cnt": base_pc + total,
-            "n_events": total, "n_docs": int(cnt["n_docs"].iloc[0]),
-            "png": encode_png(canvas),
-        }])
-
-    return (
-        part.groupBy("z", "tx", "ty")
-        .cogroup(store.select(*scols).groupBy("z", "tx", "ty"))
-        .applyInPandas(lambda c, o: heat_merge(c, o), TILES_SCHEMA)
-    )
-
-
-def _rasterize_heatmap_counts(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+def _rasterize_heatmap_counts(events: DataFrame, cfg: EngineConfig,
+                              store: DataFrame | None = None) -> DataFrame:
     """Relational heatmap render for the pure-stamp zoom zone.
 
     Plan: hash aggregate on (z,tx,ty,x1,y1) with map-side partial
@@ -489,58 +417,38 @@ def _rasterize_heatmap_counts(events: DataFrame, cfg: EngineConfig) -> DataFrame
     for heatmap mode; the opaque-mode equivalent is rasterize_salted).
     The aggregated relation is bounded at 65536 rows per tile, so the
     per-tile paint that follows cannot skew.  Byte-exact vs the
-    sequential fold: chain[min(hits-1, fixedpoint)] == the canvas the
-    read→intensify→write loop leaves (test_pipeline_e2e)."""
+    sequential fold (:func:`_heat_continue`; test_pipeline_e2e).  With a
+    ``store`` its rows ride the same tile shuffle and each tile's counts
+    continue from its newest base."""
     counts = events.groupBy("z", "tx", "ty", "x1", "y1").agg(
         F.count("*").alias("hits"))
     docs = events.groupBy("z", "tx", "ty").agg(
         F.countDistinct("doc_id").alias("n_docs"))
-    part = (
-        counts.join(docs, ["z", "tx", "ty"])  # co-partitioned after the aggs
-        .repartition(_fold_partitions(counts, cfg), "z", "tx", "ty")
-        .sortWithinPartitions("z", "tx", "ty")
-    )
-    _COLS = ("z", "tx", "ty", "x1", "y1", "hits", "n_docs")
+    rel = counts.join(docs, _TILE_KEY)  # co-partitioned after the aggs
+    names = ("z", "tx", "ty", "x1", "y1", "hits", "n_docs")
+    order = list(_TILE_KEY)
+    if store is not None:
+        rel = _with_base_rows(rel, store)
+        names += _BASE_COLS
+        order += _base_first()
 
-    def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: dict | None = None
-        chain = _heat_chain()
+    def fold_run(cols: dict, s: int, e: int) -> tuple | None:
+        s, base, base_pc = _run_base(cols, s, e)
+        if s == e:
+            return None
+        canvas = blank_tile() if base is None else base
+        hits = cols["hits"][s:e]
+        _heat_continue(canvas, cols["x1"][s:e], cols["y1"][s:e], hits)
+        total = int(hits.sum())
+        return (int(cols["z"][s]), int(cols["tx"][s]), int(cols["ty"][s]),
+                base_pc + total, total, int(cols["n_docs"][s]),
+                encode_png(canvas))
 
-        def finish(cols: dict, s: int, e: int) -> dict:
-            canvas = blank_tile()
-            hits = cols["hits"][s:e]
-            colors = chain[np.minimum(hits - 1, len(chain) - 1)]
-            draw.stamp_pixels(canvas, cols["x1"][s:e], cols["y1"][s:e], colors)
-            total = int(hits.sum())
-            return {
-                "z": int(cols["z"][s]), "tx": int(cols["tx"][s]),
-                "ty": int(cols["ty"][s]), "point_cnt": total,
-                "n_events": total, "n_docs": int(cols["n_docs"][s]),
-                "png": encode_png(canvas),
-            }
-
-        for pdf in batches:
-            cols = {c: pdf[c].to_numpy() for c in _COLS}
-            if carry is not None:
-                cols = {c: np.concatenate([carry[c], cols[c]]) for c in _COLS}
-                carry = None
-            m = len(cols["z"])
-            if not m:
-                continue
-            keys = (cols["z"].astype(np.int64) << 40) \
-                 ^ (cols["tx"].astype(np.int64) << 20) \
-                 ^ cols["ty"].astype(np.int64)
-            change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [m]))
-            out = [finish(cols, s, e) for s, e in zip(starts[:-1], ends[:-1])]
-            carry = {c: cols[c][starts[-1]:ends[-1]].copy() for c in _COLS}
-            if out:
-                yield pd.DataFrame(out)
-        if carry is not None and len(carry["z"]):
-            yield pd.DataFrame([finish(carry, 0, len(carry["z"]))])
-
-    return part.mapInPandas(fold_partition, TILES_SCHEMA)
+    return (rel.repartition(_fold_partitions(counts, cfg), *_TILE_KEY)
+            .sortWithinPartitions(*order)
+            .mapInArrow(partial(_fold_runs, names=names, key=_TILE_KEY,
+                                fold_run=fold_run, schema=TILES_SCHEMA),
+                        TILES_SCHEMA))
 
 
 # Target rows per Python-fold task (the incremental store's measured
@@ -607,32 +515,69 @@ def _fold_partitions(df: DataFrame, cfg: EngineConfig | None = None) -> int:
 _FOLD_COLS = ("z", "tx", "ty", "etype", "x1", "y1", "x2", "y2", "color",
               "doc_key")
 # extra columns when the store rides the shuffle: _src 0 = base row,
-# 1 = event; base_pc / png are the base row's (0 / null on event rows)
+# 1 = the tile's own row; base_pc / png are the base row's (0 / null on
+# the other rows)
 _BASE_COLS = ("_src", "base_pc", "png")
+# the reference's draw order: file → segment → point → stamp/circle/line
 _EVENT_ORDER = ["doc_id", "seg_order", "pt_idx", "etype"]
 
 
-def _with_base_rows(events: DataFrame, store: DataFrame) -> DataFrame:
-    """events ∪ store rows in one relation.  The event-only columns of a
-    base row are 0 (not null) so the Arrow→numpy columns stay integer."""
+def _base_first() -> list:
+    """Sort keys after the tile key for a relation from
+    :func:`_with_base_rows`: a tile's store rows ahead of its own rows,
+    the newest snapshot first."""
+    return ["_src", F.col("_snap").desc()]
+
+
+def _with_base_rows(rows: DataFrame, store: DataFrame) -> DataFrame:
+    """rows ∪ store rows in one relation, tagged by :data:`_BASE_COLS`
+    and ``_snap`` (the base row's snapshot id).  The other columns of a
+    base row are 0 (null when not numeric), so the Arrow→numpy columns
+    stay integer."""
     pc = (F.coalesce(F.col("point_cnt"), F.lit(0))
           if "point_cnt" in store.columns else F.lit(0))
     snap = F.col(SNAPSHOT_COL) if SNAPSHOT_COL in store.columns else F.lit(0)
-    zero = F.lit(0)
+    own = [f for f in rows.schema.fields if f.name not in _TILE_KEY]
     base = store.select(
-        "z", "tx", "ty", F.lit(0).alias("_src"),
-        snap.cast("long").alias("_snap"),
-        F.lit(None).cast("string").alias("doc_id"),
-        *[zero.alias(c) for c in ("seg_order", "pt_idx", "etype", "x1",
-                                  "y1", "x2", "y2", "color")],
+        *_TILE_KEY, F.lit(0).alias("_src"), snap.cast("long").alias("_snap"),
+        *[F.lit(0 if isinstance(f.dataType, T.NumericType) else None)
+          .cast(f.dataType).alias(f.name) for f in own],
         pc.cast("long").alias("base_pc"), "png")
-    ev = events.select(
-        "z", "tx", "ty", F.lit(1).alias("_src"),
-        F.lit(0).cast("long").alias("_snap"), "doc_id", "seg_order",
-        "pt_idx", "etype", "x1", "y1", "x2", "y2", "color",
-        F.lit(0).cast("long").alias("base_pc"),
+    tagged = rows.select(
+        *_TILE_KEY, F.lit(1).alias("_src"), F.lit(0).cast("long").alias("_snap"),
+        *[f.name for f in own], F.lit(0).cast("long").alias("base_pc"),
         F.lit(None).cast("binary").alias("png"))
-    return ev.unionByName(base)
+    return tagged.unionByName(base)
+
+
+def _run_base(cols: dict, s: int, e: int
+              ) -> tuple[int, np.ndarray | None, int]:
+    """Split one tile run of a :func:`_with_base_rows` relation sorted by
+    :func:`_base_first` into (its first own row, the newest base canvas
+    or None, the base's point count).  The first own row is ``e`` when
+    the tile has store rows only: it stays in the store, undecoded."""
+    if "_src" not in cols or cols["_src"][s] != 0:
+        return s, None, 0
+    first = s + int(np.searchsorted(cols["_src"][s:e], 1))
+    if first == e:
+        return e, None, 0
+    return first, decode_png(bytes(cols["png"][s])), int(cols["base_pc"][s])
+
+
+def _fold_runs(batches: Iterable[pa.RecordBatch], names: Sequence[str],
+               key: Sequence[str], fold_run, schema: T.StructType
+               ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body: ``fold_run(cols, s, e)`` turns each run of
+    :func:`key_runs` into one output row (a tuple in ``schema`` order)
+    or None; each input batch's rows go out as one record batch."""
+    arrow = to_arrow_schema(schema)
+    for cols, starts, ends in key_runs(batches, names, key):
+        rows = [r for r in map(partial(fold_run, cols), starts, ends)
+                if r is not None]
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(zip(*rows), arrow.types)],
+                schema=arrow)
 
 
 def prepared_events(events: DataFrame, cfg: EngineConfig | None = None,
@@ -642,94 +587,62 @@ def prepared_events(events: DataFrame, cfg: EngineConfig | None = None,
 
     The JVM sort fixes the painter order; python only needs numeric
     columns — the doc_id string is replaced by a hash AFTER the sort
-    (projection preserves row order) so the Arrow→pandas payload is
-    string-free (5-10× cheaper conversion at millions of events).
+    (projection preserves row order) so the Arrow payload is
+    string-free.
 
     With a ``store`` its rows join the same shuffle: within a tile the
     base rows come first, newest snapshot first, then the events in
     painter order."""
-    order: list = ["z", "tx", "ty"]
-    cols = [c for c in _FOLD_COLS if c != "doc_key"]
+    order: list = list(_TILE_KEY)
+    cols = list(_FOLD_COLS[:-1])
     rel = events
     if store is not None:
-        rel = _with_base_rows(events, store)
-        order += ["_src", F.col("_snap").desc()]
+        rel = _with_base_rows(events.select(*cols, *_EVENT_ORDER[:-1]), store)
+        order += _base_first()
         cols += _BASE_COLS
     return (
-        rel.repartition(_fold_partitions(events, cfg), "z", "tx", "ty")
+        rel.repartition(_fold_partitions(events, cfg), *_TILE_KEY)
         .sortWithinPartitions(*order, *_EVENT_ORDER)
         .select(*cols, F.xxhash64("doc_id").alias("doc_key"))
     )
 
 
-def partition_folder(cfg: EngineConfig, with_base: bool = False):
-    """mapInPandas generator over :func:`prepared_events` output: slices
-    contiguous tile groups out of each Arrow batch (one tile = one numpy
-    slice, not one pandas DataFrame + one UDF invocation), carrying the
-    trailing partial group into the next batch.
+def partition_folder(cfg: EngineConfig, with_base: bool = False,
+                     schema: T.StructType = TILES_SCHEMA):
+    """mapInArrow body over :func:`prepared_events` output: each tile's
+    run of rows (:func:`key_runs`) is one numpy slice folded by
+    :func:`_fold_arrays` and encoded.
 
     ``with_base``: the input carries store rows (``prepared_events(...,
     store=...)``).  A tile with no events is skipped without a decode
     (it stays in the store); otherwise the events fold over the tile's
-    first — newest — base and its ``point_cnt`` adds on."""
-    _COLS = _FOLD_COLS + (_BASE_COLS if with_base else ())
+    first — newest — base and its ``point_cnt`` adds on.  Fields of
+    ``schema`` past :data:`TILES_SCHEMA`'s (the salted route's ``salt``)
+    are further key columns, copied to each output row."""
+    extra = schema.fieldNames()[len(TILES_SCHEMA.fields):]
+    names = _FOLD_COLS + tuple(extra) + (_BASE_COLS if with_base else ())
 
-    def finish(cols: dict, s: int, e: int) -> dict:
-        base, base_pc = None, 0
-        if with_base and cols["_src"][s] == 0:
-            base = decode_png(bytes(cols["png"][s]))
-            base_pc = int(cols["base_pc"][s])
-            s += int(np.searchsorted(cols["_src"][s:e], 1))
+    def fold_run(cols: dict, s: int, e: int) -> tuple | None:
+        s, base, base_pc = _run_base(cols, s, e)
+        if s == e:
+            return None
         canvas, point_cnt = _fold_arrays(cols, s, e, cfg, base)
-        return {
-            "z": int(cols["z"][s]), "tx": int(cols["tx"][s]),
-            "ty": int(cols["ty"][s]), "point_cnt": base_pc + point_cnt,
-            "n_events": e - s,
-            "n_docs": len(np.unique(cols["doc_key"][s:e])),
-            "png": encode_png(canvas),
-        }
+        return (int(cols["z"][s]), int(cols["tx"][s]), int(cols["ty"][s]),
+                base_pc + point_cnt, int(e - s),
+                len(np.unique(cols["doc_key"][s:e])), encode_png(canvas),
+                *(int(cols[c][s]) for c in extra))
 
-    def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: dict | None = None
-        for pdf in batches:
-            cols = {c: pdf[c].to_numpy() for c in _COLS}
-            if carry is not None:
-                cols = {c: np.concatenate([carry[c], cols[c]]) for c in _COLS}
-                carry = None
-            m = len(cols["z"])
-            if not m:
-                continue
-            keys = (cols["z"].astype(np.int64) << 40) \
-                 ^ (cols["tx"].astype(np.int64) << 20) \
-                 ^ cols["ty"].astype(np.int64)
-            # boundaries of contiguous (z,tx,ty) runs
-            change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [m]))
-            carry = {c: cols[c][starts[-1]:].copy() for c in _COLS}
-            starts, ends = starts[:-1], ends[:-1]
-            if with_base:
-                # base rows sort first: a run whose last row is a base
-                # row has no events
-                keep = cols["_src"][ends - 1] != 0
-                starts, ends = starts[keep], ends[keep]
-            out = [finish(cols, s, e) for s, e in zip(starts, ends)]
-            if out:
-                yield pd.DataFrame(out)
-        if carry is not None and len(carry["z"]) and (
-                not with_base or carry["_src"][-1] != 0):
-            yield pd.DataFrame([finish(carry, 0, len(carry["z"]))])
-
-    return fold_partition
+    return partial(_fold_runs, names=names, key=_TILE_KEY + extra,
+                   fold_run=fold_run, schema=schema)
 
 
 def _rasterize_partitions(events: DataFrame, cfg: EngineConfig,
                           store: DataFrame | None = None) -> DataFrame:
     """Shuffle + painter sort (prepared_events) → partition-sliced fold
     (partition_folder), over the store's newest base per tile when one
-    is given.  Same result as a per-tile groupBy().applyInPandas /
-    cogroup without the per-group pandas overhead."""
-    return prepared_events(events, cfg, store).mapInPandas(
+    is given.  Same result as a per-tile cogroup (:func:`_rasterize_cogroup`)
+    without a pandas call per tile."""
+    return prepared_events(events, cfg, store).mapInArrow(
         partition_folder(cfg, with_base=store is not None), TILES_SCHEMA)
 
 
@@ -812,7 +725,12 @@ def doc_salt_boundaries(events: DataFrame, buckets: int,
     return ids[step::step][: buckets - 1]
 
 
-def rasterize_salted(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+_PARTIAL_SCHEMA = T.StructType(TILES_SCHEMA.fields + [
+    T.StructField("salt", T.IntegerType(), False)])
+
+
+def rasterize_salted(events: DataFrame, cfg: EngineConfig,
+                     store: DataFrame | None = None) -> DataFrame:
     """Two-phase skew-safe render (speed-color mode only).
 
     Urban-corridor skew makes a handful of (z,tx,ty) groups carry most
@@ -824,6 +742,9 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     Phase B overlays the partials per tile in salt order.  Because salt
     ranges are contiguous in doc order and all draw ops are opaque
     writes, overlay-in-salt-order == the unsalted painter fold exactly.
+    Cold tiles take the unsalted fold.  With a ``store`` its rows ride
+    both routes' shuffles: the cold fold draws over each tile's newest
+    base, and phase B lays a hot tile's partials over it.
     Heatmap mode's skew path is _rasterize_heatmap_counts (hit-count
     merge) inside rasterize() — its low-zoom tiles commute, and its
     big-dot/circle zone sits at high zooms where tiles are small.
@@ -854,13 +775,10 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig) -> DataFrame:
                    | F.col("z").isNull()).collect())
     total_sampled = next((r["count"] for r in det if r["z"] is None), 0)
     hot_rows = [r for r in det if r["z"] is not None and r["ty"] is not None]
-    if not hot_rows:
-        return _rasterize_partitions(events, cfg)
-
-    bounds = doc_salt_boundaries(events, buckets,
-                                 est_count=total_sampled / det_frac)
+    bounds = hot_rows and doc_salt_boundaries(
+        events, buckets, est_count=total_sampled / det_frac)
     if not bounds:
-        return _rasterize_partitions(events, cfg)
+        return _rasterize_partitions(events, cfg, store)
 
     salt = F.lit(0)
     for b in bounds:
@@ -868,75 +786,58 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     key_col = (F.col("z").cast("long") * F.lit(1 << 48)
                + F.col("tx").cast("long") * F.lit(1 << 24)
                + F.col("ty").cast("long"))
-    hot_keys = [(r.z << 48) + (r.tx << 24) + r.ty for r in hot_rows]
+    hot = key_col.isin([(r.z << 48) + (r.tx << 24) + r.ty for r in hot_rows])
     # ONLY hot tiles pay the two-phase cost (partial canvases + overlay
     # merge); the cold majority keeps the single-pass fold with no extra
     # PNG decode/encode round-trip
-    cold = events.filter(~key_col.isin(hot_keys))
-    ev = events.filter(key_col.isin(hot_keys)).withColumn("salt", salt)
-
-    part = (
+    cold = _rasterize_partitions(events.filter(~hot), cfg,
+                                 None if store is None else store.filter(~hot))
+    ev = events.filter(hot).withColumn("salt", salt)
+    partials = (
         ev.repartition(_fold_partitions(ev, cfg), "z", "tx", "ty", "salt")
-        .sortWithinPartitions("z", "tx", "ty", "salt", "doc_id", "seg_order",
-                              "pt_idx", "etype")
+        .sortWithinPartitions("z", "tx", "ty", "salt", *_EVENT_ORDER)
+        .select(*_FOLD_COLS[:-1], "salt", F.xxhash64("doc_id").alias("doc_key"))
+        .mapInArrow(partition_folder(cfg, schema=_PARTIAL_SCHEMA),
+                    _PARTIAL_SCHEMA)
     )
+    hot_store = None if store is None else store.filter(hot)
+    return _merge_partials(partials, hot_store).unionByName(cold)
 
-    partial_schema = T.StructType(TILES_SCHEMA.fields + [
-        T.StructField("salt", T.IntegerType(), False)])
 
-    def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
+def _merge_partials(partials: DataFrame, store: DataFrame | None) -> DataFrame:
+    """Phase B of :func:`rasterize_salted`: one shuffle keyed by tile,
+    each tile's partial canvases in salt order, overlaid where painted —
+    over the tile's newest store base when ``store`` rows ride along.
+    point_cnt, n_events and n_docs add up over the salts (the salt
+    ranges hold disjoint docs); the base adds its point_cnt only."""
+    rel = partials.withColumnRenamed("png", "part_png")
+    names = ("z", "tx", "ty", "point_cnt", "n_events", "n_docs", "part_png")
+    order = list(_TILE_KEY)
+    if store is not None:
+        rel = _with_base_rows(rel, store)
+        names += _BASE_COLS
+        order += _base_first()
 
-        def finish(group: pd.DataFrame) -> dict:
-            canvas, point_cnt = _fold_tile(group, cfg, None)
-            return {
-                "z": int(group["z"].iloc[0]), "tx": int(group["tx"].iloc[0]),
-                "ty": int(group["ty"].iloc[0]), "point_cnt": point_cnt,
-                "n_events": len(group), "n_docs": group["doc_id"].nunique(),
-                "png": encode_png(canvas), "salt": int(group["salt"].iloc[0]),
-            }
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            keys = (pdf["z"].to_numpy().astype(np.int64) << 48) \
-                 ^ (pdf["tx"].to_numpy().astype(np.int64) << 28) \
-                 ^ (pdf["ty"].to_numpy().astype(np.int64) << 8) \
-                 ^ pdf["salt"].to_numpy().astype(np.int64)
-            change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            out = [finish(pdf.iloc[s:e]) for s, e in zip(starts[:-1], ends[:-1])]
-            carry = pdf.iloc[starts[-1]:ends[-1]].copy()
-            if out:
-                yield pd.DataFrame(out)
-        if carry is not None and len(carry):
-            yield pd.DataFrame([finish(carry)])
-
-    partials = part.mapInPandas(fold_partition, partial_schema)
-
-    def merge_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("salt")
-        canvas = decode_png(bytes(pdf["png"].iloc[0]))
-        for i in range(1, len(pdf)):
-            overlay = decode_png(bytes(pdf["png"].iloc[i]))
+    def merge_run(cols: dict, s: int, e: int) -> tuple | None:
+        s, base, base_pc = _run_base(cols, s, e)
+        if s == e:
+            return None
+        pngs = cols["part_png"]
+        canvas = decode_png(bytes(pngs[s])) if base is None else base
+        for i in range(s + (base is None), e):
+            overlay = decode_png(bytes(pngs[i]))
             mask = overlay[..., 3] != 0
             canvas[mask] = overlay[mask]
-        return pd.DataFrame([{
-            "z": int(pdf["z"].iloc[0]), "tx": int(pdf["tx"].iloc[0]),
-            "ty": int(pdf["ty"].iloc[0]),
-            "point_cnt": int(pdf["point_cnt"].sum()),
-            "n_events": int(pdf["n_events"].sum()),
-            "n_docs": int(pdf["n_docs"].sum()),
-            "png": encode_png(canvas),
-        }])
+        return (int(cols["z"][s]), int(cols["tx"][s]), int(cols["ty"][s]),
+                base_pc + int(cols["point_cnt"][s:e].sum()),
+                int(cols["n_events"][s:e].sum()),
+                int(cols["n_docs"][s:e].sum()), encode_png(canvas))
 
-    merged_hot = partials.groupBy("z", "tx", "ty").applyInPandas(
-        merge_tile, TILES_SCHEMA)
-    return merged_hot.unionByName(_rasterize_partitions(cold, cfg))
+    return (rel.repartition(*_TILE_KEY)
+            .sortWithinPartitions(*order, "salt")
+            .mapInArrow(partial(_fold_runs, names=names, key=_TILE_KEY,
+                                fold_run=merge_run, schema=TILES_SCHEMA),
+                        TILES_SCHEMA))
 
 
 class ZoomStats(NamedTuple):

@@ -7,11 +7,13 @@ of raw GPS points collapse to a handful of drawn vertices (the
 reference draws every point at every zoom, gpx2tiles.c:602-712 — at
 10^12 documents that is the first thing a real deployment would cap).
 
-Spark shape: `applyInPandas` per track key — DP is sequential WITHIN a
-track (the split recursion), but tracks are independent, so the operator
-parallelizes over the track key with one shuffle and O(track length)
-memory per group — the same per-group-sequential pattern as the parse
-stage's speed synthesis (SURVEY.md §2 R3).
+Spark shape: one shuffle on the track key, then a `mapInArrow` that
+takes each track's run of rows with the raster fold's run helper
+(`raster.key_runs`) — DP is sequential WITHIN a track (the split
+recursion), but tracks are independent, so the operator parallelizes
+over the track key with O(track length) memory per track — the same
+per-group-sequential pattern as the parse stage's speed synthesis
+(SURVEY.md §2 R3).
 
 Exactness: all geometry in IEEE doubles with ONE op tree — cross =
 dx·(py−ay) − dy·(px−ax), compared as cross² > eps²·len2 (no sqrt, no
@@ -23,9 +25,13 @@ both sides (np.argmax returns the first maximum).  Degenerate chords
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from .raster import key_runs
 
 OUT_SCHEMA = "user_id long, pid long"
 
@@ -75,45 +81,28 @@ def simplify_tracks(points: DataFrame, eps: float,
     numpy DP pass.
 
     Physical shape: repartition on the key + in-partition (key, order)
-    sort + a partition-sliced mapInPandas (the raster fold's pattern,
-    carry for runs split across Arrow batches) instead of
+    sort + a `mapInArrow` over each track's run of rows
+    (`raster.key_runs`: numpy views of the Arrow columns, a track split
+    across batches carried into the next) instead of
     groupBy().applyInPandas — per-group pandas/UDF invocation overhead
     was the whole cost at many small tracks (~15k groups × ~0.3 ms at
-    sf1), while a partition slice is just a numpy view."""
-    from typing import Iterator
-
+    sf1), while a run is just a numpy slice."""
     eps2 = float(eps) * float(eps)
-    cols = list(dict.fromkeys(
-        [key_col, id_col, x_col, y_col, *order_cols]))
-    part = (points.select(*cols)
+    names = list(dict.fromkeys([key_col, id_col, x_col, y_col]))
+    part = (points.select(*dict.fromkeys([*names, *order_cols]))
             .repartition(key_col)
             .sortWithinPartitions(key_col, *order_cols))
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for c, starts, ends in key_runs(batches, names, [key_col]):
+            x = np.asarray(c[x_col], np.float64)
+            y = np.asarray(c[y_col], np.float64)
+            keep = np.concatenate([_dp_keep(x[s:e], y[s:e], eps2)
+                                   for s, e in zip(starts, ends)])
+            idx = np.flatnonzero(keep)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.asarray(c[key_col][idx], np.int64)),
+                 pa.array(np.asarray(c[id_col][idx], np.int64))],
+                ["user_id", "pid"])
 
-        def finish(pdf: pd.DataFrame, s: int, e: int) -> pd.DataFrame:
-            sl = pdf.iloc[s:e]
-            keep = _dp_keep(sl[x_col].to_numpy(np.float64),
-                            sl[y_col].to_numpy(np.float64), eps2)
-            out = sl.iloc[np.flatnonzero(keep)][[key_col, id_col]]
-            return out.rename(columns={key_col: "user_id", id_col: "pid"})
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            keys = pdf[key_col].to_numpy()
-            change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            out = [finish(pdf, s, e) for s, e in zip(starts[:-1], ends[:-1])]
-            carry = pdf.iloc[starts[-1]:ends[-1]].copy()
-            if out:
-                yield pd.concat(out, ignore_index=True)
-        if carry is not None and len(carry):
-            yield finish(carry, 0, len(carry))
-
-    return part.mapInPandas(fold, OUT_SCHEMA)
+    return part.mapInArrow(fold, OUT_SCHEMA)

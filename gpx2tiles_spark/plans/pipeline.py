@@ -4,7 +4,7 @@ Physical shape (SURVEY.md §3.3 mirror):
   stage 1  parse      map-only (mapInPandas, zero shuffle)
   stage 2  pairing    window shuffle on (doc_id, seg_order)
   stage 3  explode    zoom × tile/pixel projection (narrow)
-  stage 4  rasterize  hash shuffle into (z, tx, ty) groups → pandas fold
+  stage 4  rasterize  hash shuffle into (z, tx, ty) groups → Arrow fold
   stage 5  sink       PNG writes in the fold's own tasks / parquet tile table
 
 Exactly two shuffles end-to-end.  `points` is persisted between the

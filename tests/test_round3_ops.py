@@ -365,7 +365,7 @@ def test_incremental_low_zoom_plan_has_no_cogroup(spark):
         plan = rasterize(ev2, cfg, store=store) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapCoGroupsInPandas" not in plan
-        assert "MapInPandas" in plan  # the partition-sliced fold
+        assert "MapInArrow" in plan  # the partition-sliced fold
 
 
 def test_incremental_pdop_zone_uses_base_canvas(spark):

@@ -244,7 +244,7 @@ def run_once(cpus: int, n_docs: int, master: str | None = None) -> dict:
 
     def fold_only():
         spark.read.parquet(folddir) \
-            .mapInPandas(partition_folder(cfg), TILES_SCHEMA) \
+            .mapInArrow(partition_folder(cfg), TILES_SCHEMA) \
             .agg(F.count("*")).collect()
 
     fold_sec, fold_ext, fold_cpu = _timed(fold_only)

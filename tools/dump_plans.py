@@ -133,9 +133,10 @@ SECTIONS: list[tuple[str, str, str]] = [
      "single-pass fix over the d-branch union), probes broadcast the "
      "≤1024-row sketch onto the distinct keys."),
     ("track_simplify_dp", "track_simplify_dp",
-     "Douglas–Peucker (round-5): ONE Exchange on the track key + one "
-     "FlatMapGroupsInPandas — sequential recursion inside a track, "
-     "parallel across tracks, O(track length) memory per group."),
+     "Douglas–Peucker: ONE Exchange on the track key + an in-partition "
+     "sort + one MapInArrow slicing each track's run of rows — "
+     "sequential recursion inside a track, parallel across tracks, "
+     "O(track length) memory per track."),
     ("tfidf_topterms", "tfidf_topterms",
      "tf·idf keywords (round-5): explode → (doc,word) tf groupBy → "
      "word df groupBy, word-keyed shuffles (the inverted-index "
@@ -177,7 +178,8 @@ SECTIONS: list[tuple[str, str, str]] = [
 ]
 
 COUNT_KEYS = ["exchanges", "reused_exchanges", "arrow_evals",
-              "map_in_pandas", "broadcast_hash_joins", "sort_merge_joins",
+              "map_in_pandas", "map_in_arrow", "broadcast_hash_joins",
+              "sort_merge_joins",
               "nested_loop_or_cartesian", "codegen_spans"]
 
 
@@ -197,6 +199,7 @@ def plan_counts(plan: str) -> dict[str, int]:
         "reused_exchanges": tree.count("ReusedExchange "),
         "arrow_evals": tree.count("ArrowEvalPython "),
         "map_in_pandas": tree.count("MapInPandas "),
+        "map_in_arrow": tree.count("MapInArrow "),
         "broadcast_hash_joins": tree.count("BroadcastHashJoin "),
         "sort_merge_joins": tree.count("SortMergeJoin "),
         "nested_loop_or_cartesian": (tree.count("BroadcastNestedLoopJoin")
