@@ -59,7 +59,6 @@ class EngineConfig:
     diag_highlight_cross: bool = False  # -d 2: magenta cross-tile lines
     diag_speed_text: bool = False       # -d 4: first-point speed text per tile
     # physical knobs (no reference analog — Spark-side)
-    shuffle_partitions: int = 32
     # partition count for the shuffles feeding the Python raster fold;
     # None = the session's spark.sql.shuffle.partitions.  Callers that
     # KNOW the batch volume (e.g. the incremental TileStore, whose

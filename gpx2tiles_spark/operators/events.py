@@ -50,6 +50,7 @@ ET_LINE = 4
 
 EVENT_COLS = ["z", "tx", "ty", "doc_id", "seg_order", "pt_idx", "etype",
               "x1", "y1", "x2", "y2", "color"]
+_KEY = EVENT_COLS[:6]  # an event's tile and painter-order columns
 
 
 def _turn(p1x, p1y, p2x, p2y, p3x, p3y) -> Column:
@@ -207,7 +208,7 @@ def build_events(points: DataFrame, cfg: EngineConfig) -> DataFrame:
     branches doing nothing.  Same rows by construction; the full-range
     render keeps every branch."""
     zmax = max(cfg.zooms())
-    lines_possible = (not cfg.heatmap) and zmax >= cfg.z_no_lines
+    lines_possible = _lines_possible(cfg)
     wpts_possible = zmax > cfg.z_no_wpts
     # _pdop_events emits PDOP rows only at z >= PDOP_MIN_Z, plus -d1
     # shadows at EVERY zoom
@@ -217,21 +218,7 @@ def build_events(points: DataFrame, cfg: EngineConfig) -> DataFrame:
     # the expensive inverse-Mercator PIXEL projection stays deferred per
     # branch so it runs on exactly the rows that need it (stamps: cur
     # endpoint on all rows; line branches: prev endpoint post-filter)
-
-    color = (F.lit(-1) if cfg.heatmap else point_color_col(cfg)).alias("color")
-    key = [F.col("z"), F.col("tx"), F.col("ty"), F.col("doc_id"),
-           F.col("seg_order"), F.col("pt_idx")]
-
-    # -H sets z_no_lines = INT_MAX, so heatmap mode NEVER draws lines
-    # (gpx2tiles.c:976,730,663) — the line branches are skipped entirely
-    can_line = (
-        F.lit(not cfg.heatmap)
-        & F.col("prev_lat").isNotNull()
-        & (F.col("z") >= F.lit(cfg.z_no_lines))
-        & ~((F.col("flags").bitwiseAND(F.lit(8)) != 0)
-            & (F.col("speed") * F.lit(3.6) < F.lit(cfg.no_lines_speed_kph)))
-    )
-    same_tile = (F.col("tx") == F.col("p_tx")) & (F.col("ty") == F.col("p_ty"))
+    color, can_line, same_tile = _trk_gates(cfg)
 
     if lines_possible:
         # cross-tile: explode the tile rectangle between the endpoint
@@ -261,49 +248,16 @@ def build_events(points: DataFrame, cfg: EngineConfig) -> DataFrame:
             F.col("lx2").alias("x2"), F.col("ly2").alias("y2"), cl_color,
         )
 
-    if lines_possible and not cfg.diag_shadows:
-        # FUSED single pass: stamps + same-tile lines + PDOP rows emitted
-        # from ONE conditional-array explode over the windowed projection.
-        # The branch-per-relation union re-executed the zoom explode, the
-        # tile trig and the shared-window read once per branch (exchange
-        # reuse notwithstanding) — measured 1.6× on the full-pyramid
-        # event build.  when()/array()/concat()/explode() all stay inside
-        # whole-stage codegen, and when() evaluates a branch's pixel
-        # projection only on rows whose gate passes — unlike the
-        # transform/filter HOF variant, which is interpreted and was
-        # measured slower.  Row multiset is provably identical to the
-        # branch union (exceptAll == ∅ both ways; the painter sort in
-        # prepared_events fixes intra-tile order downstream either way).
-        out = _fused_trk_events(trk, cfg, color, can_line, same_tile,
-                                pdop_possible)
+    # FUSED single pass where its gates apply (speed mode with lines, no
+    # -d1 shadows); explicit branches for heatmap / diagnostic modes.
+    # Same row multiset either way (a standing test compares the two
+    # with exceptAll both ways); the painter sort in prepared_events
+    # fixes intra-tile order downstream.
+    trk_events = (_fused_trk_events if lines_possible and not cfg.diag_shadows
+                  else _explicit_trk_events)
+    out = trk_events(trk, cfg, color, can_line, same_tile, pdop_possible)
+    if lines_possible:
         out = out.unionByName(cross_lines)
-    else:
-        # explicit branches off the SAME windowed projection (Spark
-        # reuses the window exchange across them) — kept for heatmap /
-        # diagnostic modes, where the fused gates don't apply
-        # --- stamps (gpx2tiles.c:627-654): every track point, every zoom
-        stamps = with_pixel(trk).select(
-            *key, F.lit(ET_STAMP).alias("etype"),
-            F.col("px").alias("x1"), F.col("py").alias("y1"),
-            F.lit(0).alias("x2"), F.lit(0).alias("y2"), color,
-        )
-        if not lines_possible:
-            out = stamps  # line gates provably never pass in this range
-        else:
-            # gd draws pix -> ppix in the same-tile branch (gpx2tiles.c:671)
-            same_src = with_pixel(with_pixel(trk.filter(can_line & same_tile)),
-                                  lat="prev_lat", lon="prev_lon", prefix="p_")
-            same_lines = same_src.filter(
-                (F.col("px") != F.col("p_px")) | (F.col("py") != F.col("p_py"))
-            ).select(
-                *key, F.lit(ET_LINE).alias("etype"),
-                F.col("px").alias("x1"), F.col("py").alias("y1"),
-                F.col("p_px").alias("x2"), F.col("p_py").alias("y2"), color,
-            )
-            out = stamps.unionByName(same_lines).unionByName(cross_lines)
-        if pdop_possible:
-            out = out.unionByName(_pdop_events(with_pixel(trk), cfg, color)
-                                  .select(*out.columns))
 
     # --- waypoints (F5): stamps + circles only at z > z_no_wpts
     if wpts_possible or cfg.diag_speed_text:
@@ -312,24 +266,65 @@ def build_events(points: DataFrame, cfg: EngineConfig) -> DataFrame:
             F.col("z") > F.lit(cfg.z_no_wpts)
         )
     if wpts_possible:
-        key = [F.col("z"), F.col("tx"), F.col("ty"), F.col("doc_id"),
-               F.col("seg_order"), F.col("pt_idx")]
-        wpt_color = (F.lit(-1) if cfg.heatmap
-                     else point_color_col(cfg)).alias("color")
-        wpt_stamps = wz.select(
-            *key, F.lit(ET_STAMP).alias("etype"),
-            F.col("px").alias("x1"), F.col("py").alias("y1"),
-            F.lit(0).alias("x2"), F.lit(0).alias("y2"), wpt_color,
-        )
-        out = out.unionByName(wpt_stamps.select(*out.columns)) \
+        out = out.unionByName(_stamps(wz, color).select(*out.columns)) \
                  .unionByName(_wpt_circles(wz, cfg).select(*out.columns))
         if pdop_possible:
             out = out.unionByName(
-                _pdop_events(wz, cfg, wpt_color).select(*out.columns))
+                _pdop_events(wz, cfg, color).select(*out.columns))
     if cfg.diag_speed_text:
         out = out.unionByName(
             _speed_text_events(with_pixel(trk), wz, cfg).select(*out.columns))
     return out
+
+
+def _lines_possible(cfg: EngineConfig) -> bool:
+    # -H sets z_no_lines = INT_MAX, so heatmap mode NEVER draws lines
+    # (gpx2tiles.c:976,730,663)
+    return (not cfg.heatmap) and max(cfg.zooms()) >= cfg.z_no_lines
+
+
+def _trk_gates(cfg: EngineConfig) -> tuple[Column, Column, Column]:
+    """(color, can_line, same_tile) over :func:`with_pair_tiles` rows."""
+    color = (F.lit(-1) if cfg.heatmap else point_color_col(cfg)).alias("color")
+    can_line = (
+        F.lit(not cfg.heatmap)
+        & F.col("prev_lat").isNotNull()
+        & (F.col("z") >= F.lit(cfg.z_no_lines))
+        & ~((F.col("flags").bitwiseAND(F.lit(8)) != 0)
+            & (F.col("speed") * F.lit(3.6) < F.lit(cfg.no_lines_speed_kph)))
+    )
+    same_tile = (F.col("tx") == F.col("p_tx")) & (F.col("ty") == F.col("p_ty"))
+    return color, can_line, same_tile
+
+
+def _explicit_trk_events(trk: DataFrame, cfg: EngineConfig, color,
+                         can_line, same_tile, pdop_possible: bool
+                         ) -> DataFrame:
+    """Stamps + same-tile lines (+ PDOP ellipses, and -d1 shadows) as a
+    union of branches off the SAME windowed projection (Spark reuses the
+    window exchange across them) — kept for heatmap / diagnostic modes,
+    where the fused gates of :func:`_fused_trk_events` don't apply."""
+    out = _stamps(with_pixel(trk), color)
+    if _lines_possible(cfg):  # else the line gates provably never pass
+        # gd draws pix -> ppix in the same-tile branch (gpx2tiles.c:671)
+        same = with_pixel(with_pixel(trk.filter(can_line & same_tile)),
+                          lat="prev_lat", lon="prev_lon", prefix="p_")
+        out = out.unionByName(same.filter(
+            (F.col("px") != F.col("p_px")) | (F.col("py") != F.col("p_py"))
+        ).select(*_KEY, F.lit(ET_LINE).alias("etype"),
+                 F.col("px").alias("x1"), F.col("py").alias("y1"),
+                 F.col("p_px").alias("x2"), F.col("p_py").alias("y2"), color))
+    if pdop_possible:
+        out = out.unionByName(_pdop_events(with_pixel(trk), cfg, color)
+                              .select(*out.columns))
+    return out
+
+
+def _stamps(pix: DataFrame, color) -> DataFrame:
+    """Stamps (gpx2tiles.c:627-654): every point, every zoom."""
+    return pix.select(*_KEY, F.lit(ET_STAMP).alias("etype"),
+                      F.col("px").alias("x1"), F.col("py").alias("y1"),
+                      F.lit(0).alias("x2"), F.lit(0).alias("y2"), color)
 
 
 _EVENT_STRUCT_T = "array<struct<etype:int,x1:int,y1:int,x2:int,y2:int,color:int>>"
@@ -340,10 +335,18 @@ def _fused_trk_events(trk: DataFrame, cfg: EngineConfig, color,
     """Stamps + same-tile lines (+ PDOP ellipses) from ONE pass over the
     windowed/zoom-exploded track projection: each row emits a 1-3 element
     event array (stamp always; line/PDOP behind their gates) and one
-    explode fans it out.  Field-for-field the same expressions as the
-    explicit branches: cur pixel = with_pixel, prev pixel = the exact
-    p_-prefixed pixel_cols over (p_tx, p_ty), gates identical — only the
-    number of passes over the shared subtree changes."""
+    explode fans it out.  Field-for-field the same expressions as
+    :func:`_explicit_trk_events`: cur pixel = with_pixel, prev pixel =
+    the exact p_-prefixed pixel_cols over (p_tx, p_ty), gates identical —
+    only the number of passes over the shared subtree changes.
+
+    The branch-per-relation union re-executed the zoom explode, the tile
+    trig and the shared-window read once per branch (exchange reuse
+    notwithstanding) — measured 1.6× on the full-pyramid event build.
+    when()/array()/concat()/explode() all stay inside whole-stage
+    codegen, and when() evaluates a branch's pixel projection only on
+    rows whose gate passes — unlike the transform/filter HOF variant,
+    which is interpreted and was measured slower."""
     base = with_pixel(trk).withColumn("color", color)
     ppx, ppy = P.pixel_cols(F.col("prev_lon"), F.col("prev_lat"),
                             F.col("p_tx"), F.col("p_ty"), F.col("z"))
@@ -370,10 +373,9 @@ def _fused_trk_events(trk: DataFrame, cfg: EngineConfig, color,
         arrays.append(F.when(pdop_gate, F.array(
             ev(ET_PDOP, F.col("px"), F.col("py"),
                F.floor(F.col("pdop") * F.lit(3.0)), F.lit(0)))).otherwise(empty))
-    return (base.select("z", "tx", "ty", "doc_id", "seg_order", "pt_idx",
-                        F.explode(F.concat(*arrays)).alias("e"))
-            .select("z", "tx", "ty", "doc_id", "seg_order", "pt_idx",
-                    "e.etype", "e.x1", "e.y1", "e.x2", "e.y2", "e.color"))
+    return (base.select(*_KEY, F.explode(F.concat(*arrays)).alias("e"))
+            .select(*_KEY, "e.etype", "e.x1", "e.y1", "e.x2", "e.y2",
+                    "e.color"))
 
 
 def _pdop_events(pts: DataFrame, cfg: EngineConfig, color) -> DataFrame:
@@ -393,8 +395,7 @@ def _pdop_events(pts: DataFrame, cfg: EngineConfig, color) -> DataFrame:
         & (F.col("flags").bitwiseAND(F.lit(64)) != 0)
         & (F.col("pdop") > F.lit(PDOP_THRESHOLD))
     )
-    key = [F.col("z"), F.col("tx"), F.col("ty"), F.col("doc_id"),
-           F.col("seg_order"), F.col("pt_idx"), F.lit(ET_PDOP).alias("etype"),
+    key = [*_KEY, F.lit(ET_PDOP).alias("etype"),
            F.col("px").alias("x1"), F.col("py").alias("y1")]
     out = pts.filter(pdop_cond).select(
         *key,
@@ -421,8 +422,7 @@ def _speed_text_events(trk_pix: DataFrame, wpt_pix: DataFrame,
     the dot removed ('12.3' → 123); Java's and C's %.1f both round the
     binary double to nearest decimal (ties differ only on exact halves,
     which the speed chain does not produce)."""
-    cols = ["z", "tx", "ty", "doc_id", "seg_order", "pt_idx", "px", "py",
-            "speed"]
+    cols = [*_KEY, "px", "py", "speed"]
     u = trk_pix.select(*cols).unionByName(wpt_pix.select(*cols))
     first = u.groupBy("z", "tx", "ty").agg(
         F.min(F.struct(*[F.col(c) for c in

@@ -8,7 +8,9 @@ gpx2tiles.c:277-381, disappears).  Every fold here — the speed fold
 route's per-salt fold and merge, and ``simplify.simplify_tracks`` — is
 a ``mapInArrow`` over key-sorted record batches that takes its runs of
 equal key from one helper, :func:`key_runs` (numpy views of the Arrow
-columns, no pandas, no call per tile).
+columns, no pandas, no call per tile).  A render into a directory writes
+each tile from the worker that folds it (:func:`_fold_stage`), so the
+PNG bytes never return to the JVM.
 
 Incremental mode (S5/J3) sends the store's rows through each route's
 own tile shuffle: within a tile the base rows sort first (newest
@@ -22,6 +24,7 @@ vectorized (last-writer-wins preserved by numpy assignment order).
 
 from __future__ import annotations
 
+import os
 from functools import partial
 from typing import Iterable, Iterator, NamedTuple, Sequence
 
@@ -312,7 +315,8 @@ def _canvas_read_z(cfg: EngineConfig) -> int:
 
 
 def rasterize(events: DataFrame, cfg: EngineConfig,
-              store: DataFrame | None = None) -> DataFrame:
+              store: DataFrame | None = None,
+              out_dir: str | None = None) -> DataFrame:
     """events (+ optional existing tile store) → tiles.
 
     ``store`` holds (z, tx, ty, png) and optionally ``point_cnt`` (added
@@ -333,6 +337,9 @@ def rasterize(events: DataFrame, cfg: EngineConfig,
     - ``salt_buckets > 0`` (speed mode): below the split the salted
       two-phase render for hot tiles (:func:`rasterize_salted`), at or
       above it the fold.
+
+    With ``out_dir`` each route's final fold worker writes its tiles
+    (:func:`_fold_stage`) and the result is per-zoom stats rows.
     """
     # -d1 shadows alpha-blend an ellipse on EVERY point (reads canvas at
     # every zoom) and -d4 text breaks the heatmap pure-stamp premise —
@@ -347,7 +354,7 @@ def rasterize(events: DataFrame, cfg: EngineConfig,
     # side of the canvas-reading split
     if (diag_sequential or min(zooms) >= split
             or not (cfg.heatmap or cfg.salt_buckets > 0)):
-        return _rasterize_partitions(events, cfg, store)
+        return _rasterize_partitions(events, cfg, store, out_dir)
     low_ev, high_ev = events, None
     low_store = high_store = store
     if max(zooms) >= split:
@@ -355,11 +362,12 @@ def rasterize(events: DataFrame, cfg: EngineConfig,
         low_ev, high_ev = events.filter(below), events.filter(above)
         if store is not None:
             low_store, high_store = store.filter(below), store.filter(above)
-    low = (_rasterize_heatmap_counts(low_ev, cfg, low_store) if cfg.heatmap
-           else rasterize_salted(low_ev, cfg, low_store))
+    low = (_rasterize_heatmap_counts if cfg.heatmap else rasterize_salted)(
+        low_ev, cfg, low_store, out_dir)
     if high_ev is None:
         return low
-    return low.unionByName(_rasterize_partitions(high_ev, cfg, high_store))
+    return low.unionByName(
+        _rasterize_partitions(high_ev, cfg, high_store, out_dir))
 
 
 def latest_tiles(store: DataFrame) -> DataFrame:
@@ -408,7 +416,8 @@ def _rasterize_cogroup(events: DataFrame, cfg: EngineConfig,
 
 
 def _rasterize_heatmap_counts(events: DataFrame, cfg: EngineConfig,
-                              store: DataFrame | None = None) -> DataFrame:
+                              store: DataFrame | None = None,
+                              out_dir: str | None = None) -> DataFrame:
     """Relational heatmap render for the pure-stamp zoom zone.
 
     Plan: hash aggregate on (z,tx,ty,x1,y1) with map-side partial
@@ -444,11 +453,11 @@ def _rasterize_heatmap_counts(events: DataFrame, cfg: EngineConfig,
                 base_pc + total, total, int(cols["n_docs"][s]),
                 encode_png(canvas))
 
-    return (rel.repartition(_fold_partitions(counts, cfg), *_TILE_KEY)
-            .sortWithinPartitions(*order)
-            .mapInArrow(partial(_fold_runs, names=names, key=_TILE_KEY,
-                                fold_run=fold_run, schema=TILES_SCHEMA),
-                        TILES_SCHEMA))
+    return _fold_stage(
+        rel.repartition(_fold_partitions(counts, cfg), *_TILE_KEY)
+        .sortWithinPartitions(*order),
+        partial(_fold_runs, names=names, key=_TILE_KEY, fold_run=fold_run,
+                schema=TILES_SCHEMA), out_dir)
 
 
 # Target rows per Python-fold task (the incremental store's measured
@@ -458,27 +467,33 @@ _FOLD_TARGET_ROWS = 20_000
 
 
 def _cached_rowcount_estimate(df: DataFrame) -> int | None:
-    """Largest MATERIALIZED cached-relation row count inside ``df``'s
+    """Row count of the MATERIALIZED cache that is every leaf of ``df``'s
     optimized logical plan (a py4j plan walk — no job).  The render's
     input is a persisted points relation the caller typically counted
-    already; when that cache is visible its row count lets the fold
-    shuffle be sized from actual input volume instead of the session
-    constant (guide §2: derive partitioning from input size).  Returns
-    None when no materialized cache is in the plan (e.g. a cold full-
-    scale run) — callers keep the session setting."""
+    already; its row count lets the fold shuffle be sized from actual
+    input volume instead of the session constant (guide §2: derive
+    partitioning from input size).  None when the plan reads anything
+    else — no cache (a cold full-scale run), two caches, or a small
+    cache joined to an uncached scan — callers keep the session value."""
     try:
-        best = None
+        system = df.sparkSession.sparkContext._jvm.java.lang.System
+        caches, rows = set(), None
         stack = [df._jdf.queryExecution().optimizedPlan()]
         while stack:
             p = stack.pop()
             if p.getClass().getSimpleName() == "InMemoryRelation":
                 rc = p.stats().rowCount()
-                if rc.isDefined():
-                    best = max(best or 0, int(str(rc.get())))
+                if not rc.isDefined():
+                    return None
+                # every use of one cache shares its builder object
+                caches.add(system.identityHashCode(p.cacheBuilder()))
+                rows = int(str(rc.get()))
+            elif p.children().isEmpty():
+                return None
             it = p.children().iterator()
             while it.hasNext():
                 stack.append(it.next())
-        return best
+        return rows if len(caches) == 1 else None
     except Exception:  # plan shapes we don't know — never fail the plan
         return None
 
@@ -491,8 +506,8 @@ def _fold_partitions(df: DataFrame, cfg: EngineConfig | None = None) -> int:
     coalesced hot-corridor partitions become the wall-time floor
     (measured: top partitions 8× the mean on the skewed corpus).
     ``cfg.fold_partitions`` overrides for callers that know the batch
-    volume (see EngineConfig); otherwise, when the event relation sits
-    on a materialized points cache, the count is derived from its row
+    volume (see EngineConfig); otherwise, when the event relation reads
+    only a materialized points cache, the count is derived from its row
     count × zoom fan-out at ~:data:`_FOLD_TARGET_ROWS` rows/task,
     floored at the cluster's defaultParallelism (never fewer than one
     task per core) and capped at the session shuffle-partition setting
@@ -637,13 +652,15 @@ def partition_folder(cfg: EngineConfig, with_base: bool = False,
 
 
 def _rasterize_partitions(events: DataFrame, cfg: EngineConfig,
-                          store: DataFrame | None = None) -> DataFrame:
+                          store: DataFrame | None = None,
+                          out_dir: str | None = None) -> DataFrame:
     """Shuffle + painter sort (prepared_events) → partition-sliced fold
     (partition_folder), over the store's newest base per tile when one
     is given.  Same result as a per-tile cogroup (:func:`_rasterize_cogroup`)
     without a pandas call per tile."""
-    return prepared_events(events, cfg, store).mapInArrow(
-        partition_folder(cfg, with_base=store is not None), TILES_SCHEMA)
+    return _fold_stage(prepared_events(events, cfg, store),
+                       partition_folder(cfg, with_base=store is not None),
+                       out_dir)
 
 
 PIXELS_SCHEMA = T.StructType([
@@ -730,7 +747,8 @@ _PARTIAL_SCHEMA = T.StructType(TILES_SCHEMA.fields + [
 
 
 def rasterize_salted(events: DataFrame, cfg: EngineConfig,
-                     store: DataFrame | None = None) -> DataFrame:
+                     store: DataFrame | None = None,
+                     out_dir: str | None = None) -> DataFrame:
     """Two-phase skew-safe render (speed-color mode only).
 
     Urban-corridor skew makes a handful of (z,tx,ty) groups carry most
@@ -744,7 +762,8 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig,
     writes, overlay-in-salt-order == the unsalted painter fold exactly.
     Cold tiles take the unsalted fold.  With a ``store`` its rows ride
     both routes' shuffles: the cold fold draws over each tile's newest
-    base, and phase B lays a hot tile's partials over it.
+    base, and phase B lays a hot tile's partials over it.  With
+    ``out_dir`` the cold fold and phase B write the tiles.
     Heatmap mode's skew path is _rasterize_heatmap_counts (hit-count
     merge) inside rasterize() — its low-zoom tiles commute, and its
     big-dot/circle zone sits at high zooms where tiles are small.
@@ -778,7 +797,7 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig,
     bounds = hot_rows and doc_salt_boundaries(
         events, buckets, est_count=total_sampled / det_frac)
     if not bounds:
-        return _rasterize_partitions(events, cfg, store)
+        return _rasterize_partitions(events, cfg, store, out_dir)
 
     salt = F.lit(0)
     for b in bounds:
@@ -791,7 +810,8 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig,
     # merge); the cold majority keeps the single-pass fold with no extra
     # PNG decode/encode round-trip
     cold = _rasterize_partitions(events.filter(~hot), cfg,
-                                 None if store is None else store.filter(~hot))
+                                 None if store is None else store.filter(~hot),
+                                 out_dir)
     ev = events.filter(hot).withColumn("salt", salt)
     partials = (
         ev.repartition(_fold_partitions(ev, cfg), "z", "tx", "ty", "salt")
@@ -801,10 +821,11 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig,
                     _PARTIAL_SCHEMA)
     )
     hot_store = None if store is None else store.filter(hot)
-    return _merge_partials(partials, hot_store).unionByName(cold)
+    return _merge_partials(partials, hot_store, out_dir).unionByName(cold)
 
 
-def _merge_partials(partials: DataFrame, store: DataFrame | None) -> DataFrame:
+def _merge_partials(partials: DataFrame, store: DataFrame | None,
+                    out_dir: str | None = None) -> DataFrame:
     """Phase B of :func:`rasterize_salted`: one shuffle keyed by tile,
     each tile's partial canvases in salt order, overlaid where painted —
     over the tile's newest store base when ``store`` rows ride along.
@@ -833,11 +854,10 @@ def _merge_partials(partials: DataFrame, store: DataFrame | None) -> DataFrame:
                 int(cols["n_events"][s:e].sum()),
                 int(cols["n_docs"][s:e].sum()), encode_png(canvas))
 
-    return (rel.repartition(*_TILE_KEY)
-            .sortWithinPartitions(*order, "salt")
-            .mapInArrow(partial(_fold_runs, names=names, key=_TILE_KEY,
-                                fold_run=merge_run, schema=TILES_SCHEMA),
-                        TILES_SCHEMA))
+    return _fold_stage(
+        rel.repartition(*_TILE_KEY).sortWithinPartitions(*order, "salt"),
+        partial(_fold_runs, names=names, key=_TILE_KEY, fold_run=merge_run,
+                schema=TILES_SCHEMA), out_dir)
 
 
 class ZoomStats(NamedTuple):
@@ -846,14 +866,20 @@ class ZoomStats(NamedTuple):
     points: int
 
 
-def _write_tiles(out_dir: str, batches):
-    """mapInArrow body of :func:`write_tile_pyramid`.  Module-level, so
-    the worker that unpickles it imports this package (and with it the
-    worker zip cache, see ``gpx2tiles_spark/_zipcache.py``)."""
-    import os
+def _fold_stage(rel: DataFrame, fold, out_dir: str | None) -> DataFrame:
+    """``rel.mapInArrow(fold)`` for a :func:`_fold_runs` body yielding
+    tiles.  With ``out_dir`` the same Python worker writes each tile it
+    folds and the stage yields per-zoom stats: no PNG goes to the JVM."""
+    if out_dir is None:
+        return rel.mapInArrow(fold, TILES_SCHEMA)
+    return rel.mapInArrow(lambda batches: _write_tiles(out_dir, fold(batches)),
+                          "z int, tiles long, points long")
 
-    import pyarrow as pa
 
+def _write_tiles(out_dir: str, batches: Iterable[pa.RecordBatch]):
+    """Tile batches → ``{out_dir}/{z}/{tx}/{ty}.png`` with tmp+rename
+    (atomic per tile, like flush_tile gpx2tiles.c:312-348), each
+    directory made once per task → the task's per-zoom counts."""
     made: set[str] = set()
     stats: dict[int, list[int]] = {}
     for b in batches:
@@ -872,27 +898,6 @@ def _write_tiles(out_dir: str, batches):
             s[0] += 1
             s[1] += pc
     if stats:
-        zs = sorted(stats)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(zs, pa.int32()),
-             pa.array([stats[z][0] for z in zs], pa.int64()),
-             pa.array([stats[z][1] for z in zs], pa.int64())],
-            ["z", "tiles", "points"])
-
-
-def write_tile_pyramid(tiles: DataFrame, out_dir: str) -> list[ZoomStats]:
-    """Filesystem sink: ``{out_dir}/{z}/{tx}/{ty}.png`` with tmp+rename
-    (atomic per tile, like flush_tile gpx2tiles.c:312-348), written by
-    the task that folds the tiles (a ``mapInArrow`` over the tile rows,
-    one job, no driver collect of tiles).  Each task creates a directory
-    once and returns its per-zoom tile and point counts, summed here
-    into one row per zoom."""
-    totals: dict[int, list[int]] = {}
-    for r in (tiles.select("z", "tx", "ty", "point_cnt", "png")
-              .mapInArrow(partial(_write_tiles, out_dir),
-                          "z int, tiles long, points long")
-              .collect()):
-        s = totals.setdefault(r.z, [0, 0])
-        s[0] += r.tiles
-        s[1] += r.points
-    return [ZoomStats(z, *totals[z]) for z in sorted(totals)]
+        yield pa.record_batch({"z": pa.array(list(stats), pa.int32()),
+                               "tiles": [t for t, _ in stats.values()],
+                               "points": [p for _, p in stats.values()]})

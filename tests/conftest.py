@@ -26,3 +26,11 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+def assert_same_multiset(a, b) -> None:
+    """Two DataFrames hold the same rows, duplicates counted: exceptAll
+    is empty both ways."""
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+

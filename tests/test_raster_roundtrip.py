@@ -79,7 +79,7 @@ def test_fs_store_as_incremental_base(spark, tmp_path):
     2 over it — equals the one-shot render (the reference's actual
     incremental mode over {z}/{x}/{y}.png)."""
     from gpx2tiles_spark.operators.events import build_events
-    from gpx2tiles_spark.operators.raster import rasterize, write_tile_pyramid
+    from gpx2tiles_spark.operators.raster import rasterize
     from gpx2tiles_spark.pngcodec import decode_png
 
     cfg = EngineConfig(zoom_min=3, zoom_max=6)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import importlib
 import os
+import re
 import sys
 import zipfile
 import zipimport
@@ -24,6 +25,7 @@ from gpx2tiles_spark.operators.raster import rasterize
 from gpx2tiles_spark.plans.pipeline import render_pyramid
 from gpx2tiles_spark.pngcodec import decode_png
 from gpx2tiles_spark.sources.gpxfiles import read_gpx_file_list
+from gpx2tiles_spark.sources.tilestore import read_tile_pyramid
 
 _ZIP_MODULES = ("zc_mod_a", "zc_mod_b", "zc_pkg", "zc_pkg.sub", "zc_pkg.extra")
 
@@ -142,36 +144,77 @@ def test_cli_render_job_count(spark, tmp_path):
     assert n_jobs == 6
 
 
-def test_render_out_dir_one_pass(spark, tmp_path):
-    """render_pyramid(out_dir=…) writes exactly rasterize()'s tiles, keeps
-    nothing cached, and returns per-zoom stats equal to a groupBy."""
-    cfg = EngineConfig(zoom_min=3, zoom_max=9)
-    docs = generate_documents(spark, 12, partitions=3)
-    out = str(tmp_path / "pyr")
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    res = render_pyramid(docs, cfg, out_dir=out)
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert set(jsc.getPersistentRDDs().keys()) == before
-    assert res.points is None
+def _run_arrow_nodes(spark, fn):
+    """fn()'s result and the number of MapInArrow nodes in the executed
+    physical plan of the last SQL execution it ran."""
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = execs.apply(execs.size() - 1).physicalPlanDescription()
+    # the node tree ends at the first blank line; AQE prints the plan it
+    # ran first and its initial plan after
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
+    return out, len(re.findall(r"\bMapInArrow \(\d+\)", tree))
 
-    tiles = rasterize(build_events(parse_documents(docs), cfg), cfg)
-    want = {(r.z, r.tx, r.ty): bytes(r.png) for r in tiles.collect()}
+
+def _read_tree(root) -> dict:
     got = {}
-    for d, _, files in os.walk(out):
+    for d, _, files in os.walk(root):
         for f in files:
             assert f.endswith(".png"), f  # no temporary file left behind
-            z, tx = (int(p) for p in os.path.relpath(d, out).split(os.sep))
+            z, tx = (int(p) for p in os.path.relpath(d, root).split(os.sep))
             with open(os.path.join(d, f), "rb") as fh:
                 got[(z, tx, int(f[:-4]))] = fh.read()
-    assert set(got) == set(want)
-    for k, png in want.items():
-        assert decode_png(got[k]).tobytes() == decode_png(png).tobytes(), k
+    return got
 
-    by_zoom = (tiles.groupBy("z")
-               .agg(F.count("*").alias("tiles"),
-                    F.sum("point_cnt").alias("points"))
-               .orderBy("z").collect())
-    assert [tuple(s) for s in res.zoom_stats] == \
-        [(r.z, r.tiles, r.points) for r in by_zoom]
+
+def test_render_out_dir_one_pass(spark, tmp_path):
+    """render_pyramid(out_dir=…) writes exactly rasterize()'s tiles from
+    the fold's own worker on every route — the sink adds no MapInArrow
+    to the executed plan — keeps nothing cached, and returns per-zoom
+    stats equal to a groupBy."""
+    docs = generate_documents(spark, 12, partitions=3)
+    first = docs.filter(F.col("doc_id") < "doc00000006")
+    rest = docs.filter(F.col("doc_id") >= "doc00000006")
+    base = str(tmp_path / "base")
+    render_pyramid(first, EngineConfig(zoom_min=3, zoom_max=9), out_dir=base)
+    # route → (config, documents, store, MapInArrow nodes of rasterize())
+    routes = {
+        "default": (EngineConfig(zoom_min=3, zoom_max=9), docs, None, 1),
+        # hit counts below _canvas_read_z (15 here), the fold above it
+        "heatmap": (EngineConfig(zoom_min=13, zoom_max=16, heatmap=True),
+                    docs, None, 2),
+        # hot tiles: salt partials, their merge, and the cold fold
+        "salted": (EngineConfig(zoom_min=1, zoom_max=6, salt_buckets=4,
+                                hot_tile_threshold=50,
+                                hot_detect_fraction=1.0), docs, None, 3),
+        "store": (EngineConfig(zoom_min=3, zoom_max=9), rest,
+                  read_tile_pyramid(spark, base), 1),
+    }
+    jsc = spark.sparkContext._jsc
+    for name, (cfg, src, store, nodes) in routes.items():
+        tiles = rasterize(build_events(parse_documents(src), cfg), cfg, store)
+        rows, ref_nodes = _run_arrow_nodes(spark, tiles.collect)
+        assert ref_nodes == nodes, (name, ref_nodes)
+        out = str(tmp_path / name)
+        spark.catalog.clearCache()
+        before = set(jsc.getPersistentRDDs().keys())
+        res, out_nodes = _run_arrow_nodes(spark, lambda: render_pyramid(
+            src, cfg, out_dir=out, store=store))
+        assert out_nodes <= ref_nodes, (name, out_nodes, ref_nodes)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert set(jsc.getPersistentRDDs().keys()) == before, name
+        assert res.points is None and res.tiles is None
+
+        got = _read_tree(out)
+        assert set(got) == {(r.z, r.tx, r.ty) for r in rows}, name
+        for r in rows:
+            assert decode_png(got[(r.z, r.tx, r.ty)]).tobytes() == \
+                decode_png(bytes(r.png)).tobytes(), (name, r.z, r.tx, r.ty)
+
+        by_zoom = (spark.createDataFrame(rows).groupBy("z")
+                   .agg(F.count("*").alias("tiles"),
+                        F.sum("point_cnt").alias("points"))
+                   .orderBy("z").collect())
+        assert [tuple(s) for s in res.zoom_stats] == \
+            [(r.z, r.tiles, r.points) for r in by_zoom], name

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import assert_same_multiset
 from pyspark.sql import functions as F
 
 from gpx2tiles_spark.config import EngineConfig, PDOP_ALPHA
@@ -115,6 +116,33 @@ def test_pdop_ellipse_rendered(spark, pdop_doc):
         got = img[ey, ex]
         assert (int(got[0]), int(got[1]), int(got[2])) == \
             ((expect >> 16) & 0xFF, (expect >> 8) & 0xFF, expect & 0xFF)
+
+
+@pytest.mark.parametrize("zooms", [(5, 8), (16, 18)], ids=["z5-8", "z16-18"])
+def test_fused_trk_events_equal_explicit_branches(spark, zooms):
+    """The fused one-explode track events and the explicit branch union
+    hold the same rows, with PDOP on and off, at zooms on both sides of
+    z_no_lines (7) and PDOP_MIN_Z (17)."""
+    from gpx2tiles_spark.operators.events import (_explicit_trk_events,
+                                                  _fused_trk_events,
+                                                  _trk_gates, paired_points,
+                                                  with_pair_tiles)
+
+    cfg = EngineConfig(zoom_min=zooms[0], zoom_max=zooms[1])
+    points = parse_documents(generate_documents(spark, 6, partitions=2))
+    trk = with_pair_tiles(
+        paired_points(points.filter(F.col("kind") == "trkpt")), cfg).persist()
+    try:
+        for pdop in (False, True):
+            fused = _fused_trk_events(trk, cfg, *_trk_gates(cfg), pdop)
+            explicit = _explicit_trk_events(trk, cfg, *_trk_gates(cfg), pdop)
+            assert_same_multiset(fused, explicit)
+            etypes = {r.etype for r in
+                      explicit.select("etype").distinct().collect()}
+            assert ET_LINE in etypes  # same-tile lines on both sides
+            assert (ET_PDOP in etypes) == (pdop and zooms[1] >= 17)
+    finally:
+        trk.unpersist()
 
 
 # --- A1/A2 waypoint zoom gate --------------------------------------------------

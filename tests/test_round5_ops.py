@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, assert_same_multiset
 
 
 @pytest.mark.parametrize("name", ["incremental_store", "store_as_of"])
@@ -485,8 +485,7 @@ def test_sf10_pair_decade_prediction_identity_minhash(spark):
     cross, within = lift_pairs(pairs(tile_copies(docs, "doc_id", 2, n), 2 * B),
                                n, "doc_a", "doc_b")
     pred = expand_pairs(cross, within, n, 5, "doc_a", "doc_b")
-    assert actual.exceptAll(pred).count() == 0
-    assert pred.exceptAll(actual).count() == 0
+    assert_same_multiset(actual, pred)
     got = actual.count()
     assert got > 0
     # the cap must actually have dropped something: uncapped x5 is bigger
@@ -521,8 +520,7 @@ def test_sf10_pair_decade_prediction_identity_near_dup(spark):
     cross, within = lift_pairs(run(tile_copies(vecs, "vec_id", 2, n), 2 * B),
                                n, "vec_a", "vec_b")
     pred = expand_pairs(cross, within, n, 5, "vec_a", "vec_b")
-    assert actual.exceptAll(pred).count() == 0
-    assert pred.exceptAll(actual).count() == 0
+    assert_same_multiset(actual, pred)
     got = actual.count()
     assert got > 0
     assert run(tile_copies(vecs, "vec_id", 5, n), None).count() > got

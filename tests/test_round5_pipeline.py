@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gpx2tiles_spark.operators import pipeline
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_same_multiset
 
 
 def _docs(spark):
@@ -108,8 +108,7 @@ def test_cms_overestimates_and_merges(spark):
     merged = pipeline.cms_merge(
         pipeline.cms_registers(a, key), pipeline.cms_registers(b, key))
     whole = pipeline.cms_registers(ev, key)
-    assert merged.exceptAll(whole).count() == 0
-    assert whole.exceptAll(merged).count() == 0
+    assert_same_multiset(merged, whole)
 
 
 def test_track_stats_matches_pandas(spark):

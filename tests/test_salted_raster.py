@@ -76,8 +76,8 @@ def test_fold_partitions_derive_from_cached_points(spark):
     """When the event relation sits on a MATERIALIZED points cache, the
     fold shuffle is sized from row volume (×zoom fan-out, ~20k rows per
     task) floored at defaultParallelism and capped at the session
-    shuffle-partition setting; with no cache visible it keeps the
-    session setting unchanged."""
+    shuffle-partition setting; with no cache visible, or a cache beside
+    an uncached scan, it keeps the session setting unchanged."""
     import math
 
     from gpx2tiles_spark.operators.raster import (_FOLD_TARGET_ROWS,
@@ -106,3 +106,14 @@ def test_fold_partitions_derive_from_cached_points(spark):
         assert _fold_partitions(ev, cfg_o) == 7
     finally:
         points.unpersist()
+
+    # a small materialized cache joined into an uncached event plan says
+    # nothing of the event volume: the session value stands
+    small = spark.createDataFrame([("doc00000001",)], "doc_id string").persist()
+    try:
+        small.count()
+        joined = cold.join(small, "doc_id")
+        assert _cached_rowcount_estimate(joined) is None
+        assert _fold_partitions(joined, cfg) == conf_n
+    finally:
+        small.unpersist()
