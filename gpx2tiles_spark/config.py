@@ -60,12 +60,12 @@ class EngineConfig:
     diag_speed_text: bool = False       # -d 4: first-point speed text per tile
     # physical knobs (no reference analog — Spark-side)
     # partition count for the shuffles feeding the Python raster fold;
-    # None = the session's spark.sql.shuffle.partitions.  Callers that
-    # KNOW the batch volume (e.g. the incremental TileStore, whose
-    # batches can be thousands of times smaller than a full render) set
-    # it ∝ rows so a tiny delta batch doesn't pay hundreds of near-empty
-    # Python tasks per stage — partitioning derived from input size, not
-    # a constant tuned for one scale.
+    # None = the session's spark.sql.shuffle.partitions.  The one caller
+    # that counts its rows, TileStore.apply_batch (batches thousands of
+    # times smaller than a full render), sets it ∝ rows so a tiny delta
+    # batch doesn't pay hundreds of near-empty Python tasks per stage.
+    # A field, not a rasterize argument: it reaches every route's fold,
+    # the heatmap count fold and the salted phase A included.
     fold_partitions: int | None = None
     salt_buckets: int = 0  # 0 = no salting; >0 = range-salt hot tiles
     hot_tile_threshold: int = 200_000  # events per tile before salting kicks in

@@ -44,7 +44,6 @@ _HOTSPOTS = [
     (52.5200, 13.4050, 0.20),  # Berlin
     (40.7128, -74.0060, 0.15),
 ]
-_UNIFORM_W = 1.0 - sum(w for _, _, w in _HOTSPOTS)
 
 _WORDS = ("track point tile zoom speed route hill forest river city road"
           " morning evening ride walk fast slow north south east west").split()

@@ -16,7 +16,6 @@ from .. import projection as P
 # lat in (-69.95, 69.95], lon in (-179.95, 179.95] — off tile boundaries
 LON_EXPR = "(CAST(event_id % 3600 AS DOUBLE) / 10.0) - 179.95"
 LAT_EXPR = "(CAST((event_id * 7 + user_id) % 1400 AS DOUBLE) / 10.0) - 69.95"
-KPH_EXPR = "value"
 
 
 def derived_points(events: DataFrame) -> DataFrame:

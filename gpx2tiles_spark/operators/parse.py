@@ -46,9 +46,6 @@ POINTS_SCHEMA = T.StructType([
     T.StructField("file_time", T.StringType(), False),
 ])
 
-_PT_COLS = ("lat lon time speed sat ele geoidheight course hdop vdop pdop "
-            "flags").split()
-
 # waypoints draw after all of a file's segments (gpx2tiles.c:733-735);
 # give them a seg_order above any real segment's
 WPT_SEG_ORDER = 1 << 20

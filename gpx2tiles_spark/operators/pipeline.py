@@ -332,7 +332,6 @@ def cms_sql(key_expr: str, src_sql: str, d: int = CMS_D) -> str:
 # filters do exactly this at the storage layer).
 # ---------------------------------------------------------------------------
 
-BLOOM_M = 4096   # bits
 BLOOM_K = 3      # hash functions
 
 

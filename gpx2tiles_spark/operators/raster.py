@@ -463,39 +463,8 @@ def _rasterize_heatmap_counts(events: DataFrame, cfg: EngineConfig,
 # Target rows per Python-fold task (the incremental store's measured
 # "~20k events/task" sweet spot): big enough to amortize the per-task
 # Arrow/worker round trip, small enough that a task is sub-second.
+# TileStore.apply_batch, which counts its batch, sizes the fold with it.
 _FOLD_TARGET_ROWS = 20_000
-
-
-def _cached_rowcount_estimate(df: DataFrame) -> int | None:
-    """Row count of the MATERIALIZED cache that is every leaf of ``df``'s
-    optimized logical plan (a py4j plan walk — no job).  The render's
-    input is a persisted points relation the caller typically counted
-    already; its row count lets the fold shuffle be sized from actual
-    input volume instead of the session constant (guide §2: derive
-    partitioning from input size).  None when the plan reads anything
-    else — no cache (a cold full-scale run), two caches, or a small
-    cache joined to an uncached scan — callers keep the session value."""
-    try:
-        system = df.sparkSession.sparkContext._jvm.java.lang.System
-        caches, rows = set(), None
-        stack = [df._jdf.queryExecution().optimizedPlan()]
-        while stack:
-            p = stack.pop()
-            if p.getClass().getSimpleName() == "InMemoryRelation":
-                rc = p.stats().rowCount()
-                if not rc.isDefined():
-                    return None
-                # every use of one cache shares its builder object
-                caches.add(system.identityHashCode(p.cacheBuilder()))
-                rows = int(str(rc.get()))
-            elif p.children().isEmpty():
-                return None
-            it = p.children().iterator()
-            while it.hasNext():
-                stack.append(it.next())
-        return rows if len(caches) == 1 else None
-    except Exception:  # plan shapes we don't know — never fail the plan
-        return None
 
 
 def _fold_partitions(df: DataFrame, cfg: EngineConfig | None = None) -> int:
@@ -505,26 +474,12 @@ def _fold_partitions(df: DataFrame, cfg: EngineConfig | None = None) -> int:
     rows ≈ a minute of single-core Python fold — at 4N cores the
     coalesced hot-corridor partitions become the wall-time floor
     (measured: top partitions 8× the mean on the skewed corpus).
-    ``cfg.fold_partitions`` overrides for callers that know the batch
-    volume (see EngineConfig); otherwise, when the event relation reads
-    only a materialized points cache, the count is derived from its row
-    count × zoom fan-out at ~:data:`_FOLD_TARGET_ROWS` rows/task,
-    floored at the cluster's defaultParallelism (never fewer than one
-    task per core) and capped at the session shuffle-partition setting
-    (the documented full-scale behavior — an uncached 100 TB input
-    keeps the session value)."""
+    ``cfg.fold_partitions`` when set (a caller that counted its rows,
+    see EngineConfig); otherwise the session's
+    ``spark.sql.shuffle.partitions``."""
     if cfg is not None and cfg.fold_partitions:
         return int(cfg.fold_partitions)
-    conf_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cached = _cached_rowcount_estimate(df)
-    if cached:
-        import math
-
-        fanout = max(1, len(cfg.zooms())) if cfg is not None else 1
-        by_rows = math.ceil(cached * fanout / _FOLD_TARGET_ROWS)
-        floor = df.sparkSession.sparkContext.defaultParallelism
-        return max(1, min(conf_n, max(floor, by_rows)))
-    return conf_n
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 _FOLD_COLS = ("z", "tx", "ty", "etype", "x1", "y1", "x2", "y2", "color",
@@ -713,33 +668,35 @@ def tiles_to_pixels(tiles: DataFrame) -> DataFrame:
 # Skew handling: range-salted two-phase render for hot tiles
 # ---------------------------------------------------------------------------
 
-def doc_salt_boundaries(events: DataFrame, buckets: int,
-                        target_sample: int = 10_000,
-                        est_count: float | None = None) -> list[str]:
-    """Order-preserving salt boundaries over doc_id from a pure Bernoulli
-    sample sized off a count: every partition contributes proportionally,
-    so boundaries reflect the whole doc_id range (a sample().limit()
-    variant satisfied the LIMIT from the first partitions, drawing every
-    boundary from a partition-order prefix — the exact skew salting
-    exists to fix).  The driver sees ~target_sample·buckets ids.
-    Row-frequency weighting is a feature — boundaries land where the
-    events are, balancing bucket LOAD, and boundaries only affect load
-    balance, never correctness (contiguous ranges either way).
+def doc_range_bounds(df: DataFrame, n_ranges: int, sample_rows: int = 10_000,
+                     seed: int = 11, count: float | None = None) -> list[str]:
+    """Contiguous, ascending doc_id boundaries cutting ``df`` into
+    ``n_ranges`` ranges, from a BOUNDED pure Bernoulli sample: count →
+    sample of ~``sample_rows`` rows → driver-side sort of the distinct
+    ids → every step-th id.  No distinct shuffle, no unbounded collect —
+    at 10^12 docs the driver sees ~``sample_rows`` strings.  Every
+    partition contributes proportionally, so the bounds reflect the whole
+    doc_id range (a sample().limit() variant satisfied the LIMIT from the
+    first partitions, drawing every bound from a partition-order prefix).
+    Row-frequency weighting is a feature — bounds land where the rows
+    are, balancing range LOAD; contiguous ranges are correct either way.
+    Empty when there are fewer sampled ids than ranges.
 
-    ``est_count``: caller-supplied row-count estimate (e.g. scaled up
-    from a detection sample) — sizing the Bernoulli fraction is its only
-    use, so an estimate is as good as the exact figure and skips a full
-    extra pass over the un-persisted event relation."""
-    cnt = float(events.count() if est_count is None else est_count)
+    ``count``: a caller-supplied row-count estimate (e.g. scaled up from
+    a detection sample) — sizing the Bernoulli fraction is its only use,
+    so an estimate is as good as the exact figure and skips a full pass."""
+    if n_ranges <= 1:
+        return []
+    cnt = float(df.count() if count is None else count)
     if cnt <= 0:
         return []
-    frac = min(1.0, float(target_sample * buckets) / cnt)
-    rows = events.select("doc_id").sample(False, frac, seed=7).collect()
-    ids = sorted({r.doc_id for r in rows})
-    if len(ids) < buckets:
-        return []  # too few docs for salting to help — unsalted path
-    step = max(1, len(ids) // buckets)
-    return ids[step::step][: buckets - 1]
+    frac = min(1.0, sample_rows / cnt)
+    ids = sorted({r.doc_id for r in
+                  df.select("doc_id").sample(False, frac, seed=seed).collect()})
+    if len(ids) < n_ranges:
+        return []
+    step = max(1, len(ids) // n_ranges)
+    return ids[step::step][: n_ranges - 1]
 
 
 _PARTIAL_SCHEMA = T.StructType(TILES_SCHEMA.fields + [
@@ -794,8 +751,9 @@ def rasterize_salted(events: DataFrame, cfg: EngineConfig,
                    | F.col("z").isNull()).collect())
     total_sampled = next((r["count"] for r in det if r["z"] is None), 0)
     hot_rows = [r for r in det if r["z"] is not None and r["ty"] is not None]
-    bounds = hot_rows and doc_salt_boundaries(
-        events, buckets, est_count=total_sampled / det_frac)
+    bounds = hot_rows and doc_range_bounds(
+        events, buckets, sample_rows=10_000 * buckets, seed=7,
+        count=total_sampled / det_frac)
     if not bounds:
         return _rasterize_partitions(events, cfg, store, out_dir)
 

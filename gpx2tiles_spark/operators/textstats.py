@@ -14,8 +14,6 @@ STOPWORDS = {
     "fr": ["le", "la", "et", "les", "des", "un", "une", "est", "pour", "dans"],
 }
 
-PUNCT = ".,!?;:"
-
 
 def _word_count(text):
     # whitespace tokens via pure replace arithmetic (engine-portable)

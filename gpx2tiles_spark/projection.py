@@ -25,10 +25,6 @@ from pyspark.sql import functions as F
 
 from .config import TILE_H, TILE_W
 
-# Valid Web Mercator latitude range; |lat| beyond this projects out of the
-# [0, 2^z) tile range (the reference does not clamp; callers filter).
-MERC_LAT_LIMIT = 85.05112877980659
-
 
 # --------------------------------------------------------------------------
 # numpy kernels

@@ -39,7 +39,9 @@ of new document files incrementally updates the store.
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -50,8 +52,9 @@ from pyspark.sql import functions as F
 from ..config import ZOOM_MAX_HARD, EngineConfig
 from ..operators.events import build_events
 from ..operators.parse import parse_documents
-from ..operators.raster import (SNAPSHOT_COL, TILES_SCHEMA, latest_tiles,
-                                rasterize)
+from ..operators.raster import (_FOLD_TARGET_ROWS, SNAPSHOT_COL,
+                                TILES_SCHEMA, doc_range_bounds,
+                                latest_tiles, rasterize)
 
 # a snapshot's directory under the store root; its number is the id
 _SNAPSHOT_DIR = "snapshot-{:05d}"
@@ -219,16 +222,16 @@ class TileStore:
             # cache), so size the raster-fold shuffles ∝ the batch instead
             # of the session's full-render partition count: a small delta
             # batch otherwise pays hundreds of near-empty Python tasks
-            # per rasterize/write stage (events ≈ points × zooms; ~20k
-            # events per fold task)
+            # per rasterize/write stage (events ≈ points × zooms).  This
+            # is the engine's one row-derived fold-sizing rule; it floors
+            # at 1, not at the core count, which would double a small
+            # batch's fold tasks and its CPU
             if cfg.fold_partitions is None:
-                import dataclasses
-                import math
                 conf_parts = int(self.spark.conf.get(
                     "spark.sql.shuffle.partitions"))
                 est_events = points.count() * max(1, len(cfg.zooms()))
-                cfg = dataclasses.replace(cfg, fold_partitions=max(
-                    1, min(conf_parts, math.ceil(est_events / 20_000))))
+                cfg = dataclasses.replace(cfg, fold_partitions=max(1, min(
+                    conf_parts, math.ceil(est_events / _FOLD_TARGET_ROWS))))
             events = build_events(points, cfg)
             # the live snapshots go in unmerged: rasterize takes each
             # touched tile's newest base inside its tile shuffle (the
@@ -241,29 +244,6 @@ class TileStore:
         if len(self._live()) > self.compact_every:
             self.compact()
         return entry
-
-
-def doc_range_bounds(documents: DataFrame, n_ranges: int,
-                     target_sample: int = 10_000) -> list[str]:
-    """Contiguous, ascending doc_id range boundaries from a BOUNDED
-    sample: count (parquet-footer cheap) → Bernoulli row sample sized to
-    ~target_sample → driver-side sort of ≤ O(target_sample) ids.  No
-    distinct shuffle, no unbounded collect — at 10^12 docs the driver
-    sees 10^4 strings, not 10^12."""
-    if n_ranges <= 1:
-        return []
-    cnt = documents.count()
-    if cnt == 0:
-        return []
-    frac = min(1.0, float(target_sample) / float(cnt))
-    ids = sorted({
-        r.doc_id for r in
-        documents.select("doc_id").sample(False, frac, seed=11).collect()
-    })
-    if len(ids) < n_ranges:
-        return []
-    step = max(1, len(ids) // n_ranges)
-    return ids[step::step][: n_ranges - 1]
 
 
 def _range_predicate(lo: str | None, hi: str | None):
@@ -296,6 +276,34 @@ def process_batches(spark: SparkSession, documents: DataFrame,
     return store
 
 
+def _stream_to_store(spark: SparkSession, stream: DataFrame, store_dir: str,
+                     cfg: EngineConfig | None, key_prefix: str, to_documents,
+                     checkpoint_dir: str | None, available_now: bool = True):
+    """Start ``stream`` into the tile store at ``store_dir``: each
+    non-empty micro-batch goes through ``to_documents`` and
+    ``TileStore.apply_batch`` keyed ``{key_prefix}-{epoch:06d}``
+    (exactly-once through manifest idempotence + Spark's streaming
+    checkpoint, by default under the store root)."""
+    cfg = cfg or EngineConfig()
+    store = TileStore(spark, store_dir)
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        store.apply_batch(f"{key_prefix}-{epoch_id:06d}",
+                          to_documents(batch_df), cfg)
+
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation",
+                checkpoint_dir or os.path.join(store_dir,
+                                               "_stream_checkpoint"))
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_streaming(spark: SparkSession, docs_dir: str, store_dir: str,
                   cfg: EngineConfig | None = None,
                   checkpoint_dir: str | None = None):
@@ -305,27 +313,13 @@ def run_streaming(spark: SparkSession, docs_dir: str, store_dir: str,
     streaming checkpoint)."""
     from ..corpus import SPANS_SCHEMA
 
-    cfg = cfg or EngineConfig()
-    store = TileStore(spark, store_dir)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        store.apply_batch(f"epoch-{epoch_id:06d}", batch_df, cfg)
-
     stream = (
         spark.readStream.schema(SPANS_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(docs_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation",
-                checkpoint_dir or os.path.join(store_dir, "_stream_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q
+    return _stream_to_store(spark, stream, store_dir, cfg, "epoch",
+                            lambda df: df, checkpoint_dir)
 
 
 def run_gpx_streaming(spark: SparkSession, gpx_dir: str, store_dir: str,
@@ -355,15 +349,6 @@ def run_gpx_streaming(spark: SparkSession, gpx_dir: str, store_dir: str,
     micro-batch trigger."""
     from ..sources.gpxfiles import binary_rows_to_documents
 
-    cfg = cfg or EngineConfig()
-    store = TileStore(spark, store_dir)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        store.apply_batch(f"gpx-epoch-{epoch_id:06d}",
-                          binary_rows_to_documents(batch_df), cfg)
-
     stream = (
         spark.readStream.format("binaryFile")
         # the binaryFile source's fixed schema, stated explicitly
@@ -374,12 +359,6 @@ def run_gpx_streaming(spark: SparkSession, gpx_dir: str, store_dir: str,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(gpx_dir)
     )
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation",
-                checkpoint_dir or os.path.join(store_dir,
-                                               "_stream_checkpoint"))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_to_store(spark, stream, store_dir, cfg, "gpx-epoch",
+                            binary_rows_to_documents, checkpoint_dir,
+                            available_now)

@@ -328,7 +328,7 @@ def test_incremental_hot_tile_is_salted(spark):
     the whole tile) and still match the sequential cogroup fold."""
     from gpx2tiles_spark.config import EngineConfig
     from gpx2tiles_spark.operators.raster import (_rasterize_cogroup,
-                                                  doc_salt_boundaries,
+                                                  doc_range_bounds,
                                                   rasterize)
 
     cfg = EngineConfig(zoom_min=1, zoom_max=4, salt_buckets=4,
@@ -339,7 +339,7 @@ def test_incremental_hot_tile_is_salted(spark):
     assert low.groupBy("z", "tx", "ty").count() \
         .filter(F.col("count") > 50).count() > 0, "fixture not hot"
     # the salted path splits hot tiles into >1 doc-range partials
-    assert len(doc_salt_boundaries(low, 4)) >= 1
+    assert len(doc_range_bounds(low, 4, sample_rows=40_000, seed=7)) >= 1
     store = rasterize(ev1, EngineConfig(zoom_min=1, zoom_max=4)) \
         .select("z", "tx", "ty", "point_cnt", "png").persist()
     store.count()

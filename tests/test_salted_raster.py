@@ -72,48 +72,65 @@ def test_salted_planning_skips_full_count_pass(spark, monkeypatch):
     docs.unpersist()
 
 
-def test_fold_partitions_derive_from_cached_points(spark):
-    """When the event relation sits on a MATERIALIZED points cache, the
-    fold shuffle is sized from row volume (×zoom fan-out, ~20k rows per
-    task) floored at defaultParallelism and capped at the session
-    shuffle-partition setting; with no cache visible, or a cache beside
-    an uncached scan, it keeps the session setting unchanged."""
-    import math
-
-    from gpx2tiles_spark.operators.raster import (_FOLD_TARGET_ROWS,
-                                                  _cached_rowcount_estimate,
-                                                  _fold_partitions)
+def test_fold_partitions_are_cfg_or_session(spark):
+    """The fold shuffle is ``cfg.fold_partitions`` when set and the
+    session's shuffle-partition setting otherwise.  No plan walk: a
+    materialized small points cache keeps the session value too."""
+    from gpx2tiles_spark.operators.raster import _fold_partitions
 
     cfg = EngineConfig(zoom_min=1, zoom_max=18)
+    cfg_o = EngineConfig(zoom_min=1, zoom_max=18, fold_partitions=7)
     docs = generate_documents(spark, 8, partitions=4)
-    cold = build_events(parse_documents(docs), cfg)
     conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _cached_rowcount_estimate(cold) is None
+    cold = build_events(parse_documents(docs), cfg)
+    assert _fold_partitions(cold) == conf_n
     assert _fold_partitions(cold, cfg) == conf_n
 
     points = parse_documents(docs).persist()
     try:
-        n = points.count()  # materialize → stats carry the row count
+        points.count()  # materialized: its stats carry the row count
         ev = build_events(points, cfg)
-        assert _cached_rowcount_estimate(ev) == n
-        expect = max(
-            1, min(conf_n,
-                   max(spark.sparkContext.defaultParallelism,
-                       math.ceil(n * len(cfg.zooms()) / _FOLD_TARGET_ROWS))))
-        assert _fold_partitions(ev, cfg) == expect
-        # the explicit override still wins
-        cfg_o = EngineConfig(zoom_min=1, zoom_max=18, fold_partitions=7)
-        assert _fold_partitions(ev, cfg_o) == 7
+        assert _fold_partitions(ev, cfg) == conf_n
+        assert _fold_partitions(ev, cfg_o) == 7  # the explicit value wins
     finally:
         points.unpersist()
 
-    # a small materialized cache joined into an uncached event plan says
-    # nothing of the event volume: the session value stands
-    small = spark.createDataFrame([("doc00000001",)], "doc_id string").persist()
-    try:
-        small.count()
-        joined = cold.join(small, "doc_id")
-        assert _cached_rowcount_estimate(joined) is None
-        assert _fold_partitions(joined, cfg) == conf_n
-    finally:
-        small.unpersist()
+
+def test_store_batch_fold_sized_from_its_points(spark, tmp_path, monkeypatch):
+    """TileStore.apply_batch counts its batch and hands rasterize
+    ceil(points × zooms / _FOLD_TARGET_ROWS) fold tasks, capped at the
+    session value: a 4-doc × 300-point batch at z1-18 gets 2, not one
+    per core (measured: 4 tasks cost a small batch more CPU than 2)."""
+    import math
+
+    from gpx2tiles_spark.operators.raster import _FOLD_TARGET_ROWS
+    from gpx2tiles_spark.sources.gpxfiles import read_gpx_file_list
+    from gpx2tiles_spark.streaming import incremental
+
+    paths = []
+    for i in range(4):
+        pts = "".join(
+            f'<trkpt lat="{48.0 + 0.01 * i + 0.0001 * k}" '
+            f'lon="{8.0 + 0.0002 * k}">'
+            f"<time>2016-06-25T10:{k // 60:02d}:{k % 60:02d}Z</time></trkpt>"
+            for k in range(300))
+        path = tmp_path / f"t{i}.gpx"
+        path.write_text(f"<gpx><trk><trkseg>{pts}</trkseg></trk></gpx>")
+        paths.append(str(path))
+    docs = read_gpx_file_list(spark, paths)
+    cfg = EngineConfig(zoom_min=1, zoom_max=18)
+    n = parse_documents(docs).count()
+    assert n == 1200
+
+    seen = []
+    real = incremental.rasterize
+
+    def spy(events, cfg, **kw):
+        seen.append(cfg.fold_partitions)
+        return real(events, cfg, **kw)
+
+    monkeypatch.setattr(incremental, "rasterize", spy)
+    store = incremental.TileStore(spark, str(tmp_path / "store"))
+    assert store.apply_batch("b0", docs, cfg) is not None
+    conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert seen == [min(conf_n, math.ceil(n * 18 / _FOLD_TARGET_ROWS))] == [2]
