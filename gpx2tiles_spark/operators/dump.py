@@ -116,31 +116,27 @@ def census_accesses(points: DataFrame, cfg: EngineConfig) -> DataFrame:
                slow-segment gate fires, or the segment is same-tile.
 
     (doc_id, seg_order, pt_idx, slot, k) sorts in exact draw order:
-    wpt rows carry seg_order 2^20, after every real segment."""
-    from .events import (circle_rect_bounds, crossing_tile_col,
-                         paired_points, with_pair_tiles)
+    wpt rows carry seg_order 2^20, after every real segment.  The
+    rows, the line gates and the crossing candidates are build_events'
+    own (draw_relation, cross_tile_candidates)."""
+    from .events import (circle_rect_bounds, cross_tile_candidates,
+                         draw_relation)
     from .tiles import with_pixel
-    from ..config import TILE_H, TILE_W
 
     key = ["doc_id", "seg_order", "pt_idx"]
     out_cols = ["z", "tx", "ty", *key, "slot", "k"]
 
-    trk = with_pair_tiles(
-        paired_points(points.filter(F.col("kind") == "trkpt")), cfg)
-    wpt = with_pair_tiles(
-        paired_points(points.filter(F.col("kind") == "wpt")), cfg) \
-        .filter(F.col("z") > F.lit(cfg.z_no_wpts))
-    both = trk.unionByName(wpt)
-
-    own = both.select("z", "tx", "ty", *key,
+    draw = draw_relation(points, cfg)
+    own = draw.select("z", "tx", "ty", *key,
                       F.lit(0).alias("slot"), F.lit(0).alias("k"))
-    prev = both.filter(F.col("prev_lat").isNotNull()).select(
+    prev = draw.filter(F.col("prev_lat").isNotNull()).select(
         "z", F.col("p_tx").alias("tx"), F.col("p_ty").alias("ty"), *key,
         F.lit(1).alias("slot"), F.lit(0).alias("k"))
 
     # slot 2: circle rect (x inner, y outer), wpts only — the SAME
     # shared bounds the circle event builder uses (circle_rect_bounds)
-    wp = circle_rect_bounds(with_pixel(wpt), cfg.point_circle_diameter)
+    wp = circle_rect_bounds(with_pixel(draw.filter(F.col("kind") == "wpt")),
+                            cfg.point_circle_diameter)
     circles = (wp.withColumn("cx", F.explode(F.sequence(F.col("lt_x"), F.col("rb_x"))))
                .withColumn("cy", F.explode(F.sequence(F.col("lt_y"), F.col("rb_y"))))
                .select("z", F.col("cx").alias("tx"), F.col("cy").alias("ty"),
@@ -149,26 +145,8 @@ def census_accesses(points: DataFrame, cfg: EngineConfig) -> DataFrame:
                         * (F.col("rb_x") - F.col("lt_x") + 1)
                         + (F.col("cx") - F.col("lt_x"))).alias("k")))
 
-    # slot 3: crossing candidates (gates exactly as build_events)
-    can_line = (
-        F.lit(not cfg.heatmap)
-        & F.col("prev_lat").isNotNull()
-        & (F.col("z") >= F.lit(cfg.z_no_lines))
-        & ~((F.col("flags").bitwiseAND(F.lit(8)) != 0)
-            & (F.col("speed") * F.lit(3.6) < F.lit(cfg.no_lines_speed_kph)))
-    )
-    not_same = (F.col("tx") != F.col("p_tx")) | (F.col("ty") != F.col("p_ty"))
-    cr = with_pixel(with_pixel(trk.filter(can_line & not_same)),
-                    lat="prev_lat", lon="prev_lon", prefix="p_")
-    cr = (cr.withColumn("cx", F.explode(F.sequence(F.col("p_tx"), F.col("tx"))))
-            .withColumn("cy", F.explode(F.sequence(F.col("p_ty"), F.col("ty"))))
-            .withColumn("lx1", F.col("p_px") - F.lit(TILE_W) * (F.col("cx") - F.col("p_tx")))
-            .withColumn("ly1", F.col("p_py") - F.lit(TILE_H) * (F.col("cy") - F.col("p_ty")))
-            .withColumn("lx2", F.col("px") - F.lit(TILE_W) * (F.col("cx") - F.col("tx")))
-            .withColumn("ly2", F.col("py") - F.lit(TILE_H) * (F.col("cy") - F.col("ty")))
-            .filter(crossing_tile_col(F.col("lx1"), F.col("ly1"),
-                                      F.col("lx2"), F.col("ly2"))))
-    crossing = cr.select(
+    # slot 3: crossing candidates
+    crossing = cross_tile_candidates(draw, cfg).select(
         "z", F.col("cx").alias("tx"), F.col("cy").alias("ty"), *key,
         F.lit(3).alias("slot"),
         (F.abs(F.col("cx") - F.col("p_tx"))

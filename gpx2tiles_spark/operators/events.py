@@ -1,20 +1,26 @@
 """Draw-event relation: points → (tile, ordered draw events).
 
-Re-expresses the reference's imperative draw loop
-(/root/reference/gpx2tiles.c:602-712) as a declarative union of four
-event relations, all built with native Column expressions (one window
-shuffle for pairing + one hash shuffle into tile groups — nothing else):
+Re-expresses the reference's imperative draw loop, draw_track_points
+(gpx2tiles.c:602-712 of the reference), called once per track segment
+and once for the waypoint list, as one draw relation
+(:func:`draw_relation` — every drawn point per zoom, paired with its
+chain predecessor) and a union of four event branches over it, all
+built with native Column expressions (a window for pairing + one hash
+shuffle into tile groups; the window's exchange runs for the point and
+cross branches alike, as Spark does not reuse it across their column
+sets):
 
-  stamp   — every point lands a pixel in its own tile (ET_STAMP = 0)
+  point   — ONE pass emitting each point's own-tile events: the stamp
+            (ET_STAMP = 0), the PDOP / -d1 shadow ellipse (ET_PDOP = 2)
+            and the same-tile segment line (ET_LINE = 4)
+  cross   — cross-tile segment lines: explode the tile rectangle between
+            the endpoints' tiles, keep candidates whose translated
+            segment crosses a tile border edge (int64 CCW predicate,
+            ET_LINE = 4)
   circle  — waypoint circles, exploded over their neighbor-tile rect
             with the reference's exact (quirky) center translation
             (ET_CIRCLE = 1)
-  diag    — PDOP / -d1 shadow ellipses (ET_PDOP = 2) and -d4 per-tile
-            speed text (ET_TEXT = 3)
-  line    — same-tile segment lines (ET_LINE = 4)
-  line    — cross-tile segment lines: explode the tile rectangle between
-            the endpoints' tiles, keep candidates whose translated segment
-            crosses a tile border edge (int64 CCW predicate, ET_LINE = 4)
+  text    — -d4 per-tile speed text (ET_TEXT = 3)
 
 Event order within a tile = (doc_id, seg_order, pt_idx, etype) — exactly
 the reference's file→segment→point→(stamp, circle, line) draw order, so a
@@ -22,7 +28,7 @@ sorted fold reproduces its canvas byte-for-byte given the same primitives.
 
 Filters F2 (no lines below z_no_lines), F3 (slow segments), F4 (network
 src forces color 0), F5 (waypoint zoom gate), F6 (zero-length lines) are
-plain WHERE clauses — Catalyst pushes them below the zoom explode.
+plain WHERE clauses or when() gates over the draw relation.
 """
 
 from __future__ import annotations
@@ -33,10 +39,9 @@ from pyspark.sql import functions as F
 from .. import projection as P
 from ..colors import speed_clridx_col
 from ..config import (HIGHLIGHT_COLOR, PDOP_MIN_Z, PDOP_THRESHOLD, SHADOW_COLOR,
-                      SPDCLR, SPEED_FIXED_COLOR, SPEED_FROM_DATA,
-                      SPEED_TEXT_COLOR, TILE_H, TILE_W, EngineConfig,
-                      POINT_CIRCLE_COLOR)
-from .tiles import with_pixel, with_tile, with_tile_pixel, with_zooms
+                      SPDCLR, SPEED_FIXED_COLOR, SPEED_TEXT_COLOR, TILE_H,
+                      TILE_W, EngineConfig, POINT_CIRCLE_COLOR)
+from .tiles import drawn_point_col, with_pixel, with_zooms
 
 # etype doubles as the intra-point draw priority: the reference draws
 # stamp → waypoint circle → PDOP/shadow diagnostic ellipse → per-tile
@@ -197,83 +202,48 @@ def circle_rect_bounds(df: DataFrame, r: int) -> DataFrame:
                 .otherwise(F.col("ty")))))
 
 
+def draw_relation(points: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Every point the draw loop visits, per zoom, paired with the
+    previous point of its chain: track points at every zoom, waypoints
+    only at z > z_no_wpts (F5).  Waypoints carry seg_order 2^20, so the
+    pair window chains each waypoint to the previous one — make_tiles'
+    one draw_track_points call over the waypoint list
+    (gpx2tiles.c:729, 734).  Shared by build_events and the census
+    access relation (operators/dump.py)."""
+    return with_pair_tiles(paired_points(points), cfg).filter(
+        drawn_point_col(cfg))
+
+
 def build_events(points: DataFrame, cfg: EngineConfig) -> DataFrame:
     """The full event relation for speed-color (default) or heatmap mode.
 
-    Static branch pruning on the configured zoom range: a branch whose
-    zoom gate can never pass (lines below z_no_lines, waypoints at or
-    below z_no_wpts, PDOP below its hardcoded z >= 17) is provably
-    empty, but would still execute its explode/filter stages per batch
-    — for the incremental store's z1-6 pyramids that was 6 of 7 union
-    branches doing nothing.  Same rows by construction; the full-range
-    render keeps every branch."""
-    zmax = max(cfg.zooms())
-    lines_possible = _lines_possible(cfg)
-    wpts_possible = zmax > cfg.z_no_wpts
-    # _pdop_events emits PDOP rows only at z >= PDOP_MIN_Z, plus -d1
-    # shadows at EVERY zoom
-    pdop_possible = zmax >= PDOP_MIN_Z or cfg.diag_shadows
-    trk = with_pair_tiles(
-        paired_points(points.filter(F.col("kind") == "trkpt")), cfg)
-    # the expensive inverse-Mercator PIXEL projection stays deferred per
-    # branch so it runs on exactly the rows that need it (stamps: cur
-    # endpoint on all rows; line branches: prev endpoint post-filter)
-    color, can_line, same_tile = _trk_gates(cfg)
-
-    if lines_possible:
-        # cross-tile: explode the tile rectangle between the endpoint
-        # tiles (gpx2tiles.c:675-703); sequence() steps ±1 automatically;
-        # the CCW border-crossing predicate prunes candidates — codegen'd
-        cross = (
-            with_pixel(with_pixel(trk.filter(can_line & ~same_tile)),
-                       lat="prev_lat", lon="prev_lon", prefix="p_")
-            .withColumn("cx", F.explode(F.sequence(F.col("p_tx"), F.col("tx"))))
-            .withColumn("cy", F.explode(F.sequence(F.col("p_ty"), F.col("ty"))))
-            .withColumn("lx1", F.col("p_px") - F.lit(TILE_W) * (F.col("cx") - F.col("p_tx")))
-            .withColumn("ly1", F.col("p_py") - F.lit(TILE_H) * (F.col("cy") - F.col("p_ty")))
-            .withColumn("lx2", F.col("px") - F.lit(TILE_W) * (F.col("cx") - F.col("tx")))
-            .withColumn("ly2", F.col("py") - F.lit(TILE_H) * (F.col("cy") - F.col("ty")))
-            .filter(crossing_tile_col(F.col("lx1"), F.col("ly1"),
-                                      F.col("lx2"), F.col("ly2")))
-        )
+    Static branch pruning on the configured zoom range: a branch or
+    array element whose zoom gate can never pass (lines below
+    z_no_lines, waypoints at or below z_no_wpts, PDOP below its
+    hardcoded z >= 17) is provably empty, but would still execute its
+    explode/filter stages per batch — the incremental store renders
+    z1-6 pyramids.  Same rows by construction; the full-range render
+    keeps every branch."""
+    draw = draw_relation(points, cfg)
+    out = _point_events(draw, cfg)
+    if _lines_possible(cfg):
         # -d2: cross-tile segments draw in magenta instead of the point
         # color (gpx2tiles.c:694-695 highlight_tile_cross ? HIGHLIGHT : color)
         cl_color = (F.lit(HIGHLIGHT_COLOR).alias("color")
-                    if cfg.diag_highlight_cross else color)
-        cross_lines = cross.select(
+                    if cfg.diag_highlight_cross else _trk_gates(cfg)[0])
+        out = out.unionByName(cross_tile_candidates(draw, cfg).select(
             F.col("z"), F.col("cx").alias("tx"), F.col("cy").alias("ty"),
             F.col("doc_id"), F.col("seg_order"), F.col("pt_idx"),
             F.lit(ET_LINE).alias("etype"),
             F.col("lx1").alias("x1"), F.col("ly1").alias("y1"),
-            F.col("lx2").alias("x2"), F.col("ly2").alias("y2"), cl_color,
-        )
-
-    # FUSED single pass where its gates apply (speed mode with lines, no
-    # -d1 shadows); explicit branches for heatmap / diagnostic modes.
-    # Same row multiset either way (a standing test compares the two
-    # with exceptAll both ways); the painter sort in prepared_events
-    # fixes intra-tile order downstream.
-    trk_events = (_fused_trk_events if lines_possible and not cfg.diag_shadows
-                  else _explicit_trk_events)
-    out = trk_events(trk, cfg, color, can_line, same_tile, pdop_possible)
-    if lines_possible:
-        out = out.unionByName(cross_lines)
-
-    # --- waypoints (F5): stamps + circles only at z > z_no_wpts
-    if wpts_possible or cfg.diag_speed_text:
-        wpts = points.filter(F.col("kind") == "wpt")
-        wz = with_tile_pixel(with_zooms(wpts, cfg)).filter(
-            F.col("z") > F.lit(cfg.z_no_wpts)
-        )
-    if wpts_possible:
-        out = out.unionByName(_stamps(wz, color).select(*out.columns)) \
-                 .unionByName(_wpt_circles(wz, cfg).select(*out.columns))
-        if pdop_possible:
-            out = out.unionByName(
-                _pdop_events(wz, cfg, color).select(*out.columns))
+            F.col("lx2").alias("x2"), F.col("ly2").alias("y2"), cl_color))
+    if max(cfg.zooms()) > cfg.z_no_wpts:
+        out = out.unionByName(_wpt_circles(
+            with_pixel(draw.filter(F.col("kind") == "wpt")), cfg)
+            .select(*out.columns))
     if cfg.diag_speed_text:
         out = out.unionByName(
-            _speed_text_events(with_pixel(trk), wz, cfg).select(*out.columns))
+            _speed_text_events(with_pixel(draw)).select(*out.columns))
     return out
 
 
@@ -284,10 +254,12 @@ def _lines_possible(cfg: EngineConfig) -> bool:
 
 
 def _trk_gates(cfg: EngineConfig) -> tuple[Column, Column, Column]:
-    """(color, can_line, same_tile) over :func:`with_pair_tiles` rows."""
+    """(color, can_line, same_tile) over :func:`draw_relation` rows;
+    waypoints never draw lines."""
     color = (F.lit(-1) if cfg.heatmap else point_color_col(cfg)).alias("color")
     can_line = (
         F.lit(not cfg.heatmap)
+        & (F.col("kind") == F.lit("trkpt"))
         & F.col("prev_lat").isNotNull()
         & (F.col("z") >= F.lit(cfg.z_no_lines))
         & ~((F.col("flags").bitwiseAND(F.lit(8)) != 0)
@@ -297,122 +269,94 @@ def _trk_gates(cfg: EngineConfig) -> tuple[Column, Column, Column]:
     return color, can_line, same_tile
 
 
-def _explicit_trk_events(trk: DataFrame, cfg: EngineConfig, color,
-                         can_line, same_tile, pdop_possible: bool
-                         ) -> DataFrame:
-    """Stamps + same-tile lines (+ PDOP ellipses, and -d1 shadows) as a
-    union of branches off the SAME windowed projection (Spark reuses the
-    window exchange across them) — kept for heatmap / diagnostic modes,
-    where the fused gates of :func:`_fused_trk_events` don't apply."""
-    out = _stamps(with_pixel(trk), color)
-    if _lines_possible(cfg):  # else the line gates provably never pass
-        # gd draws pix -> ppix in the same-tile branch (gpx2tiles.c:671)
-        same = with_pixel(with_pixel(trk.filter(can_line & same_tile)),
-                          lat="prev_lat", lon="prev_lon", prefix="p_")
-        out = out.unionByName(same.filter(
-            (F.col("px") != F.col("p_px")) | (F.col("py") != F.col("p_py"))
-        ).select(*_KEY, F.lit(ET_LINE).alias("etype"),
-                 F.col("px").alias("x1"), F.col("py").alias("y1"),
-                 F.col("p_px").alias("x2"), F.col("p_py").alias("y2"), color))
-    if pdop_possible:
-        out = out.unionByName(_pdop_events(with_pixel(trk), cfg, color)
-                              .select(*out.columns))
-    return out
-
-
-def _stamps(pix: DataFrame, color) -> DataFrame:
-    """Stamps (gpx2tiles.c:627-654): every point, every zoom."""
-    return pix.select(*_KEY, F.lit(ET_STAMP).alias("etype"),
-                      F.col("px").alias("x1"), F.col("py").alias("y1"),
-                      F.lit(0).alias("x2"), F.lit(0).alias("y2"), color)
+def cross_tile_candidates(draw: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Cross-tile line candidates of :func:`draw_relation` rows
+    (gpx2tiles.c:675-703): for each line-gated pair whose endpoints lie
+    in different tiles, explode the tile rectangle between the endpoint
+    tiles (sequence() steps ±1 either way, x outer from the prev tile),
+    translate both endpoints into each candidate tile (lx1, ly1, lx2,
+    ly2) and keep the candidates whose segment crosses a tile border
+    (int64 CCW predicate).  Shared by build_events and the census."""
+    _, can_line, same_tile = _trk_gates(cfg)
+    return (
+        with_pixel(with_pixel(draw.filter(can_line & ~same_tile)),
+                   lat="prev_lat", lon="prev_lon", prefix="p_")
+        .withColumn("cx", F.explode(F.sequence(F.col("p_tx"), F.col("tx"))))
+        .withColumn("cy", F.explode(F.sequence(F.col("p_ty"), F.col("ty"))))
+        .withColumn("lx1", F.col("p_px") - F.lit(TILE_W) * (F.col("cx") - F.col("p_tx")))
+        .withColumn("ly1", F.col("p_py") - F.lit(TILE_H) * (F.col("cy") - F.col("p_ty")))
+        .withColumn("lx2", F.col("px") - F.lit(TILE_W) * (F.col("cx") - F.col("tx")))
+        .withColumn("ly2", F.col("py") - F.lit(TILE_H) * (F.col("cy") - F.col("ty")))
+        .filter(crossing_tile_col(F.col("lx1"), F.col("ly1"),
+                                  F.col("lx2"), F.col("ly2")))
+    )
 
 
 _EVENT_STRUCT_T = "array<struct<etype:int,x1:int,y1:int,x2:int,y2:int,color:int>>"
 
 
-def _fused_trk_events(trk: DataFrame, cfg: EngineConfig, color,
-                      can_line, same_tile, pdop_possible: bool) -> DataFrame:
-    """Stamps + same-tile lines (+ PDOP ellipses) from ONE pass over the
-    windowed/zoom-exploded track projection: each row emits a 1-3 element
-    event array (stamp always; line/PDOP behind their gates) and one
-    explode fans it out.  Field-for-field the same expressions as
-    :func:`_explicit_trk_events`: cur pixel = with_pixel, prev pixel =
-    the exact p_-prefixed pixel_cols over (p_tx, p_ty), gates identical —
-    only the number of passes over the shared subtree changes.
+def _point_events(draw: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Each drawn point's own-tile events from ONE pass over
+    :func:`draw_relation`: every row emits a 1-3 element event array
+    and one explode fans it out —
 
-    The branch-per-relation union re-executed the zoom explode, the tile
-    trig and the shared-window read once per branch (exchange reuse
-    notwithstanding) — measured 1.6× on the full-pyramid event build.
-    when()/array()/concat()/explode() all stay inside whole-stage
-    codegen, and when() evaluates a branch's pixel projection only on
-    rows whose gate passes — unlike the transform/filter HOF variant,
-    which is interpreted and was measured slower."""
-    base = with_pixel(trk).withColumn("color", color)
-    ppx, ppy = P.pixel_cols(F.col("prev_lon"), F.col("prev_lat"),
-                            F.col("p_tx"), F.col("p_ty"), F.col("z"))
-    cc = F.col("color")
+      stamp   (gpx2tiles.c:627-654): always;
+      line    the same-tile segment pix -> ppix (:663-671), behind the
+              line gates (never for waypoints, never in heatmap mode);
+      PDOP    diag_draw_point (:497-511): at z >= 17, points with the
+              PDOP flag (bit 64) and pdop > 1.8 get a d×d outline
+              ellipse, x2 = d = floor(pdop*3); with -d1 (diag_shadows)
+              every other point gets the ELSE branch of the same slot,
+              a 5×5 outline in SHADOW color, at every zoom.  The
+              heatmap sentinel color -1 resolves to the running heat
+              color in the fold (the reference passes the stamp color).
 
-    def ev(etype: int, x1, y1, x2, y2) -> Column:
+    A union of one relation per event kind re-executed the zoom
+    explode, the tile trig and the shared-window read once per branch
+    (exchange reuse notwithstanding) — measured 1.6× on the
+    full-pyramid event build.  when()/array()/concat()/explode() all
+    stay inside whole-stage codegen, and when() evaluates a branch's
+    pixel projection only on rows whose gate passes — unlike the
+    transform/filter HOF variant, which is interpreted and was measured
+    slower.  A standing test (tests/test_round2_ops.py) compares this
+    pass with the per-kind union."""
+    color, can_line, same_tile = _trk_gates(cfg)
+    base = with_pixel(draw).withColumn("color", color)
+    px, py = F.col("px"), F.col("py")
+
+    def ev(etype: int, x1, y1, x2, y2, c: Column = F.col("color")) -> Column:
         return F.struct(
             F.lit(etype).cast("int").alias("etype"),
             x1.cast("int").alias("x1"), y1.cast("int").alias("y1"),
             x2.cast("int").alias("x2"), y2.cast("int").alias("y2"),
-            cc.cast("int").alias("color"))
+            c.cast("int").alias("color"))
 
     empty = F.array().cast(_EVENT_STRUCT_T)
-    arrays = [F.array(ev(ET_STAMP, F.col("px"), F.col("py"),
-                         F.lit(0), F.lit(0)))]
-    line_gate = can_line & same_tile & ((F.col("px") != ppx)
-                                        | (F.col("py") != ppy))
-    arrays.append(F.when(line_gate, F.array(
-        ev(ET_LINE, F.col("px"), F.col("py"), ppx, ppy))).otherwise(empty))
-    if pdop_possible:
+    arrays = [F.array(ev(ET_STAMP, px, py, F.lit(0), F.lit(0)))]
+    if _lines_possible(cfg):  # else the line gates provably never pass
+        # gd draws pix -> ppix in the same-tile branch (gpx2tiles.c:671)
+        ppx, ppy = P.pixel_cols(F.col("prev_lon"), F.col("prev_lat"),
+                                F.col("p_tx"), F.col("p_ty"), F.col("z"))
+        line_gate = can_line & same_tile & ((px != ppx) | (py != ppy))
+        arrays.append(F.when(line_gate, F.array(
+            ev(ET_LINE, px, py, ppx, ppy))).otherwise(empty))
+    # PDOP ellipses only at z >= PDOP_MIN_Z, -d1 shadows at EVERY zoom
+    if max(cfg.zooms()) >= PDOP_MIN_Z or cfg.diag_shadows:
         pdop_gate = ((F.col("z") >= F.lit(PDOP_MIN_Z))
                      & (F.col("flags").bitwiseAND(F.lit(64)) != 0)
                      & (F.col("pdop") > F.lit(PDOP_THRESHOLD)))
+        shadow = (F.array(ev(ET_PDOP, px, py, F.lit(5), F.lit(0),
+                             F.lit(SHADOW_COLOR)))
+                  if cfg.diag_shadows else empty)
         arrays.append(F.when(pdop_gate, F.array(
-            ev(ET_PDOP, F.col("px"), F.col("py"),
-               F.floor(F.col("pdop") * F.lit(3.0)), F.lit(0)))).otherwise(empty))
+            ev(ET_PDOP, px, py, F.floor(F.col("pdop") * F.lit(3.0)),
+               F.lit(0)))).otherwise(shadow))
     return (base.select(*_KEY, F.explode(F.concat(*arrays)).alias("e"))
             .select(*_KEY, "e.etype", "e.x1", "e.y1", "e.x2", "e.y2",
                     "e.color"))
 
 
-def _pdop_events(pts: DataFrame, cfg: EngineConfig, color) -> DataFrame:
-    """F8: PDOP uncertainty ellipse events — diag_draw_point
-    (gpx2tiles.c:497-511): at z >= 17, points with the PDOP flag (bit 64)
-    and pdop > 1.8 get a d×d outline ellipse (d = floor(pdop*3)) drawn
-    with gd alpha 20 over the point pixel.  x2 carries the diameter; the
-    heatmap sentinel color -1 resolves to the running heat color in the
-    fold (the reference passes the just-computed stamp color).
-
-    -d1 (diag_shadows): the ELSE branch of the same diag slot draws a
-    5×5 SHADOW outline with alpha 20 on every point NOT matching the
-    PDOP condition (gpx2tiles.c:508-510) — at every zoom.  Shadow events
-    carry the explicit SHADOW color (gd passes SHADOW, not `color`)."""
-    pdop_cond = (
-        (F.col("z") >= F.lit(PDOP_MIN_Z))
-        & (F.col("flags").bitwiseAND(F.lit(64)) != 0)
-        & (F.col("pdop") > F.lit(PDOP_THRESHOLD))
-    )
-    key = [*_KEY, F.lit(ET_PDOP).alias("etype"),
-           F.col("px").alias("x1"), F.col("py").alias("y1")]
-    out = pts.filter(pdop_cond).select(
-        *key,
-        F.floor(F.col("pdop") * F.lit(3.0)).cast("int").alias("x2"),
-        F.lit(0).alias("y2"), color,
-    )
-    if cfg.diag_shadows:
-        shadows = pts.filter(~pdop_cond).select(
-            *key, F.lit(5).alias("x2"), F.lit(0).alias("y2"),
-            F.lit(SHADOW_COLOR).alias("color"),
-        )
-        out = out.unionByName(shadows)
-    return out
-
-
-def _speed_text_events(trk_pix: DataFrame, wpt_pix: DataFrame,
-                       cfg: EngineConfig) -> DataFrame:
+def _speed_text_events(pix: DataFrame) -> DataFrame:
     """-d4: diag_draw_tile_speed (gpx2tiles.c:481-495) — the FIRST point
     (in file → segment → point draw order) whose stamp lands in a tile
     writes that point's speed as text at the tile origin, plus an
@@ -422,9 +366,7 @@ def _speed_text_events(trk_pix: DataFrame, wpt_pix: DataFrame,
     the dot removed ('12.3' → 123); Java's and C's %.1f both round the
     binary double to nearest decimal (ties differ only on exact halves,
     which the speed chain does not produce)."""
-    cols = [*_KEY, "px", "py", "speed"]
-    u = trk_pix.select(*cols).unionByName(wpt_pix.select(*cols))
-    first = u.groupBy("z", "tx", "ty").agg(
+    first = pix.groupBy("z", "tx", "ty").agg(
         F.min(F.struct(*[F.col(c) for c in
                          ("doc_id", "seg_order", "pt_idx", "px", "py",
                           "speed")])).alias("f"))
@@ -442,7 +384,7 @@ def _speed_text_events(trk_pix: DataFrame, wpt_pix: DataFrame,
     )
 
 
-def _wpt_circles(wz: DataFrame, cfg: EngineConfig) -> DataFrame:
+def _wpt_circles(wpix: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Waypoint circle events over the neighbor-tile rect.
 
     Reproduces neigh_tile_circle/next_neigh_tile closed-form
@@ -454,7 +396,7 @@ def _wpt_circles(wz: DataFrame, cfg: EngineConfig) -> DataFrame:
     r = cfg.point_circle_diameter
     c0 = F.lit((r + TILE_W) // TILE_W)  # the off-by-one center offset
     return (
-        circle_rect_bounds(wz, r)
+        circle_rect_bounds(wpix, r)
         .withColumn("cx", F.explode(F.sequence(F.col("lt_x"), F.col("rb_x"))))
         .withColumn("cy", F.explode(F.sequence(F.col("lt_y"), F.col("rb_y"))))
         .select(

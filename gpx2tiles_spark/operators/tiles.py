@@ -49,19 +49,22 @@ def with_tile_pixel(df: DataFrame, lat: str = "lat", lon: str = "lon",
     return with_pixel(with_tile(df, lat, lon, z, prefix), lat, lon, z, prefix)
 
 
+def drawn_point_col(cfg: EngineConfig) -> Column:
+    """F5: the reference draws waypoints only when z > z_no_wpts
+    (gpx2tiles.c:733-735); track points at every zoom.  Needs (kind, z)."""
+    return (F.col("kind") == F.lit("trkpt")) | (F.col("z") > F.lit(cfg.z_no_wpts))
+
+
 def tile_point_counts(points: DataFrame, cfg: EngineConfig) -> DataFrame:
     """A1: per-(z,tx,ty) point counts — THE primary correctness artifact
     (tile->point_cnt++, gpx2tiles.c:617).  Hash aggregate with map-side
     partial aggregation; shuffle keyed (z,tx,ty).
 
-    The reference only processes waypoints when z > z_no_wpts
-    (gpx2tiles.c:733-735), so wpt rows count (and materialize tiles) only
-    above that zoom; track points count at every zoom."""
+    Waypoint rows count (and materialize tiles) only where they are
+    drawn (:func:`drawn_point_col`)."""
     exploded = with_tile_pixel(with_zooms(points, cfg))
     if "kind" in points.columns:
-        exploded = exploded.filter(
-            (F.col("kind") == "trkpt") | (F.col("z") > F.lit(cfg.z_no_wpts))
-        )
+        exploded = exploded.filter(drawn_point_col(cfg))
     return (
         exploded.groupBy("z", "tx", "ty")
         .agg(F.count("*").alias("point_cnt"))

@@ -118,31 +118,162 @@ def test_pdop_ellipse_rendered(spark, pdop_doc):
             ((expect >> 16) & 0xFF, (expect >> 8) & 0xFF, expect & 0xFF)
 
 
-@pytest.mark.parametrize("zooms", [(5, 8), (16, 18)], ids=["z5-8", "z16-18"])
-def test_fused_trk_events_equal_explicit_branches(spark, zooms):
-    """The fused one-explode track events and the explicit branch union
-    hold the same rows, with PDOP on and off, at zooms on both sides of
-    z_no_lines (7) and PDOP_MIN_Z (17)."""
-    from gpx2tiles_spark.operators.events import (_explicit_trk_events,
-                                                  _fused_trk_events,
-                                                  _trk_gates, paired_points,
-                                                  with_pair_tiles)
+def _per_kind_union_events(points, cfg):
+    """The reference for build_events: one relation per event kind,
+    unioned — track stamps, same-tile lines, PDOP / -d1 shadow ellipses
+    and cross-tile lines off a track-only pair relation; waypoint
+    stamps, circles and PDOP ellipses off a separate waypoint relation;
+    the -d4 text over both."""
+    from gpx2tiles_spark.config import (HIGHLIGHT_COLOR, PDOP_MIN_Z,
+                                        PDOP_THRESHOLD, SHADOW_COLOR,
+                                        TILE_H, TILE_W)
+    from gpx2tiles_spark.operators.events import (
+        _KEY, _speed_text_events, _wpt_circles, crossing_tile_col,
+        paired_points, point_color_col, with_pair_tiles)
+    from gpx2tiles_spark.operators.tiles import (with_pixel, with_tile_pixel,
+                                                 with_zooms)
 
-    cfg = EngineConfig(zoom_min=zooms[0], zoom_max=zooms[1])
-    points = parse_documents(generate_documents(spark, 6, partitions=2))
+    def _stamps(pix, color):
+        return pix.select(*_KEY, F.lit(ET_STAMP).alias("etype"),
+                          F.col("px").alias("x1"), F.col("py").alias("y1"),
+                          F.lit(0).alias("x2"), F.lit(0).alias("y2"), color)
+
+    def _pdop_events(pts, cfg, color):
+        pdop_cond = (
+            (F.col("z") >= F.lit(PDOP_MIN_Z))
+            & (F.col("flags").bitwiseAND(F.lit(64)) != 0)
+            & (F.col("pdop") > F.lit(PDOP_THRESHOLD))
+        )
+        key = [*_KEY, F.lit(ET_PDOP).alias("etype"),
+               F.col("px").alias("x1"), F.col("py").alias("y1")]
+        out = pts.filter(pdop_cond).select(
+            *key,
+            F.floor(F.col("pdop") * F.lit(3.0)).cast("int").alias("x2"),
+            F.lit(0).alias("y2"), color,
+        )
+        if cfg.diag_shadows:
+            shadows = pts.filter(~pdop_cond).select(
+                *key, F.lit(5).alias("x2"), F.lit(0).alias("y2"),
+                F.lit(SHADOW_COLOR).alias("color"),
+            )
+            out = out.unionByName(shadows)
+        return out
+
+    zmax = max(cfg.zooms())
+    lines_possible = (not cfg.heatmap) and zmax >= cfg.z_no_lines
+    wpts_possible = zmax > cfg.z_no_wpts
+    pdop_possible = zmax >= PDOP_MIN_Z or cfg.diag_shadows
     trk = with_pair_tiles(
-        paired_points(points.filter(F.col("kind") == "trkpt")), cfg).persist()
-    try:
-        for pdop in (False, True):
-            fused = _fused_trk_events(trk, cfg, *_trk_gates(cfg), pdop)
-            explicit = _explicit_trk_events(trk, cfg, *_trk_gates(cfg), pdop)
-            assert_same_multiset(fused, explicit)
-            etypes = {r.etype for r in
-                      explicit.select("etype").distinct().collect()}
-            assert ET_LINE in etypes  # same-tile lines on both sides
-            assert (ET_PDOP in etypes) == (pdop and zooms[1] >= 17)
-    finally:
-        trk.unpersist()
+        paired_points(points.filter(F.col("kind") == "trkpt")), cfg)
+    color = (F.lit(-1) if cfg.heatmap else point_color_col(cfg)).alias("color")
+    can_line = (
+        F.lit(not cfg.heatmap)
+        & F.col("prev_lat").isNotNull()
+        & (F.col("z") >= F.lit(cfg.z_no_lines))
+        & ~((F.col("flags").bitwiseAND(F.lit(8)) != 0)
+            & (F.col("speed") * F.lit(3.6) < F.lit(cfg.no_lines_speed_kph)))
+    )
+    same_tile = (F.col("tx") == F.col("p_tx")) & (F.col("ty") == F.col("p_ty"))
+
+    out = _stamps(with_pixel(trk), color)
+    if lines_possible:
+        same = with_pixel(with_pixel(trk.filter(can_line & same_tile)),
+                          lat="prev_lat", lon="prev_lon", prefix="p_")
+        out = out.unionByName(same.filter(
+            (F.col("px") != F.col("p_px")) | (F.col("py") != F.col("p_py"))
+        ).select(*_KEY, F.lit(ET_LINE).alias("etype"),
+                 F.col("px").alias("x1"), F.col("py").alias("y1"),
+                 F.col("p_px").alias("x2"), F.col("p_py").alias("y2"), color))
+        cross = (
+            with_pixel(with_pixel(trk.filter(can_line & ~same_tile)),
+                       lat="prev_lat", lon="prev_lon", prefix="p_")
+            .withColumn("cx", F.explode(F.sequence(F.col("p_tx"), F.col("tx"))))
+            .withColumn("cy", F.explode(F.sequence(F.col("p_ty"), F.col("ty"))))
+            .withColumn("lx1", F.col("p_px") - F.lit(TILE_W) * (F.col("cx") - F.col("p_tx")))
+            .withColumn("ly1", F.col("p_py") - F.lit(TILE_H) * (F.col("cy") - F.col("p_ty")))
+            .withColumn("lx2", F.col("px") - F.lit(TILE_W) * (F.col("cx") - F.col("tx")))
+            .withColumn("ly2", F.col("py") - F.lit(TILE_H) * (F.col("cy") - F.col("ty")))
+            .filter(crossing_tile_col(F.col("lx1"), F.col("ly1"),
+                                      F.col("lx2"), F.col("ly2")))
+        )
+        cl_color = (F.lit(HIGHLIGHT_COLOR).alias("color")
+                    if cfg.diag_highlight_cross else color)
+        out = out.unionByName(cross.select(
+            F.col("z"), F.col("cx").alias("tx"), F.col("cy").alias("ty"),
+            F.col("doc_id"), F.col("seg_order"), F.col("pt_idx"),
+            F.lit(ET_LINE).alias("etype"),
+            F.col("lx1").alias("x1"), F.col("ly1").alias("y1"),
+            F.col("lx2").alias("x2"), F.col("ly2").alias("y2"), cl_color,
+        ))
+    if pdop_possible:
+        out = out.unionByName(_pdop_events(with_pixel(trk), cfg, color)
+                              .select(*out.columns))
+
+    wpts = points.filter(F.col("kind") == "wpt")
+    wz = with_tile_pixel(with_zooms(wpts, cfg)).filter(
+        F.col("z") > F.lit(cfg.z_no_wpts)
+    )
+    if wpts_possible:
+        out = out.unionByName(_stamps(wz, color).select(*out.columns)) \
+                 .unionByName(_wpt_circles(wz, cfg).select(*out.columns))
+        if pdop_possible:
+            out = out.unionByName(
+                _pdop_events(wz, cfg, color).select(*out.columns))
+    if cfg.diag_speed_text:
+        cols = [*_KEY, "px", "py", "speed"]
+        out = out.unionByName(_speed_text_events(
+            with_pixel(trk).select(*cols).unionByName(wz.select(*cols)))
+            .select(*out.columns))
+    return out
+
+
+WPT_PDOP_XML = """<gpx>
+<wpt lat="48.915" lon="8.503"><pdop>2.5</pdop></wpt>
+<wpt lat="48.9153" lon="8.5034"><speed>4.0</speed></wpt>
+<wpt lat="48.95" lon="8.61"><pdop>3.4</pdop></wpt>
+<wpt lat="48.93" lon="8.55"></wpt>
+<trk><trkseg>
+<trkpt lat="48.915" lon="8.503"><time>2016-06-25T10:00:00Z</time><pdop>2.5</pdop></trkpt>
+<trkpt lat="48.9155" lon="8.5035"><time>2016-06-25T10:00:30Z</time><pdop>1.2</pdop></trkpt>
+<trkpt lat="48.921" lon="8.512"><time>2016-06-25T10:01:30Z</time><pdop>4.0</pdop></trkpt>
+</trkseg></trk></gpx>"""
+
+
+@pytest.fixture(scope="module")
+def wpt_pdop_points(spark):
+    """Generated documents plus one whose four waypoints chain across
+    tiles, with PDOP-flagged track points and waypoints."""
+    doc = spark.createDataFrame(
+        [("wptpdop", [{"kind": "gpx", "text": WPT_PDOP_XML,
+                       "media_ref": None, "offset": 0}])], SPANS_SCHEMA)
+    points = parse_documents(
+        generate_documents(spark, 6, partitions=2).unionByName(doc)).persist()
+    yield points
+    points.unpersist()
+
+
+@pytest.mark.parametrize("argv", [
+    [], ["-H"], ["-d", "1"], ["-d", "7"],
+    ["-H", "-d", "4", "-z", "12", "-Z", "18"],
+    ["-z", "1", "-Z", "6"], ["-z", "5", "-Z", "8"], ["-z", "16", "-Z", "18"],
+    ["-P", "10", "-c", "ff8000"], ["-S", "30", "-L", "3"],
+    ["-d", "1", "-z", "1", "-Z", "4"],
+], ids=lambda argv: "".join(argv) or "default")
+def test_build_events_equal_per_kind_union(spark, wpt_pdop_points, argv):
+    """build_events' one point pass over the shared draw relation holds
+    the same event rows as the per-kind union, for track points and
+    waypoints, in every mode."""
+    from gpx2tiles_spark.cli import parse_args
+
+    cfg = parse_args(argv)[0]
+    points = wpt_pdop_points
+    kinds = {(r.kind, r.pdop_flag) for r in points.select(
+        "kind", ((F.col("flags").bitwiseAND(F.lit(64)) != 0)
+                 & (F.col("pdop") > 1.8)).alias("pdop_flag"))
+        .distinct().collect()}
+    assert kinds == {(k, f) for k in ("trkpt", "wpt") for f in (False, True)}
+    assert_same_multiset(build_events(points, cfg),
+                         _per_kind_union_events(points, cfg))
 
 
 # --- A1/A2 waypoint zoom gate --------------------------------------------------

@@ -41,14 +41,21 @@ RENDER_DOCS = 40_000  # 10× bench.py's sf0.1 render corpus
 
 VERSION = "2"  # v2: documents + embeddings tiled 10x too (r5 full sweep)
 
+# DuckDB settings for the sf1/sf10 oracles (check_oracles.run_oracle):
+# bound the oracle's memory and let it spill — DuckDB's default limit is
+# 80% of RAM, and the sf1 near-dup recheck (80M pairs x 64 dims)
+# ballooned past the host's memory
+ORACLE_SETTINGS = ("SET memory_limit='24GB'",
+                   "SET temp_directory='/tmp/duckdb_spill'")
 
-def _tile10(df, id_col: str, copies: int = TILE_COPIES):
+
+def tile_copies(df, id_col: str, copies: int, n_base: int):
+    """copies exact copies of every row with ids base + m*n_base."""
     from pyspark.sql import functions as F
 
-    n = df.count()
     others = [c for c in df.columns if c != id_col]
-    parts = [df.select((F.col(id_col) + k * n).alias(id_col), *others)
-             for k in range(copies)]
+    parts = [df.select((F.col(id_col) + m * n_base).alias(id_col), *others)
+             for m in range(copies)]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -80,7 +87,8 @@ def build_sf1(spark) -> None:
         dst = os.path.join(SF1_DIR, f"{t}.parquet")
         if os.path.islink(dst):
             os.remove(dst)           # v1 layouts symlinked these
-        _tile10(spark.read.parquet(os.path.join(SF01, f"{t}.parquet")), idc) \
+        base = spark.read.parquet(os.path.join(SF01, f"{t}.parquet"))
+        tile_copies(base, idc, TILE_COPIES, base.count()) \
             .repartition(16).write.mode("overwrite").parquet(dst)
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem"]:

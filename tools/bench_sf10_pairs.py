@@ -46,7 +46,7 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "tools"))
 
-from bench_sf1 import SF1_DIR, _tile10, ensure_sf1  # noqa: E402
+from bench_sf1 import SF1_DIR, ensure_sf1, tile_copies  # noqa: E402
 from bench_sf10_render import SF10_DIR, ensure_sf10  # noqa: E402
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,23 +67,11 @@ def ensure_sf10_pairs(spark) -> None:
         dst = os.path.join(SF10_DIR, f"{t}.parquet")
         if os.path.islink(dst):
             os.remove(dst)
-        _tile10(spark.read.parquet(os.path.join(SF1_DIR, f"{t}.parquet")), idc) \
+        base = spark.read.parquet(os.path.join(SF1_DIR, f"{t}.parquet"))
+        tile_copies(base, idc, 10, base.count()) \
             .repartition(32).write.mode("overwrite").parquet(dst)
     with open(marker, "w") as f:
         f.write(PAIRS_VERSION)
-
-
-def tile_copies(df, id_col: str, copies: int, n_base: int):
-    """copies exact copies of every row with ids base + m*n_base."""
-    from pyspark.sql import functions as F
-
-    others = [c for c in df.columns if c != id_col]
-    parts = [df.select((F.col(id_col) + m * n_base).alias(id_col), *others)
-             for m in range(copies)]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def lift_pairs(pairs_x2, n_base: int, a_col: str, b_col: str):

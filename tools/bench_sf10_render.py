@@ -27,7 +27,8 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "tools"))
 
-from bench_sf1 import SF1_DIR, ensure_sf1  # noqa: E402
+from bench_sf1 import ORACLE_SETTINGS, SF1_DIR, ensure_sf1  # noqa: E402
+from check_oracles import canon, run_oracle  # noqa: E402
 
 SF10_DIR = os.path.join(_REPO, ".bench_sf10")
 RENDER_DOCS = 400_000  # 100x bench.py's sf0.1 corpus
@@ -67,28 +68,10 @@ def ensure_sf10(spark) -> None:
         f.write(VERSION)
 
 
-def _oracle(sql: str) -> tuple[list, list]:
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        con.execute("SET memory_limit='24GB'")
-        con.execute("SET temp_directory='/tmp/duckdb_spill'")
-        p = os.path.join(SF10_DIR, "events.parquet")
-        src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
-        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet({src})")
-        cur = con.execute(sql)
-        cols = [d[0] for d in cur.description]
-        return cur.fetchall(), cols
-    finally:
-        con.close()
-
-
 def main() -> int:
     from pyspark.sql import functions as F
 
     from bench import _timed_clean
-    from check_oracles import canon
     from gpx2tiles_spark.config import EngineConfig
     from gpx2tiles_spark.corpus import generate_documents
     from gpx2tiles_spark.operators.events import build_events
@@ -129,7 +112,7 @@ def main() -> int:
         timings[name] = round(sec, 3)
         noise[name] = info
         sn, sh = canon(state["rows"], state["cols"])
-        orows, ocols = _oracle(osql[name])
+        orows, ocols = run_oracle(osql[name], SF10_DIR, ORACLE_SETTINGS)
         on, oh = canon(orows, ocols)
         ok = sn == on and sorted(state["cols"]) == sorted(ocols) and sh == oh
         oracles[name] = "MATCH" if ok else "MISMATCH"

@@ -21,37 +21,8 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "tools"))
 
-from bench_sf1 import SF1_DIR, ensure_sf1  # noqa: E402
-from check_oracles import canon  # noqa: E402
-
-_TABLES = ("region nation customer supplier part orders lineitem "
-           "events documents embeddings").split()
-
-
-def _oracle(sql: str) -> tuple[list, list]:
-    """Fresh connection per oracle (the documented DuckDB binder-error
-    poisoning quirk), views over the sf1 parquet (dirs need globs)."""
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        # bound the oracle's memory and let it spill: DuckDB's default
-        # limit is 80% of RAM, and the sf1 near-dup recheck (80M pairs x
-        # 64 dims) ballooned past the sandbox's kill threshold
-        con.execute("SET memory_limit='24GB'")
-        con.execute("SET temp_directory='/tmp/duckdb_spill'")
-        for t in _TABLES:
-            p = os.path.join(SF1_DIR, f"{t}.parquet")
-            if os.path.exists(p):
-                src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
-                con.execute(f"CREATE VIEW {t} AS SELECT * "
-                            f"FROM read_parquet({src})")
-        cur = con.execute(sql)
-        cols = [d[0] for d in cur.description]
-        rows = cur.fetchall()
-        return rows, cols
-    finally:
-        con.close()
+from bench_sf1 import ORACLE_SETTINGS, SF1_DIR, ensure_sf1  # noqa: E402
+from check_oracles import canon, run_oracle  # noqa: E402
 
 
 def main() -> int:
@@ -91,7 +62,7 @@ def main() -> int:
                    "clean": info.get("clean")}
             if name in osql:
                 to0 = time.time()
-                orows, ocols = _oracle(osql[name])
+                orows, ocols = run_oracle(osql[name], SF1_DIR, ORACLE_SETTINGS)
                 on, oh = canon(orows, ocols)
                 rec["oracle_rows"] = on
                 rec["oracle_sec"] = round(time.time() - to0, 3)

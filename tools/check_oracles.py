@@ -28,9 +28,35 @@ def canon(rows, cols):
     return len(out), h.hexdigest()
 
 
-def main() -> None:
+TABLES = ("region nation customer supplier part orders lineitem "
+          "events documents embeddings").split()
+
+
+def run_oracle(sql: str, sf_dir: str, settings: tuple[str, ...] = ()
+               ) -> tuple[list, list]:
+    """(rows, column names) of one oracle SQL text on a fresh DuckDB
+    connection (a failed bind can poison a connection) with a view per
+    parquet table present in sf_dir (directories are read by glob).
+    ``settings`` are SET statements run first."""
     import duckdb
 
+    con = duckdb.connect()
+    try:
+        for stmt in settings:
+            con.execute(stmt)
+        for t in TABLES:
+            p = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(p):
+                src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
+                con.execute(f"CREATE VIEW {t} AS SELECT * "
+                            f"FROM read_parquet({src})")
+        cur = con.execute(sql)
+        return cur.fetchall(), [d[0] for d in cur.description]
+    finally:
+        con.close()
+
+
+def main() -> None:
     from gpx2tiles_spark.queries import oracle_sql, queries
     from gpx2tiles_spark.session import get_spark
 
@@ -48,20 +74,7 @@ def main() -> None:
             if name not in osql:
                 print(f"{name}: rows={len(srows)} (no_oracle)")
                 continue
-            con = duckdb.connect()
-            for t in ("region nation customer supplier part orders lineitem "
-                      "events documents embeddings").split():
-                p = os.path.join(sf_dir, f"{t}.parquet")
-                if os.path.exists(p):
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{p}/*.parquet')"
-                        if os.path.isdir(p) else
-                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-            cur = con.execute(osql[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-            con.close()
+            orows, ocols = run_oracle(osql[name], sf_dir)
             sn, sh = canon(srows, scols)
             on, oh = canon(orows, ocols)
             ok = (sn == on and sorted(scols) == sorted(ocols) and sh == oh)
