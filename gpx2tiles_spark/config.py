@@ -51,7 +51,6 @@ class EngineConfig:
     # libgd treats as "draw nothing extra"; thickness 0 lines in gd still draw
     # a 1px Bresenham line (gd clamps), we model 0 -> 1px. (-t, gpx2tiles.c:60)
     thickness: dict[int, int] = field(default_factory=dict)
-    incremental: bool = True  # default; -I disables (truncate first)
     # -d diagnostic overlays (bitmask parse at gpx2tiles.c:989-997);
     # diag_shadows makes every point an alpha-blended ellipse (reads
     # canvas state at every zoom), so it forces the sequential fold paths

@@ -1,9 +1,8 @@
-"""Raster primitives on numpy RGBA canvases + integer clip predicates.
+"""Raster primitives on numpy RGBA canvases.
 
 Replaces the reference's libgd calls (gdImageSetPixel / gdImageLine /
 gdImageFilledRectangle / gdImageFilledEllipse — gpx2tiles.c §K12) with
-numpy kernels, and the int64 CCW segment-intersection predicate
-(gpx2tiles.c:421-447) with vectorized numpy int64 math.
+numpy kernels.
 
 Lines are plain Bresenham: the reference configures gd antialiasing but
 never draws with the gdAntiAliased pseudo-color, so its output lines are
@@ -15,46 +14,6 @@ from __future__ import annotations
 import numpy as np
 
 from .config import TILE_H, TILE_W
-
-# ---------------------------------------------------------------------------
-# Integer CCW intersection predicates (vectorized)
-# ---------------------------------------------------------------------------
-
-def turn(p1x, p1y, p2x, p2y, p3x, p3y):
-    """Orientation sign of (p1,p2,p3) in int64, as the reference's `turn`
-    (gpx2tiles.c:421-432): sign((p3y-p1y)(p2x-p1x) - (p2y-p1y)(p3x-p1x))."""
-    a = (np.int64(p3y) - np.int64(p1y)) * (np.int64(p2x) - np.int64(p1x))
-    b = (np.int64(p2y) - np.int64(p1y)) * (np.int64(p3x) - np.int64(p1x))
-    return np.sign(a - b).astype(np.int64)
-
-
-def intersects(p1, p2, p3, p4):
-    """Proper segment intersection (gpx2tiles.c:434-437); each p = (x, y)."""
-    return (
-        turn(p1[0], p1[1], p3[0], p3[1], p4[0], p4[1])
-        != turn(p2[0], p2[1], p3[0], p3[1], p4[0], p4[1])
-    ) & (
-        turn(p1[0], p1[1], p2[0], p2[1], p3[0], p3[1])
-        != turn(p1[0], p1[1], p2[0], p2[1], p4[0], p4[1])
-    )
-
-
-def crossing_tile(x1, y1, x2, y2, w: int = TILE_W, h: int = TILE_H):
-    """True where segment (x1,y1)-(x2,y2) crosses one of the four tile border
-    edges (gpx2tiles.c:439-447).  Vectorized over numpy arrays."""
-    p1 = (np.asarray(x1, np.int64), np.asarray(y1, np.int64))
-    p2 = (np.asarray(x2, np.int64), np.asarray(y2, np.int64))
-    edges = [
-        ((0, 0), (w - 1, 0)),
-        ((0, 0), (0, h - 1)),
-        ((w - 1, 0), (w - 1, h - 1)),
-        ((0, h - 1), (w - 1, h - 1)),
-    ]
-    out = np.zeros(np.broadcast(p1[0], p2[0]).shape, dtype=bool)
-    for e1, e2 in edges:
-        out |= intersects(p1, p2, e1, e2)
-    return out
-
 
 # ---------------------------------------------------------------------------
 # Canvas primitives.  Canvas = (H, W, 4) uint8 RGBA, row = y, col = x.

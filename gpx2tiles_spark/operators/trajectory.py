@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import projection as P
+from . import tiles
 
 
 def _epoch(col):
@@ -55,13 +55,6 @@ def _epoch(col):
     TIMESTAMP_NTZ, which Spark won't cast to long directly — route via
     timestamp (UTC session — same convention as geo.py:63)."""
     return F.floor(F.col(col).cast("timestamp").cast("double")).cast("long")
-
-
-def with_tile(points: DataFrame, zoom: int) -> DataFrame:
-    """Attach the slippy tile of each point at ``zoom`` (native Columns,
-    same op tree as queries.tx_sql/ty_sql — proven by tile_assign_z12)."""
-    return points.withColumn("tx", P.tilex_col(F.col("lon"), zoom)) \
-                 .withColumn("ty", P.tiley_col(F.col("lat"), zoom))
 
 
 def dwell_islands(track_points: DataFrame, zoom: int = 14,
@@ -79,7 +72,7 @@ def dwell_islands(track_points: DataFrame, zoom: int = 14,
     coalesces the second exchange's tiny partitions.  Nothing is ever
     wider than one document's track.
     """
-    pts = with_tile(track_points, zoom)
+    pts = tiles.with_tile(track_points, z=zoom)
     w = Window.partitionBy("doc_id").orderBy("seg_order", "pt_idx")
     moved = (
         F.lag("tx").over(w).isNull()
@@ -129,7 +122,7 @@ def co_visit_pairs(points: DataFrame, zoom: int = 7,
     partition — at 10^12 points the pair volume is Σ min(nu, cap)² per
     bucket, never corpus².
     """
-    pts = with_tile(points, zoom)
+    pts = tiles.with_tile(points, z=zoom)
     posts = pts.select(
         "user_id", "tx", "ty",
         F.floor(_epoch("ts") / F.lit(86400)).cast("long").alias("day"),
@@ -167,7 +160,7 @@ def tile_decay(points: DataFrame, zoom: int = 6,
     non-keyed exchange is the 1-row scalar.  Counts × 2^29 stay far
     inside int64 until a single (tile, day) holds > 2^33 points.
     """
-    pts = with_tile(points, zoom)
+    pts = tiles.with_tile(points, z=zoom)
     byday = pts.groupBy("tx", "ty",
                         F.floor(_epoch("ts") / F.lit(86400)).cast("long")
                         .alias("day")) \
@@ -231,7 +224,7 @@ def tile_concurrency(points: DataFrame, zoom: int = 6) -> DataFrame:
     ≤ |users|·|tiles| intervals, then a tile-keyed window over 2 rows
     per interval; both stages partial-agg/window on their natural keys.
     """
-    pts = with_tile(points, zoom)
+    pts = tiles.with_tile(points, z=zoom)
     iv = pts.groupBy("user_id", "tx", "ty").agg(
         F.min(_epoch("ts")).alias("t0"),
         F.max(_epoch("ts")).alias("t1"))
@@ -256,7 +249,7 @@ def session_ends(points: DataFrame, zoom: int,
     session's first/last epoch second — the shared core of od_matrix and
     od_travel_time (lag-gap cumsum, endpoints by row_number in both
     (ts, pid) directions)."""
-    pts = with_tile(points, zoom)
+    pts = tiles.with_tile(points, z=zoom)
     w = Window.partitionBy("user_id").orderBy("ts", "pid")
     gap = gap_minutes * 60
     new_sess = (

@@ -1,15 +1,22 @@
-"""End-to-end tiling pipeline: documents → points → events → tiles → sink.
+"""End-to-end tiling pipeline: documents → points → events → tile files.
 
 Physical shape (SURVEY.md §3.3 mirror):
   stage 1  parse      map-only (mapInPandas, zero shuffle)
   stage 2  pairing    window shuffle on (doc_id, seg_order)
   stage 3  explode    zoom × tile/pixel projection (narrow)
   stage 4  rasterize  hash shuffle into (z, tx, ty) groups → Arrow fold
-  stage 5  sink       PNG writes in the fold's Python worker / parquet tiles
+  stage 5  sink       PNG writes in the fold's Python worker
 
-Exactly two shuffles end-to-end.  `points` is persisted between the
-aggregate queries and the render so parse runs once (the reference
-re-parses nothing but re-renders per zoom; gpx2tiles.c:1156-1208).
+The pairing shuffle runs once per event branch that reads the pair
+window: the point pass and the cross-tile lines read different columns
+of it, so Spark plans two exchanges and reuses neither (docs/PLANS.md,
+prepared_events).  The parse runs once, from the persisted points (the
+reference re-parses nothing but re-renders per zoom;
+gpx2tiles.c:1156-1208).
+
+For the tiles as a DataFrame (z, tx, ty, point_cnt, n_events, n_docs,
+png), build ``rasterize(build_events(points, cfg), cfg)`` over points
+that stay, e.g. a parquet copy of the parse.
 """
 
 from __future__ import annotations
@@ -26,42 +33,27 @@ from ..operators.raster import ZoomStats, rasterize
 
 @dataclass
 class RenderResult:
-    # (z, tx, ty, point_cnt, n_events, n_docs, png); None after a render
-    # with out_dir, whose tiles exist only as the files it wrote
-    tiles: DataFrame | None
-    points: DataFrame | None = None  # persisted parse output; unpersist()
-    # it once tiles are materialized (tiles reads it lazily)
-    zoom_stats: list[ZoomStats] | None = None  # per-zoom (z, tiles,
-    # points) of the tiles written by render_pyramid(out_dir=…)
+    zoom_stats: list[ZoomStats]  # per-zoom (z, tiles, points) written
 
 
-def render_pyramid(documents: DataFrame, cfg: EngineConfig | None = None,
-                   out_dir: str | None = None,
+def render_pyramid(documents: DataFrame, cfg: EngineConfig | None = None, *,
+                   out_dir: str,
                    store: DataFrame | None = None) -> RenderResult:
-    """documents → tiles.  With ``out_dir`` each tile is written by the
-    Python worker that folds it, ``zoom_stats`` holds their per-zoom
-    counts and ``tiles`` is None."""
+    """documents → ``{z}/{tx}/{ty}.png`` under ``out_dir``, each tile
+    written by the Python worker that folds it (over the store's newest
+    base per tile when a store is given)."""
     cfg = cfg or EngineConfig()
-    # ALWAYS persist the pre-explode points: the event relation is a
-    # union of branches (the fused stamp/line/PDOP explode, cross-tile
-    # lines, waypoint stamps/circles/PDOP, -d4 text) and Catalyst prunes
-    # the shared Window out of the branches that don't read lag columns
-    # — without a cache each branch re-runs the expensive parse from the
-    # scan (observed 7× parse in the physical plan, docs/PLANS.md).
-    # points is the natural multi-consumer materialization point at any
-    # scale.
+    # persist the pre-explode points: build_events unions up to four
+    # branches over them (the one-explode point pass, cross-tile lines,
+    # waypoint circles, -d4 text), and without a cache each branch
+    # re-runs the parse from the scan.  Released once the one job ran.
     points = parse_documents(documents).persist()
-    events = build_events(points, cfg)
-    # rasterize() self-routes (see its docstring): the partition-sliced
-    # fold, over the store's newest base per tile when a store is given
-    out = rasterize(events, cfg, store=store, out_dir=out_dir)
-    if out_dir is None:
-        return RenderResult(tiles=out, points=points)
-    # one job; the tiles are never cached or read back
     try:
+        out = rasterize(build_events(points, cfg), cfg, store=store,
+                        out_dir=out_dir)
+        # one job; the tiles are never cached or read back
         by_z = out.toPandas().groupby("z").sum()
     finally:
         points.unpersist()
-    return RenderResult(tiles=None, zoom_stats=[
-        ZoomStats(int(z), int(r.tiles), int(r.points))
-        for z, r in by_z.iterrows()])
+    return RenderResult([ZoomStats(int(z), int(r.tiles), int(r.points))
+                         for z, r in by_z.iterrows()])

@@ -168,42 +168,6 @@ def sessionize_stateful(stream_events: DataFrame,
         "update", GroupStateTimeout.NoTimeout)
 
 
-def hll_registers_stream(stream_keyed: DataFrame,
-                         group_cols: list[str]) -> DataFrame:
-    """Streaming HLL register maintenance — the sketch operator
-    (operators/sketch.py) lifted onto an unbounded stream.
-
-    Register MAX is associative, commutative and MONOTONE, so it is a
-    legal streaming aggregation with PERMANENTLY BOUNDED state: ≤ m
-    (256) rows per group, forever, no watermark needed — the sketch IS
-    its own state bound.  Complete-mode output re-emits the ≤ m·groups
-    register table each trigger; a downstream batch ``hll_estimate``
-    turns any snapshot into the cardinality estimate, and because max
-    commutes with union, the converged replay equals the batch sketch
-    exactly (the oracle row checks precisely this).
-
-    ``stream_keyed`` needs (group_cols..., ck: string)."""
-    from ..operators.sketch import hll_registers
-
-    return hll_registers(stream_keyed, F.col("ck"), group_cols)
-
-
-def cms_registers_stream(stream_df: DataFrame, key) -> DataFrame:
-    """Streaming count-min sketch maintenance — operators/pipeline.py's
-    CMS lifted onto an unbounded stream.
-
-    Register counts are a groupBy-SUM: associative, commutative, and a
-    legal streaming aggregation with PERMANENTLY BOUNDED state (≤ d·256
-    rows, forever — the sketch is its own state bound, no watermark).
-    Complete-mode output re-emits the register table each trigger; any
-    snapshot can be point-queried by the batch ``cms_estimates``, and
-    because count-sum commutes with union, the converged stream sketch
-    equals the batch sketch exactly (the oracle row checks this)."""
-    from ..operators.pipeline import cms_registers
-
-    return cms_registers(stream_df, key)
-
-
 GEOFENCE_OUTPUT = T.StructType([
     T.StructField("user_id", T.LongType(), False),
     T.StructField("pid", T.LongType(), False),

@@ -11,6 +11,16 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 REFERENCE_GPX = "/root/reference/test-with-network-gps-source.gpx"
+# registry rows whose results read state the row itself set up: a
+# memory-sink stream, store files, or the oracle cache's parquet
+STATEFUL_ROWS = [
+    "streaming_sessionize", "streaming_windowed_counts",
+    "streaming_hll_census", "streaming_dedup", "streaming_interval_join",
+    "streaming_cms", "streaming_geofence",
+    "streaming_gpx_arrival", "store_as_of", "incremental_store",
+    "store_diff", "census_mtf_order",
+    "render_tiles", "render_heatmap", "raster_vector_roundtrip",
+]
 # the reference repository's own test track; tests that read it skip
 # where that checkout is absent
 needs_reference_gpx = pytest.mark.skipif(
@@ -34,3 +44,12 @@ def assert_same_multiset(a, b) -> None:
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
+
+def render_tiles(documents, cfg, store=None):
+    """The tiles render_pyramid would write, as a DataFrame (z, tx, ty,
+    point_cnt, n_events, n_docs, png)."""
+    from gpx2tiles_spark.operators.events import build_events
+    from gpx2tiles_spark.operators.parse import parse_documents
+    from gpx2tiles_spark.operators.raster import rasterize
+
+    return rasterize(build_events(parse_documents(documents), cfg), cfg, store)

@@ -135,14 +135,17 @@ def test_intensify_black_and_clamp():
 
 
 def test_crossing_tile_predicate():
+    # the production kernel (clip_candidates, the census simulation)
+    from gpx2tiles_spark.operators.events import crossing_tile_np
+
     # horizontal segment crossing the right edge
-    assert bool(draw.crossing_tile(200, 100, 300, 100))
+    assert bool(crossing_tile_np(200, 100, 300, 100))
     # fully interior segment does not cross
-    assert not bool(draw.crossing_tile(10, 10, 200, 200))
+    assert not bool(crossing_tile_np(10, 10, 200, 200))
     # fully outside but passing through the tile: crosses two borders
-    assert bool(draw.crossing_tile(-50, 128, 300, 128))
+    assert bool(crossing_tile_np(-50, 128, 300, 128))
     # vectorized
-    m = draw.crossing_tile(
+    m = crossing_tile_np(
         np.array([200, 10]), np.array([100, 10]),
         np.array([300, 20]), np.array([100, 20])
     )

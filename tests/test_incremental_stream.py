@@ -8,11 +8,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import render_tiles
 from gpx2tiles_spark.config import EngineConfig
 from gpx2tiles_spark.corpus import generate_documents
 from gpx2tiles_spark.operators.raster import SNAPSHOT_COL
 from gpx2tiles_spark.pngcodec import decode_png
-from gpx2tiles_spark.plans.pipeline import render_pyramid
 from gpx2tiles_spark.streaming.incremental import (TileStore, process_batches,
                                                    run_streaming)
 
@@ -25,7 +25,7 @@ def _tiles_map(df):
 
 def test_batched_store_equals_oneshot(spark, tmp_path):
     docs = generate_documents(spark, 10, partitions=2).cache()
-    full = _tiles_map(render_pyramid(docs, CFG).tiles)
+    full = _tiles_map(render_tiles(docs, CFG))
 
     store = process_batches(spark, docs, str(tmp_path / "store"), CFG, n_batches=3)
     got = _tiles_map(store.current().select("z", "tx", "ty", "point_cnt", "png"))
@@ -66,7 +66,7 @@ def test_streaming_incremental(spark, tmp_path):
     q2.awaitTermination(120)
 
     store = TileStore(spark, sdir)
-    full = _tiles_map(render_pyramid(docs, CFG).tiles)
+    full = _tiles_map(render_tiles(docs, CFG))
     got = _tiles_map(store.current().select("z", "tx", "ty", "point_cnt", "png"))
     assert set(got) == set(full)
     for k in full:

@@ -14,7 +14,7 @@ from gpx2tiles_spark.operators.parse import parse_documents
 from gpx2tiles_spark.operators.raster import rasterize
 from gpx2tiles_spark.pngcodec import decode_png
 from gpx2tiles_spark.plans.pipeline import render_pyramid
-from tests.conftest import REFERENCE_GPX, needs_reference_gpx
+from tests.conftest import REFERENCE_GPX, needs_reference_gpx, render_tiles
 
 GOLDEN_TILES = {14: (8579, 5632), 15: (17158, 11264), 16: (34316, 22529),
                 17: (68632, 45059), 18: (137264, 90119)}
@@ -31,8 +31,8 @@ def fixture_doc(spark):
 
 @pytest.fixture(scope="module")
 def fixture_tiles(fixture_doc):
-    res = render_pyramid(fixture_doc, EngineConfig())
-    return {(r.z, r.tx, r.ty): r for r in res.tiles.collect()}
+    tiles = render_tiles(fixture_doc, EngineConfig())
+    return {(r.z, r.tx, r.ty): r for r in tiles.collect()}
 
 
 @needs_reference_gpx
@@ -79,11 +79,11 @@ def test_fixture_line_colors(fixture_tiles):
 def test_corpus_render_and_incremental(spark, tmp_path):
     cfg = EngineConfig(zoom_min=1, zoom_max=10)
     docs = generate_documents(spark, 12, partitions=2).cache()
-    full = render_pyramid(docs, cfg).tiles.toPandas().set_index(["z", "tx", "ty"])
+    full = render_tiles(docs, cfg).toPandas().set_index(["z", "tx", "ty"])
 
     half1 = docs.filter(F.col("doc_id") < "doc00000006")
     half2 = docs.filter(F.col("doc_id") >= "doc00000006")
-    t1 = render_pyramid(half1, cfg).tiles
+    t1 = render_tiles(half1, cfg)
     store = t1.select("z", "tx", "ty", "point_cnt", "png")
     t2 = rasterize(build_events(parse_documents(half2), cfg), cfg, store=store)
     # tiles touched only by batch 1 keep their old content; batch-2 tiles

@@ -15,7 +15,7 @@ from gpx2tiles_spark.operators.parse import parse_documents
 from gpx2tiles_spark.operators.raster import tiles_to_pixels
 from gpx2tiles_spark.plans.pipeline import render_pyramid
 from gpx2tiles_spark.sources.tilestore import read_tile_pyramid, remove_tiles
-from tests.conftest import REFERENCE_GPX, needs_reference_gpx
+from tests.conftest import REFERENCE_GPX, needs_reference_gpx, render_tiles
 
 CFG = EngineConfig(zoom_min=14, zoom_max=16)
 
@@ -34,7 +34,7 @@ def test_raster_vector_roundtrip(spark, fixture_doc):
     """Every source point's stamped pixel must be recoverable from the
     rendered raster, and its inverse-projected center must land within
     one pixel's geographic size of the original coordinates."""
-    tiles = render_pyramid(fixture_doc, CFG).tiles
+    tiles = render_tiles(fixture_doc, CFG)
     pixels = tiles_to_pixels(tiles).toPandas()
     points = parse_documents(fixture_doc).toPandas()
     trk = points[points.kind == "trkpt"]
@@ -92,7 +92,7 @@ def test_fs_store_as_incremental_base(spark, tmp_path):
     t2 = rasterize(build_events(parse_documents(b), cfg), cfg,
                    store=store.withColumn("point_cnt", F.lit(0)))
     full = {(r.z, r.tx, r.ty): bytes(r.png)
-            for r in render_pyramid(docs, cfg).tiles.collect()}
+            for r in render_tiles(docs, cfg).collect()}
     got = {(r.z, r.tx, r.ty): bytes(r.png) for r in t2.collect()}
     for k in got:  # tiles touched by batch 2 must equal the one-shot render
         assert decode_png(got[k]).tobytes() == decode_png(full[k]).tobytes(), k

@@ -204,7 +204,6 @@ def test_render_out_dir_one_pass(spark, tmp_path):
         assert out_nodes <= ref_nodes, (name, out_nodes, ref_nodes)
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         assert set(jsc.getPersistentRDDs().keys()) == before, name
-        assert res.points is None and res.tiles is None
 
         got = _read_tree(out)
         assert set(got) == {(r.z, r.tx, r.ty) for r in rows}, name

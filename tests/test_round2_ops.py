@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from conftest import assert_same_multiset
+from conftest import assert_same_multiset, render_tiles
 from pyspark.sql import functions as F
 
 from gpx2tiles_spark.config import EngineConfig, PDOP_ALPHA
@@ -20,7 +20,6 @@ from gpx2tiles_spark.operators.raster import (_fold_arrays,
                                               rasterize)
 from gpx2tiles_spark.operators.tiles import tile_point_counts
 from gpx2tiles_spark.pngcodec import blank_tile, decode_png
-from gpx2tiles_spark.plans.pipeline import render_pyramid
 
 
 # --- heatmap -----------------------------------------------------------------
@@ -103,7 +102,7 @@ def test_pdop_events_gated(spark, pdop_doc):
 def test_pdop_ellipse_rendered(spark, pdop_doc):
     from gpx2tiles_spark import draw
     cfg = EngineConfig(zoom_min=17, zoom_max=17)
-    tiles = render_pyramid(pdop_doc, cfg).tiles.collect()
+    tiles = render_tiles(pdop_doc, cfg).collect()
     ev = build_events(parse_documents(pdop_doc), cfg)
     r = ev.filter(F.col("etype") == ET_PDOP).collect()[0]
     tile = next(t for t in tiles if (t.z, t.tx, t.ty) == (r.z, r.tx, r.ty))
@@ -286,7 +285,7 @@ def test_tile_point_counts_match_render(spark):
     a1 = {(r.z, r.tx, r.ty): r.point_cnt
           for r in tile_point_counts(points, cfg).collect()}
     rendered = {(r.z, r.tx, r.ty): r.point_cnt
-                for r in render_pyramid(docs, cfg).tiles.collect()}
+                for r in render_tiles(docs, cfg).collect()}
     # every A1 tile matches the render's point_cnt; render-only tiles are
     # line-crossing neighbors with zero stamps
     for k, v in a1.items():
@@ -359,7 +358,7 @@ def test_delta_snapshots_write_only_touched_tiles(spark, tmp_path):
     assert total > touched2  # batch-0-only tiles live only in snapshot 0
     # current() == one-shot render
     full = {(r.z, r.tx, r.ty): (r.point_cnt, bytes(r.png))
-            for r in render_pyramid(docs, cfg).tiles.collect()}
+            for r in render_tiles(docs, cfg).collect()}
     got = {(r.z, r.tx, r.ty): (r.point_cnt, bytes(r.png))
            for r in store.current().collect()}
     assert set(got) == set(full)

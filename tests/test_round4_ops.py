@@ -328,7 +328,7 @@ def _mtf_census_simulator(rows, cfg, zooms):
     from collections import defaultdict
 
     from gpx2tiles_spark import projection as P
-    from gpx2tiles_spark.draw import crossing_tile
+    from gpx2tiles_spark.operators.events import crossing_tile_np
 
     by_doc = defaultdict(lambda: defaultdict(list))
     for r in rows:
@@ -384,7 +384,7 @@ def _mtf_census_simulator(rows, cfg, zooms):
                                 y1 = ppy - 256 * (cy - pty)
                                 x2 = px - 256 * (cx - tx)
                                 y2 = py - 256 * (cy - ty)
-                                if crossing_tile(x1, y1, x2, y2):
+                                if crossing_tile_np(x1, y1, x2, y2):
                                     access(cx, cy)   # slot 3
                 prev = (tx, ty, px, py)
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from conftest import SF_SMOKE, assert_same_multiset
+from conftest import SF_SMOKE, assert_same_multiset, render_tiles
 
 
 @pytest.mark.parametrize("name", ["incremental_store", "store_as_of"])
@@ -248,7 +248,6 @@ def test_hard_kill_mid_job_resume(spark, tmp_path):
 
     from gpx2tiles_spark.config import EngineConfig
     from gpx2tiles_spark.corpus import generate_documents
-    from gpx2tiles_spark.plans.pipeline import render_pyramid
     from gpx2tiles_spark.pngcodec import decode_png
     from gpx2tiles_spark.streaming.incremental import process_batches
 
@@ -320,7 +319,7 @@ for b in range(len(cuts) - 1):
            for r in store.current()
            .select("z", "tx", "ty", "point_cnt", "png").collect()}
     full = {(r.z, r.tx, r.ty): (r.point_cnt, bytes(r.png))
-            for r in render_pyramid(docs, cfg).tiles
+            for r in render_tiles(docs, cfg)
             .select("z", "tx", "ty", "point_cnt", "png").collect()}
     assert set(got) == set(full)
     assert (1, 0, 99) not in got, "orphan junk leaked into current()"
@@ -905,7 +904,6 @@ def test_streaming_hll_resumes_from_checkpoint(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from gpx2tiles_spark.operators import sketch
-    from gpx2tiles_spark.streaming.live import hll_registers_stream
 
     src = tmp_path / "in"
     src.mkdir()
@@ -923,7 +921,7 @@ def test_streaming_hll_resumes_from_checkpoint(spark, tmp_path):
         stream = (spark.readStream
                   .schema("g int, ck string")
                   .option("maxFilesPerTrigger", 1).parquet(str(src)))
-        return (hll_registers_stream(stream, ["g"])
+        return (sketch.hll_registers(stream, F.col("ck"), ["g"])
                 .writeStream.format("memory").queryName("shll_resume")
                 .option("checkpointLocation", ck_dir)
                 .outputMode("complete")

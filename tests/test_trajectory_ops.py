@@ -10,7 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, STATEFUL_ROWS
 
 
 def _tile(lon, lat, z):
@@ -391,20 +391,25 @@ def test_store_diff_equals_second_batch(spark, tmp_path):
     assert store.diff(last, last).count() == 0
 
 
-def test_store_rows_survive_reinvocation(spark):
-    """The sf1-sweep failure mode: a timing harness invokes a store-
-    backed builder TWICE; the first invocation's DataFrame must stay
-    collectable after the second rebuilds (versioned store dirs — a
-    stable-but-rebuilt path leaves attempt 1's plan pointing at deleted
-    files)."""
+@pytest.mark.parametrize("name", STATEFUL_ROWS)
+def test_store_rows_survive_reinvocation(spark, name):
+    """The sf1-sweep failure mode: a timing harness invokes a row
+    TWICE; the first invocation's DataFrame must stay collectable, with
+    the same rows, after the second rebuilds its state (versioned store
+    dirs, an oracle cache written once, memory sinks held by the
+    DataFrame — a rebuilt path would leave attempt 1's plan pointing
+    at deleted files).  The re-collect goes through a new plan
+    (``select("*")``): collecting the same DataFrame object again would
+    reuse its materialized shuffle outputs instead of re-reading its
+    inputs."""
     from gpx2tiles_spark.queries import _REGISTRY
 
-    first = _REGISTRY["store_diff"][0](spark, SF_SMOKE)
+    first = _REGISTRY[name][0](spark, SF_SMOKE)
     rows1 = sorted(map(tuple, first.collect()))
-    second = _REGISTRY["store_diff"][0](spark, SF_SMOKE)
+    second = _REGISTRY[name][0](spark, SF_SMOKE)
     rows2 = sorted(map(tuple, second.collect()))
-    first.unpersist(blocking=True)  # force recompute from files
-    assert sorted(map(tuple, first.collect())) == rows1 == rows2
+    again = sorted(map(tuple, first.select("*").collect()))
+    assert again == rows1 == rows2
 
 
 def test_od_travel_time_disc_median(spark):
@@ -435,7 +440,7 @@ def test_od_travel_time_disc_median(spark):
 
 def test_user_home_cell_mode_and_tie(spark):
     from gpx2tiles_spark.queries import _REGISTRY  # noqa: F401
-    from gpx2tiles_spark.operators.trajectory import with_tile
+    from gpx2tiles_spark.operators.tiles import with_tile
     from pyspark.sql import Window
 
     # user 1: 3 fixes in cell A, 2 in B -> home A; user 2: 2 and 2 ->
@@ -445,7 +450,7 @@ def test_user_home_cell_mode_and_tie(spark):
             (5, 1, 500, 13.4, 52.5),
             (6, 2, 100, 8.0, 48.0), (7, 2, 200, 8.0, 48.0),
             (8, 2, 300, -74.0, 40.7), (9, 2, 400, -74.0, 40.7)]
-    pts = with_tile(_mk_points(spark, rows), 7)
+    pts = with_tile(_mk_points(spark, rows), z=7)
     c = pts.groupBy("user_id", "tx", "ty").agg(F.count("*").alias("n"))
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc(), "tx", "ty")
     got = {r.user_id: (r.tx, r.ty, r.n) for r in
@@ -470,8 +475,8 @@ def test_tile_day_retention_counts(spark):
         pid += 1
         rows.append((pid, u, 86400 + 100 + u, 8.0, 48.0))
     df = _mk_points(spark, rows)
-    from gpx2tiles_spark.operators.trajectory import with_tile
-    posts = with_tile(df, 6).select(
+    from gpx2tiles_spark.operators.tiles import with_tile
+    posts = with_tile(df, z=6).select(
         "user_id", "tx", "ty",
         F.floor(F.col("ts").cast("timestamp").cast("long") / F.lit(86400))
         .cast("long").alias("day")).distinct()
