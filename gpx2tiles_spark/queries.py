@@ -2342,7 +2342,7 @@ def q_streaming_gpx_arrival(spark, sf_dir):
 
 # --- the memory-sink streaming rows: each replays the events table as
 # event-time-ordered parquet files (_stage_event_stream), streams them
-# with one file per trigger (_replay) and drains the query (_drain)
+# with one file per trigger and drains the query (_drain)
 
 def _event_seconds():
     # the NTZ column needs the timestamp hop before the double cast
@@ -2356,17 +2356,15 @@ def _median_slices(ev: DataFrame) -> list:
     return [es < mid, es >= mid]
 
 
-def _stage_event_stream(ev: DataFrame, slices: list) -> str:
+def _stage_event_stream(ev: DataFrame, slices: list, tmp: str) -> None:
     """Write ``ev.filter(s)`` for each predicate ``s`` of ``slices`` as
-    one parquet file under ``<tmp>/in`` and return the new temp dir.
-    The files get distinct mtimes, in slice order, so a
-    maxFilesPerTrigger=1 stream picks them up in that order."""
+    one parquet file under ``<tmp>/in``.  The files get distinct mtimes,
+    in slice order, so a maxFilesPerTrigger=1 stream picks them up in
+    that order."""
     import glob
     import shutil
-    import tempfile
     import time as _time
 
-    tmp = tempfile.mkdtemp(prefix="stream_evt_")
     src_dir = os.path.join(tmp, "in")
     os.makedirs(src_dir)
     for i, cond in enumerate(slices):
@@ -2375,13 +2373,6 @@ def _stage_event_stream(ev: DataFrame, slices: list) -> str:
         src = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
         shutil.move(src, os.path.join(src_dir, f"{i:04d}.parquet"))
         _time.sleep(1.1)
-    return tmp
-
-
-def _replay(spark, ev: DataFrame, tmp: str) -> DataFrame:
-    """The files staged in ``tmp`` as a stream, one file per trigger."""
-    return (spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1).parquet(os.path.join(tmp, "in")))
 
 
 def _finish(q) -> None:
@@ -2394,21 +2385,33 @@ def _finish(q) -> None:
                            "finish within 300 s")
 
 
-def _drain(stream: DataFrame, tmp: str, mode: str) -> DataFrame:
-    """Run ``stream`` to the end into a memory sink and return the
-    sink's rows.  Nothing outlives the call but that DataFrame, which
-    holds the sink itself: the sink's temp view is dropped and the
-    staged ``tmp`` dir is removed, input and checkpoint (kept there
-    because Spark deletes its own temporary checkpoint only after a
-    query that succeeded)."""
+def _drain(ev: DataFrame, slices: list, build, mode: str) -> DataFrame:
+    """Replay ``ev`` as one staged file per predicate of ``slices``, run
+    the stream ``build(replay)`` to the end into a memory sink and
+    return the sink's rows; ``replay()`` is a new stream over the staged
+    files, one file per trigger.  Nothing outlives the call but that
+    DataFrame, which holds the sink itself: whatever raises (a slice
+    write, building the stream, or the run), the sink's temp view is
+    dropped and the staged dir is removed, input and checkpoint (kept
+    there because Spark deletes its own temporary checkpoint only after
+    a query that succeeded)."""
     import shutil
+    import tempfile
 
-    spark = stream.sparkSession
+    spark = ev.sparkSession
+    tmp = tempfile.mkdtemp(prefix="stream_evt_")
     name = os.path.basename(tmp)
-    w = (stream.writeStream.format("memory").queryName(name)
-         .outputMode(mode).trigger(availableNow=True)
-         .option("checkpointLocation", os.path.join(tmp, "ckpt")))
+
+    def replay() -> DataFrame:
+        return (spark.readStream.schema(ev.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(os.path.join(tmp, "in")))
+
     try:
+        _stage_event_stream(ev, slices, tmp)
+        w = (build(replay).writeStream.format("memory").queryName(name)
+             .outputMode(mode).trigger(availableNow=True)
+             .option("checkpointLocation", os.path.join(tmp, "ckpt")))
         _finish(w.start())
         return spark.table(name)
     finally:
@@ -2435,10 +2438,10 @@ def q_streaming_sessionize(spark, sf_dir):
     from .streaming.live import sessionize_stateful
 
     ev = _t(spark, sf_dir, "events")
-    tmp = _stage_event_stream(ev, _median_slices(ev))
-    rows = _drain(sessionize_stateful(_replay(spark, ev, tmp),
-                                      gap_minutes=30.0),
-                  tmp, "update")
+    rows = _drain(ev, _median_slices(ev),
+                  lambda replay: sessionize_stateful(replay(),
+                                                     gap_minutes=30.0),
+                  "update")
     # last update per user (counters are monotone across batches)
     return rows.groupBy("user_id").agg(
         F.max("n_sessions").alias("n_sessions"),
@@ -2465,13 +2468,14 @@ def q_streaming_windowed_counts(spark, sf_dir):
     pytest-covered in append mode: test_round3_ops.)"""
     from .streaming.live import windowed_tile_counts
 
+    def build(replay):
+        pts = geo.derived_points(replay()).select(
+            F.col("ts").cast("timestamp").alias("ts"), "lat", "lon")
+        return windowed_tile_counts(pts, z=12, window="10 minutes",
+                                    watermark="30 minutes")
+
     ev = _t(spark, sf_dir, "events")
-    tmp = _stage_event_stream(ev, _median_slices(ev))
-    pts = geo.derived_points(_replay(spark, ev, tmp)).select(
-        F.col("ts").cast("timestamp").alias("ts"), "lat", "lon")
-    rows = _drain(windowed_tile_counts(pts, z=12, window="10 minutes",
-                                       watermark="30 minutes"),
-                  tmp, "complete")
+    rows = _drain(ev, _median_slices(ev), build, "complete")
     return rows.select(
         F.col("window_start").cast("timestamp").cast("double").cast("long")
         .alias("win_start_s"), "tx", "ty", "point_cnt")
@@ -2491,18 +2495,20 @@ def q_streaming_hll_census(spark, sf_dir):
     accuracy witness)."""
     from .operators import sketch
 
-    ev = _t(spark, sf_dir, "events")
-    tmp = _stage_event_stream(ev, _median_slices(ev))
-    pts = geo.derived_points(_replay(spark, ev, tmp)).withColumn(
-        "z", F.explode(F.sequence(F.lit(1), F.lit(8))))
     ck = F.concat_ws(
         "|", F.col("z").cast("string"),
         P.tilex_col(F.col("lon"), F.col("z")).cast("string"),
         P.tiley_col(F.col("lat"), F.col("z")).cast("string"))
-    keyed = pts.select("z", ck.alias("ck"))
-    est = sketch.hll_estimate(_drain(
-        sketch.hll_registers(keyed, F.col("ck"), ["z"]), tmp, "complete"),
-        ["z"])
+
+    def build(replay):
+        pts = geo.derived_points(replay()).withColumn(
+            "z", F.explode(F.sequence(F.lit(1), F.lit(8))))
+        keyed = pts.select("z", ck.alias("ck"))
+        return sketch.hll_registers(keyed, F.col("ck"), ["z"])
+
+    ev = _t(spark, sf_dir, "events")
+    est = sketch.hll_estimate(
+        _drain(ev, _median_slices(ev), build, "complete"), ["z"])
     exact = (geo.derived_points(ev)
              .withColumn("z", F.explode(F.sequence(F.lit(1), F.lit(8))))
              .select("z", ck.alias("ck"))
@@ -2526,10 +2532,10 @@ def q_streaming_dedup(spark, sf_dir):
     es = _event_seconds()
     q40, q60 = (ev.agg(F.percentile(es, F.lit(0.4)),
                        F.percentile(es, F.lit(0.6))).collect()[0])
-    tmp = _stage_event_stream(ev, [es < q60, es >= q40])
-    return _drain(dedup_events_stream(_replay(spark, ev, tmp),
-                                      watermark="1 hour"),
-                  tmp, "append").select("event_id")
+    return _drain(ev, [es < q60, es >= q40],
+                  lambda replay: dedup_events_stream(replay(),
+                                                     watermark="1 hour"),
+                  "append").select("event_id")
 
 
 @register("streaming_interval_join", """
@@ -2548,16 +2554,18 @@ def q_streaming_interval_join(spark, sf_dir):
     equal the batch interval join (the oracle)."""
     from .streaming.live import interval_join_stream
 
+    def build(replay):
+        points = replay().select("event_id", "user_id", "ts")
+        alerts = (replay().filter(F.col("event_id") % 20 == 0)
+                  .select(F.col("event_id").alias("alert_id"),
+                          F.col("user_id").alias("a_user_id"),
+                          F.col("ts").alias("a_ts")))
+        return interval_join_stream(points, alerts, lookback_minutes=10,
+                                    watermark="2 hours")
+
     ev = _t(spark, sf_dir, "events")
-    tmp = _stage_event_stream(ev, _median_slices(ev))
-    points = _replay(spark, ev, tmp).select("event_id", "user_id", "ts")
-    alerts = (_replay(spark, ev, tmp).filter(F.col("event_id") % 20 == 0)
-              .select(F.col("event_id").alias("alert_id"),
-                      F.col("user_id").alias("a_user_id"),
-                      F.col("ts").alias("a_ts")))
-    return _drain(interval_join_stream(points, alerts, lookback_minutes=10,
-                                       watermark="2 hours"),
-                  tmp, "append").select("event_id", "alert_id")
+    return _drain(ev, _median_slices(ev), build,
+                  "append").select("event_id", "alert_id")
 
 
 def _census_mtf_sql(zmin: int, zmax: int) -> str:
@@ -2977,10 +2985,10 @@ def q_streaming_cms(spark, sf_dir):
     batch oracle SQL verbatim (exact counts ride along from the batch
     table as the accuracy witness)."""
     ev = _t(spark, sf_dir, "events")
-    tmp = _stage_event_stream(ev, _median_slices(ev))
     key = F.col("user_id").cast("string")
-    sketch = _drain(pipeline.cms_registers(_replay(spark, ev, tmp), key),
-                    tmp, "complete")
+    sketch = _drain(ev, _median_slices(ev),
+                    lambda replay: pipeline.cms_registers(replay(), key),
+                    "complete")
     keys = ev.select(key.alias("key")).distinct()
     est = pipeline.cms_estimates(keys, sketch, "key")
     exact = ev.groupBy(key.alias("key")).agg(
@@ -3640,11 +3648,12 @@ def q_streaming_geofence(spark, sf_dir):
     from .streaming.live import geofence_stateful
 
     ev = _t(spark, sf_dir, "events")
-    tmp = _stage_event_stream(ev, _median_slices(ev))
-    pts = geo.derived_points(_replay(spark, ev, tmp))
     rects = geo.region_rects(_t(spark, sf_dir, "region")) \
         .select("region_id", "lat_min", "lat_max", "lon_min", "lon_max")
-    return _drain(geofence_stateful(pts, rects), tmp, "update")
+    return _drain(ev, _median_slices(ev),
+                  lambda replay: geofence_stateful(
+                      geo.derived_points(replay()), rects),
+                  "update")
 
 
 _DIFF_SQL = f"""
