@@ -3,12 +3,10 @@
 Re-expresses the reference's imperative draw loop, draw_track_points
 (gpx2tiles.c:602-712 of the reference), called once per track segment
 and once for the waypoint list, as one draw relation
-(:func:`draw_relation` — every drawn point per zoom, paired with its
-chain predecessor) and a union of four event branches over it, all
-built with native Column expressions (a window for pairing + one hash
-shuffle into tile groups; the window's exchange runs for the point and
-cross branches alike, as Spark does not reuse it across their column
-sets):
+(:func:`draw_relation` — every drawn point per zoom, with the chain
+predecessor the parse paired it with) and a union of four event
+branches over it, all built with native Column expressions and no
+shuffle of their own (the render's one shuffle is the tile shuffle):
 
   point   — ONE pass emitting each point's own-tile events: the stamp
             (ET_STAMP = 0), the PDOP / -d1 shadow ellipse (ET_PDOP = 2)
@@ -33,7 +31,7 @@ plain WHERE clauses or when() gates over the draw relation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import projection as P
@@ -136,16 +134,6 @@ def point_color_col(cfg: EngineConfig) -> Column:
     return F.element_at(color_map, idx + 1)
 
 
-def paired_points(points: DataFrame) -> DataFrame:
-    """W1: previous point per (doc, segment) — the draw loop's ppt/ppix.
-    One window shuffle, before the zoom explode (18× cheaper than after)."""
-    w = Window.partitionBy("doc_id", "seg_order").orderBy("pt_idx")
-    return (
-        points.withColumn("prev_lat", F.lag("lat").over(w))
-        .withColumn("prev_lon", F.lag("lon").over(w))
-    )
-
-
 def with_pair_tiles(paired: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Per-zoom tile coords (tx, ty, p_tx, p_ty) for a paired
     (lat, lon, prev_lat, prev_lon) relation.
@@ -205,13 +193,12 @@ def circle_rect_bounds(df: DataFrame, r: int) -> DataFrame:
 def draw_relation(points: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Every point the draw loop visits, per zoom, paired with the
     previous point of its chain: track points at every zoom, waypoints
-    only at z > z_no_wpts (F5).  Waypoints carry seg_order 2^20, so the
-    pair window chains each waypoint to the previous one — make_tiles'
-    one draw_track_points call over the waypoint list
-    (gpx2tiles.c:729, 734).  Shared by build_events and the census
-    access relation (operators/dump.py)."""
-    return with_pair_tiles(paired_points(points), cfg).filter(
-        drawn_point_col(cfg))
+    only at z > z_no_wpts (F5).  The parse pairs each point with its
+    predecessor (prev_lat, prev_lon), and chains each waypoint to the
+    previous one — make_tiles' one draw_track_points call over the
+    waypoint list (gpx2tiles.c:729, 734).  Shared by build_events and
+    the census access relation (operators/dump.py)."""
+    return with_pair_tiles(points, cfg).filter(drawn_point_col(cfg))
 
 
 def build_events(points: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -312,14 +299,14 @@ def _point_events(draw: DataFrame, cfg: EngineConfig) -> DataFrame:
               color in the fold (the reference passes the stamp color).
 
     A union of one relation per event kind re-executed the zoom
-    explode, the tile trig and the shared-window read once per branch
-    (exchange reuse notwithstanding) — measured 1.6× on the
-    full-pyramid event build.  when()/array()/concat()/explode() all
-    stay inside whole-stage codegen, and when() evaluates a branch's
-    pixel projection only on rows whose gate passes — unlike the
-    transform/filter HOF variant, which is interpreted and was measured
-    slower.  A standing test (tests/test_round2_ops.py) compares this
-    pass with the per-kind union."""
+    explode, the tile trig and the points read once per branch —
+    measured 1.6× on the full-pyramid event build.
+    when()/array()/concat()/explode() all stay inside whole-stage
+    codegen, and when() evaluates a branch's pixel projection only on
+    rows whose gate passes — unlike the transform/filter HOF variant,
+    which is interpreted and was measured slower.  A standing test
+    (tests/test_round2_ops.py) compares this pass with the per-kind
+    union."""
     color, can_line, same_tile = _trk_gates(cfg)
     base = with_pixel(draw).withColumn("color", color)
     px, py = F.col("px"), F.col("py")

@@ -10,7 +10,11 @@ whose parallelism equals the input split count.
 
 Output schema = FIXTURES.md §2 (one row per track point / waypoint,
 NULL-free numeric columns + explicit `flags` bitmask, since the reference
-reads/writes flags explicitly — SURVEY.md §1.1).
+reads/writes flags explicitly — SURVEY.md §1.1).  The one exception is
+the chain predecessor ``prev_lat, prev_lon`` (the draw loop's ppt,
+gpx2tiles.c:607, 704-710): NULL at the first point of each chain, where
+a chain is one track segment or the document's waypoint list.  The
+parse emits every chain in order, so pairing here needs no window.
 """
 
 from __future__ import annotations
@@ -44,6 +48,8 @@ POINTS_SCHEMA = T.StructType([
     T.StructField("pdop", T.FloatType(), False),
     T.StructField("flags", T.IntegerType(), False),
     T.StructField("file_time", T.StringType(), False),
+    T.StructField("prev_lat", T.DoubleType(), True),
+    T.StructField("prev_lon", T.DoubleType(), True),
 ])
 
 # waypoints draw after all of a file's segments (gpx2tiles.c:733-735);
@@ -57,18 +63,18 @@ def _doc_rows(doc_id: str, spans, local_time: bool = False) -> list[tuple]:
     if not gpx_texts:
         return []
     file_time, segments, wpts, _cnt = parse_gpx_document(gpx_texts, local_time)
+    chains = [(seg_order, seg.src, "trkpt", seg.points)
+              for seg_order, seg in enumerate(segments)]
+    chains.append((WPT_SEG_ORDER, SRC_WAYPOINT, "wpt", wpts))
     rows = []
-    for seg_order, seg in enumerate(segments):
-        for pt_idx, p in enumerate(seg.points):
-            rows.append((doc_id, seg_order, seg.src, pt_idx, "trkpt",
+    for seg_order, src, kind, pts in chains:
+        prev_lat = prev_lon = None  # each chain starts unpaired
+        for pt_idx, p in enumerate(pts):
+            rows.append((doc_id, seg_order, src, pt_idx, kind,
                          p.lat, p.lon, p.time, p.speed, p.sat, p.ele,
                          p.geoidheight, p.course, p.hdop, p.vdop, p.pdop,
-                         p.flags, file_time))
-    for pt_idx, p in enumerate(wpts):
-        rows.append((doc_id, WPT_SEG_ORDER, SRC_WAYPOINT, pt_idx, "wpt",
-                     p.lat, p.lon, p.time, p.speed, p.sat, p.ele,
-                     p.geoidheight, p.course, p.hdop, p.vdop, p.pdop,
-                     p.flags, file_time))
+                         p.flags, file_time, prev_lat, prev_lon))
+            prev_lat, prev_lon = p.lat, p.lon
     return rows
 
 
@@ -87,6 +93,7 @@ def _make_parse_batches(local_time: bool = False):
                     "speed": np.float64, "ele": np.float32,
                     "geoidheight": np.float32, "course": np.float32,
                     "hdop": np.float32, "vdop": np.float32, "pdop": np.float32,
+                    "prev_lat": np.float64, "prev_lon": np.float64,
                 })
             yield out
     return _parse_batches

@@ -1,18 +1,17 @@
 """End-to-end tiling pipeline: documents → points → events → tile files.
 
 Physical shape (SURVEY.md §3.3 mirror):
-  stage 1  parse      map-only (mapInPandas, zero shuffle)
-  stage 2  pairing    window shuffle on (doc_id, seg_order)
-  stage 3  explode    zoom × tile/pixel projection (narrow)
-  stage 4  rasterize  hash shuffle into (z, tx, ty) groups → Arrow fold
-  stage 5  sink       PNG writes in the fold's Python worker
+  stage 1  parse      map-only (mapInPandas, zero shuffle); each point
+                      carries its chain predecessor (prev_lat, prev_lon)
+  stage 2  explode    zoom × tile/pixel projection (narrow)
+  stage 3  rasterize  hash shuffle into (z, tx, ty) groups → Arrow fold
+  stage 4  sink       PNG writes in the fold's Python worker
 
-The pairing shuffle runs once per event branch that reads the pair
-window: the point pass and the cross-tile lines read different columns
-of it, so Spark plans two exchanges and reuses neither (docs/PLANS.md,
-prepared_events).  The parse runs once, from the persisted points (the
-reference re-parses nothing but re-renders per zoom;
-gpx2tiles.c:1156-1208).
+The tile shuffle is the render's one exchange (docs/PLANS.md,
+prepared_events): the parse emits each chain in order and pairs it
+there, so no window re-partitions the points to find predecessors.
+The parse runs once, from the persisted points (the reference
+re-parses nothing but re-renders per zoom; gpx2tiles.c:1156-1208).
 
 For the tiles as a DataFrame (z, tx, ty, point_cnt, n_events, n_docs,
 png), build ``rasterize(build_events(points, cfg), cfg)`` over points

@@ -62,20 +62,16 @@ def oracle_sql() -> dict[str, str]:
 # tasks and the repartition is skipped entirely.
 _SPREAD_KEYS = {"events": "user_id", "documents": "doc_id",
                 "embeddings": "vec_id"}
-_SPREAD_CACHE: dict[tuple[str, str], bool] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str,
        spread: bool = True) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     key = _SPREAD_KEYS.get(name)
-    if key is None or not spread:
-        return df
-    ck = (sf_dir, name)
-    if ck not in _SPREAD_CACHE:
-        _SPREAD_CACHE[ck] = (df.rdd.getNumPartitions()
-                             < spark.sparkContext.defaultParallelism)
-    if not _SPREAD_CACHE[ck]:
+    # decided from this scan's partition count on every call: a table
+    # rewritten at the same path must not inherit the old decision
+    if (key is None or not spread or df.rdd.getNumPartitions()
+            >= spark.sparkContext.defaultParallelism):
         return df
     # spread to defaultParallelism, NOT spark.sql.shuffle.partitions:
     # the goal is one map task per core; 4×-core reduce partitions only
@@ -1642,7 +1638,7 @@ _ORACLE_CACHE = os.path.join(
 # only by the z >= 17 PDOP ellipses and the -d1 shadows), so the render
 # rows build their events from this cache
 _PTS_COLS = ["doc_id", "seg_order", "pt_idx", "kind", "src", "lat", "lon",
-             "speed", "flags"]
+             "speed", "flags", "prev_lat", "prev_lon"]
 
 
 def _relink(link: str, target: str) -> None:
@@ -1781,11 +1777,14 @@ _GOLDEN_DIR = os.path.join(
 
 def parse_points_comparable(points: DataFrame) -> DataFrame:
     """Hash-stable projection of the FULL parse output (every column of
-    POINTS_SCHEMA): floats in micro/milli integer units so the driver's
-    value hash is engine-independent.  Shared by q_parse_points and the
-    committed golden parquet (tools/make_golden.py) — the golden is a
-    snapshot of THIS projection, so any parse regression (S1/S2/S3,
-    R1-R4, K6, K10, F7) flips the oracle red."""
+    POINTS_SCHEMA but the chain pairs prev_lat/prev_lon, which repeat
+    the chain's previous lat/lon and are checked against a lag window in
+    tests/test_round2_ops.py): floats in micro/milli integer units so
+    the driver's value hash is engine-independent.  Shared by
+    q_parse_points and the committed golden parquet
+    (tools/make_golden.py) — the golden is a snapshot of THIS
+    projection, so any parse regression (S1/S2/S3, R1-R4, K6, K10, F7)
+    flips the oracle red."""
     def milli(c):  # float32 → exact double → milli-units
         return F.floor(F.col(c).cast("double") * 1000.0).cast("long") \
                 .alias(f"{c}_milli")

@@ -44,6 +44,27 @@ def test_tile_counts_single_shuffle_with_partial_agg(spark, events):
     assert "partial_count" in plan or "partial" in plan.lower()
 
 
+def test_scan_spread_follows_a_table_rewritten_in_place(spark, tmp_path):
+    """The scan spread is decided from each scan's own partition count:
+    rewriting a table at the same path from one file to
+    defaultParallelism files turns the spread off, and back on."""
+    from gpx2tiles_spark.queries import _t
+
+    n = spark.sparkContext.defaultParallelism
+    src = spark.range(4000).select(F.col("id").alias("user_id"))
+
+    def spread_after_writing(files: int) -> bool:
+        src.repartition(files).write.mode("overwrite").parquet(
+            str(tmp_path / "events.parquet"))
+        plan = _t(spark, str(tmp_path), "events")._jdf.queryExecution() \
+            .analyzed().toString()
+        return "RepartitionByExpression" in plan
+
+    assert spread_after_writing(1)
+    assert not spread_after_writing(n)
+    assert spread_after_writing(1)
+
+
 def test_events_scan_prunes_columns(spark):
     """The parse stage's parquet scan must read only doc_id + spans."""
     from gpx2tiles_spark.corpus import generate_documents

@@ -141,7 +141,7 @@ def test_cli_render_job_count(spark, tmp_path):
     n_jobs, rc = _jobs_in(spark, "cli-render", lambda: main(
         ["-z", "3", "-Z", "10", "-C", str(out), *paths], spark=spark))
     assert rc == 0
-    assert n_jobs == 6
+    assert n_jobs == 4
 
 
 def _run_arrow_nodes(spark, fn):

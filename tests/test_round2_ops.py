@@ -117,18 +117,29 @@ def test_pdop_ellipse_rendered(spark, pdop_doc):
             ((expect >> 16) & 0xFF, (expect >> 8) & 0xFF, expect & 0xFF)
 
 
+def _lag_pairs(points):
+    """The reference pairing: the previous point per (doc, segment) by a
+    lag window — the draw loop's ppt/ppix, derived relationally."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("doc_id", "seg_order").orderBy("pt_idx")
+    return (points.drop("prev_lat", "prev_lon")
+            .withColumn("prev_lat", F.lag("lat").over(w))
+            .withColumn("prev_lon", F.lag("lon").over(w)))
+
+
 def _per_kind_union_events(points, cfg):
     """The reference for build_events: one relation per event kind,
     unioned — track stamps, same-tile lines, PDOP / -d1 shadow ellipses
-    and cross-tile lines off a track-only pair relation; waypoint
-    stamps, circles and PDOP ellipses off a separate waypoint relation;
-    the -d4 text over both."""
+    and cross-tile lines off a track-only relation paired by the lag
+    window (not the parse's pairs); waypoint stamps, circles and PDOP
+    ellipses off a separate waypoint relation; the -d4 text over both."""
     from gpx2tiles_spark.config import (HIGHLIGHT_COLOR, PDOP_MIN_Z,
                                         PDOP_THRESHOLD, SHADOW_COLOR,
                                         TILE_H, TILE_W)
     from gpx2tiles_spark.operators.events import (
         _KEY, _speed_text_events, _wpt_circles, crossing_tile_col,
-        paired_points, point_color_col, with_pair_tiles)
+        point_color_col, with_pair_tiles)
     from gpx2tiles_spark.operators.tiles import (with_pixel, with_tile_pixel,
                                                  with_zooms)
 
@@ -163,7 +174,7 @@ def _per_kind_union_events(points, cfg):
     wpts_possible = zmax > cfg.z_no_wpts
     pdop_possible = zmax >= PDOP_MIN_Z or cfg.diag_shadows
     trk = with_pair_tiles(
-        paired_points(points.filter(F.col("kind") == "trkpt")), cfg)
+        _lag_pairs(points.filter(F.col("kind") == "trkpt")), cfg)
     color = (F.lit(-1) if cfg.heatmap else point_color_col(cfg)).alias("color")
     can_line = (
         F.lit(not cfg.heatmap)
@@ -249,6 +260,27 @@ def wpt_pdop_points(spark):
         generate_documents(spark, 6, partitions=2).unionByName(doc)).persist()
     yield points
     points.unpersist()
+
+
+def test_parse_pairs_equal_lag_window(wpt_pdop_points):
+    """The parse's chain predecessor (prev_lat, prev_lon) is the lag
+    window's over (doc_id, seg_order) ordered by pt_idx — track segments
+    and the waypoint list alike — and is NULL (not NaN) exactly at the
+    first point of each chain."""
+    points = wpt_pdop_points
+    pairs = ["doc_id", "seg_order", "pt_idx", "prev_lat", "prev_lon"]
+    assert points.filter(F.col("kind") == "wpt").select(
+        "doc_id").distinct().count() > 1
+    assert points.filter(F.col("seg_order") == 1).count() > 0
+    assert_same_multiset(points.select(*pairs),
+                         _lag_pairs(points).select(*pairs))
+    first = points.filter(F.col("prev_lat").isNull()
+                          | F.col("prev_lon").isNull())
+    assert first.count() == first.filter(
+        F.col("prev_lat").isNull() & F.col("prev_lon").isNull()).count()
+    assert first.count() == points.select(
+        "doc_id", "seg_order").distinct().count()
+    assert first.filter(F.col("pt_idx") != 0).count() == 0
 
 
 @pytest.mark.parametrize("argv", [
